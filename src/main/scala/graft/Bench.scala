@@ -102,25 +102,7 @@ object Bench {
     // of the same query forever (the round-13 x_containment entry did
     // exactly that and is removed now that its baseline landed).
     final case class Intentional(reason: String, prevLo: Double, prevHi: Double)
-    val intentional = Map(
-      // Round 15 pinned-k centroid law (IvfCentroids=4, NumProbes 2→3,
-      // PqRerank 128→256): every catalog-served ADC probe scans 3 of 4
-      // cells and re-ranks a 2× shortlist BY DESIGN — the price of
-      // holding the measured ≥0.7 recall floors under the
-      // corpus-independent model. Ranges are scoped to the round-14
-      // committed baselines so these entries die once the new baseline
-      // lands.
-      "x_sim_pq_serve" -> Intentional(
-        "round-15 pinned-k centroid law: NumProbes 2->3, PqRerank 128->256 serve more candidates per query by design", 0.55, 1.05),
-      "x_ann_compact" -> Intentional(
-        "round-15 pinned-k centroid law: the compacted-index ADC probe serves 3-of-4 cells and a 2x shortlist", 0.60, 1.05),
-      "x_ann_delete" -> Intentional(
-        "round-15 pinned-k centroid law: the survivor ADC probe serves 3-of-4 cells and a 2x shortlist", 0.55, 1.00),
-      // Round 15 added the knngraph rung (graph build + seeded beam
-      // search) to the rank-metrics report — a seventh graded index
-      // family, not a plan drift of the existing six.
-      "x_rank_metrics" -> Intentional(
-        "round 15 added the knngraph rung (LSH-collision graph build + seeded beam search) to the report", 0.30, 0.50))
+    val intentional = Map.empty[String, Intentional]
     def classify(rs: Seq[(String, Double, Double, Double)])
         : (Double, Seq[(String, Double, Double, Double)], Seq[(String, Double, Double, Double)]) = {
       val medianRatio =

@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Cdc {
 
-  private val runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   private[graft] def writePointer(root: java.nio.file.Path, version: Long): Unit = {
     // write-then-move so the pointer flip is atomic for readers
     val tmp = root.resolve("_current.tmp")
@@ -64,8 +62,7 @@ object Cdc {
     * partitions holding the batch's keys — a micro-batch touches few.
     */
   def streamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_upsert_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_upsert_")
     val snapRoot = work.resolve("snap")
     java.nio.file.Files.createDirectories(snapRoot)
 
@@ -104,10 +101,27 @@ object Cdc {
     val out = spark.read.parquet(snapRoot.resolve(s"v$v").toString)
       .orderBy("date")
     // checkpoint is dead now; the snapshot chain must outlive the call
-    // (the returned DataFrame reads it lazily) → exit-time cleanup
+    // (the returned DataFrame reads it lazily) → it goes with the work dir
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
-    graft.streaming.Drain.cleanupAtExit(work)
     out
+  }
+
+  /** The two-version rates chain [[timeTravel]] and [[changeFeed]] read:
+    * v0 = the rates load, v1 = the post-MERGE state (q_merge's change
+    * set), pointer on v1. Built once per process; returns its root.
+    */
+  private def versionedChain(spark: SparkSession, sfDir: String): String = {
+    val root = Sink.scratchPath(sfDir, "rates_versioned")
+    val rootP = java.nio.file.Paths.get(root)
+    Scratch.once(root) {
+      RatesSource.rates(spark, sfDir)
+        .write.parquet(rootP.resolve("v0").toString)
+      writePointer(rootP, 0L)
+      graft.queries.EtlQueries.qMerge(spark, sfDir)
+        .select("date", "currencies", "rate")
+        .write.parquet(rootP.resolve("v1").toString)
+      writePointer(rootP, 1L) // commit: v1 becomes the current version
+    }
   }
 
   /** X-TIME-TRAVEL: version-pinned reads over the snapshot chain — the
@@ -120,21 +134,7 @@ object Cdc {
     * no locks at any scale — it's a plain parquet scan of a frozen dir.
     */
   def timeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = Sink.scratchPath(sfDir, "rates_versioned")
-    val marker = java.nio.file.Paths.get(root, "_GRAFT_OK_v1")
-    val rootP = java.nio.file.Paths.get(root)
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(root)
-      java.nio.file.Files.createDirectories(rootP)
-      RatesSource.rates(spark, sfDir)
-        .write.parquet(rootP.resolve("v0").toString)
-      writePointer(rootP, 0L)
-      graft.queries.EtlQueries.qMerge(spark, sfDir)
-        .select("date", "currencies", "rate")
-        .write.parquet(rootP.resolve("v1").toString)
-      writePointer(rootP, 1L) // commit: v1 becomes the current version
-      java.nio.file.Files.createFile(marker)
-    }
+    val rootP = java.nio.file.Paths.get(versionedChain(spark, sfDir))
     require(currentVersion(rootP) == 1L, "pointer must be at the latest version")
     def at(v: Long): DataFrame =
       spark.read.parquet(rootP.resolve(s"v$v").toString)
@@ -164,12 +164,7 @@ object Cdc {
     * deletes — the oracle re-derives both states and the same diff.
     */
   def changeFeed(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(Sink.scratchPath(sfDir, "rates_versioned"))
-    // gate on the commit marker directly (like every other staged fixture);
-    // only an uncommitted chain pays timeTravel's two-version staging job —
-    // running the full aggregate on every call just to stage was waste
-    if (!java.nio.file.Files.exists(root.resolve("_GRAFT_OK_v1")))
-      timeTravel(spark, sfDir).head() // stages v0/v1 and writes the marker
+    val root = java.nio.file.Paths.get(versionedChain(spark, sfDir))
     val v0 = readVersion(spark, root, 0L).select(col("date"), col("rate").as("old_rate"))
     val v1 = readVersion(spark, root, 1L).select(col("date"), col("rate").as("new_rate"))
     v0.join(v1, Seq("date"), "full_outer")
@@ -260,17 +255,14 @@ object Cdc {
     * job that bounds table storage to keepLast copies.
     */
   def vacuum(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = java.nio.file.Paths.get(Sink.scratchPath(sfDir, "rates_vacuum"))
-    val marker = root.resolve("_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(root.toString)
-      java.nio.file.Files.createDirectories(root)
+    val rootS = Sink.scratchPath(sfDir, "rates_vacuum")
+    val root = java.nio.file.Paths.get(rootS)
+    Scratch.once(rootS) {
       (0 until VacuumVersions).foreach { k =>
         vacuumVersionK(spark, sfDir, k)
           .write.parquet(root.resolve(s"v$k").toString)
         writePointer(root, k.toLong)
       }
-      java.nio.file.Files.createFile(marker)
     }
     expireSnapshots(root, VacuumKeep) // idempotent across calls
     val cur = currentVersion(root)
@@ -329,10 +321,7 @@ object Cdc {
   def delete(spark: SparkSession, sfDir: String): DataFrame = {
     val src = graft.queries.ScaleQueries.zorderLayout(spark, sfDir)
     val dst = Sink.scratchPath(sfDir, "events_zorder_deleted")
-    val marker = java.nio.file.Paths.get(dst, "_GRAFT_OK_v3")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(dst)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
+    Scratch.once(dst) {
       val all = spark.read.parquet(src)
       val victim = all.agg(min("user_id")).head().getLong(0) + 3
       // file inventory: which files contain the victim? (at 100 TB this
@@ -358,7 +347,6 @@ object Cdc {
             "directory listing — URI/path normalization mismatch; a silent " +
             "no-op here would leave the victim's rows in place")
       rewriteAffected(spark, files, affected, victim, dst)
-      java.nio.file.Files.createFile(marker)
     }
     val remaining = spark.read.option("recursiveFileLookup", "true").parquet(dst)
     remaining

@@ -14,8 +14,8 @@ import graft.Tables
   * storage API accepts CSV uploads the same way it accepts JSON; the
   * connector's JSONL spool covers the JSON half).
   *
-  * The fixture's `orders` table is staged to CSV ONCE per (sfDir), marker-
-  * gated in scratch like the streaming fixtures, plus one deliberately
+  * The fixture's `orders` table is staged to CSV ONCE per (sfDir,
+  * process) in scratch like the streaming fixtures, plus one deliberately
   * malformed file ([[CorruptLines]] short rows behind a header). The load
   * then demonstrates the production contract:
   *
@@ -46,16 +46,13 @@ object CsvIngest {
   val CorruptLines = 4
   private val TsFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
-  /** One-time, marker-gated CSV staging of `orders` (+ the corrupt file).
+  /** Build-once CSV staging of `orders` (+ the corrupt file).
     * Deterministic: content is the fixture table; file COUNT varies with
     * write parallelism but every consumer aggregates the whole directory.
-    * (dir is versioned: fixture content changed in round 8, and the marker
-    * gate would otherwise keep serving a stale pre-change directory.)
     */
   def csvPath(spark: SparkSession, sfDir: String): String = {
-    val dir = Sink.scratchPath(sfDir, "orders_csv_v2")
-    val marker = Paths.get(dir, "_STAGED")
-    if (!Files.exists(marker)) {
+    val dir = Sink.scratchPath(sfDir, "orders_csv")
+    Scratch.once(dir) {
       val orders = Tables.orders(spark, sfDir)
       orders.repartition(4)
         .write.mode("overwrite")
@@ -67,9 +64,7 @@ object CsvIngest {
         "987654321,partial-row-bad-tail"
       Files.writeString(Paths.get(dir, "zz_corrupt.csv"),
         s"$header\n${bad.mkString("\n")}\n")
-      Files.createFile(marker)
     }
-    dir
   }
 
   /** The checked load: per-status counts + exact-decimal revenue + the

@@ -76,19 +76,16 @@ object FbInsightsSource {
 
   /** Day-partitioned JSONL spool of the insights payload — the storage the
     * DSv2 connector ([[graft.sources.FbInsightsDataSource]]) reads.
-    * Written once per (sfDir, version), marker-gated like fb_stat.
+    * Written once per (sfDir, process), like fb_stat.
     */
   def jsonlPath(spark: SparkSession, sfDir: String): String = {
     val path = Sink.scratchPath(sfDir, "fb_jsonl")
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
+    Scratch.once(path) {
       built(spark, sfDir)
         .select(to_json(struct(col("*"))).as("value"), col("date_start").as("date"))
         .repartition(col("date"))
         .write.mode("overwrite").partitionBy("date").text(path)
-      java.nio.file.Files.createFile(marker)
     }
-    path
   }
 
   /** Raw insights scan: serialize each built row to a JSON document and

@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -14,7 +12,7 @@ import graft.Tables
   * files" must read it with the same contract as parquet: schema from the
   * file footer, predicate pushdown reaching the scan, lossless types.
   *
-  * The fixture's `orders` table is staged to ORC once (marker-gated in
+  * The fixture's `orders` table is staged to ORC once per process (in
   * scratch, like the CSV staging); the checked load filters on
   * `o_totalprice` — a pushdown-able predicate the spec asserts lands in
   * the ORC scan's `PushedFilters` — and aggregates per status. The oracle
@@ -30,13 +28,10 @@ object OrcIngest {
 
   def orcPath(spark: SparkSession, sfDir: String): String = {
     val dir = Sink.scratchPath(sfDir, "orders_orc")
-    val marker = Paths.get(dir, "_STAGED")
-    if (!Files.exists(marker)) {
+    Scratch.once(dir) {
       Tables.orders(spark, sfDir).repartition(4)
         .write.mode("overwrite").orc(dir)
-      Files.createFile(marker)
     }
-    dir
   }
 
   def qOrc(spark: SparkSession, sfDir: String): DataFrame =

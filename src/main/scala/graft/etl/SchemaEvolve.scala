@@ -1,7 +1,5 @@
 package graft.etl
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -40,10 +38,7 @@ object SchemaEvolve {
 
   def evolvePath(spark: SparkSession, sfDir: String): String = {
     val dir = Sink.scratchPath(sfDir, "orders_evolve")
-    val marker = Paths.get(dir, "_STAGED")
-    if (!Files.exists(marker)) {
-      Sink.dropUncommitted(dir)
-      Files.createDirectories(Paths.get(dir))
+    Scratch.once(dir) {
       val orders = Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
       orders.filter(col("o_orderkey") % 2 === 0)
@@ -51,9 +46,7 @@ object SchemaEvolve {
       orders.filter(col("o_orderkey") % 2 === 1)
         .withColumn("channel", channelExpr(col("o_orderkey")))
         .write.parquet(s"$dir/epoch2")
-      Files.createFile(marker)
     }
-    dir
   }
 
   /** The checked read: per-channel profile over the merged two-epoch

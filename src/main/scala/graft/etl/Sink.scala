@@ -26,12 +26,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sink {
 
-  /** K-DS: idempotent namespace (warehouse directory) creation. */
-  def ensureNamespace(root: String): Unit = {
-    Files.createDirectories(Paths.get(root))
-    ()
-  }
-
   /** K-TBL + K-INS: append `df` into a day-partitioned, clustered parquet
     * table at `path`, creating it with that layout on first write.
     * Returns the table path.
@@ -93,15 +87,12 @@ object Sink {
     path
   }
 
-  /** Remove a table directory that has no commit marker — the rerun-after-
-    * crash path: an uncommitted half-load must not be appended onto.
-    * Transient failures are retried once (another engine process sharing
-    * the scratch warehouse can recreate entries between the walk and the
-    * deepest-first delete), but the POST-CONDITION is verified: if the
+  /** Remove a directory that holds an unfinished write — a failed
+    * [[Scratch.once]] build, or the temp side of a rewrite-and-swap —
+    * so nothing is ever appended onto a half-load. A transient failure
+    * is retried once, but the POST-CONDITION is verified: if the
     * directory still exists after both sweeps, this THROWS rather than
-    * letting the caller stamp a commit marker onto a dirty directory —
-    * silent coexistence with a concurrent writer's files would poison
-    * every later marker-gated read.
+    * let a later build write into a dirty directory.
     */
   def dropUncommitted(path: String): Unit = {
     val root = Paths.get(path)
@@ -126,12 +117,13 @@ object Sink {
     }
   }
 
-  /** Stable per-(sfDir, table) scratch location under java.io.tmpdir, so
-    * repeated reads (Q-PRUNE) can reuse a written table within a JVM run.
+  /** Per-(sfDir, table) scratch location under this process's
+    * [[Scratch.root]], so repeated reads (Q-PRUNE) can reuse a written
+    * table within a JVM run — and never across runs.
     */
   def scratchPath(sfDir: String, table: String): String = {
     val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${System.getProperty("java.io.tmpdir")}/graft_warehouse/$key/$table"
+    Scratch.root.resolve(key).resolve(table).toString
   }
 
   /** Target output-file size for table-maintenance rewrites (compaction,

@@ -270,8 +270,6 @@ object Attribution {
     settle(withPpm, "rrn")
   }
 
-  private val runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** X-STREAM-ATTRIB: last-touch attribution as a STATEFUL STREAM — the
     * continuous form of [[lastTouch]], and the operator a live ads
     * pipeline actually runs (attribute conversions as they arrive, don't
@@ -296,9 +294,8 @@ object Attribution {
     */
   def streamingAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_attrib_" + runs.incrementAndGet() + "_")
-    val srcDir = Events.chunkedEventStaging(spark, sfDir, work)
+    val work = graft.etl.Scratch.workDir("stream_attrib_")
+    val srcDir = Events.chunkedEventStaging(spark, sfDir)
     val rawSchema = Tables.eventsRaw(spark, sfDir).schema
     val ds = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)

@@ -13,32 +13,25 @@ import graft.Tables
   */
 object StreamingOps {
 
-  private val runs = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Stage `events.parquet` into a landing zone, `copies` times (each
     * copy a distinct file — the at-least-once delivery the reference's
     * append-only sink produces on retry, main.py:81-91). The staging is
-    * deterministic per (sfDir, tag), so it lives in marker-gated scratch:
+    * deterministic per (sfDir, tag), so it is built once per process:
     * repeated runs (bench passes) reuse the files instead of re-copying
     * the fixture every time. The per-run `work` dir holds only the
     * checkpoint and sink — those MUST stay fresh (a reused checkpoint
     * would drain nothing on later runs). Returns (workDir, srcDir).
     */
   private def stage(sfDir: String, tag: String, copies: Int): (java.nio.file.Path, java.nio.file.Path) = {
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_" + tag + "_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir(tag + "_")
     val srcDirS = graft.etl.Sink.scratchPath(sfDir, s"events_stream_$tag")
     val srcDir = java.nio.file.Paths.get(srcDirS)
-    val marker = srcDir.resolve("_GRAFT_OK_v2")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(srcDirS)
-      java.nio.file.Files.createDirectories(srcDir)
+    graft.etl.Scratch.once(srcDirS) {
       (1 to copies).foreach { i =>
         java.nio.file.Files.copy(
           java.nio.file.Paths.get(sfDir, "events.parquet"),
           srcDir.resolve(s"events_$i.parquet"))
       }
-      java.nio.file.Files.createFile(marker)
     }
     (work, srcDir)
   }
@@ -173,8 +166,7 @@ object StreamingOps {
   def streamingLateMetrics(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = Tables.eventsRaw(spark, sfDir)
     val rawSchema = raw.schema
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_late_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_late_")
     val bounds = raw.selectExpr(Tables.tsMicrosExpr(rawSchema) + " AS us")
       .agg(min("us").as("mn"), max("us").as("mx")).head()
     val (minUs, maxUs) = (bounds.getLong(0), bounds.getLong(1))
@@ -182,43 +174,17 @@ object StreamingOps {
     val lateCutUs = (minUs / dayUs + 1) * dayUs // end of the first day (UTC)
     val srcDirS = graft.etl.Sink.scratchPath(sfDir, "events_stream_late")
     val srcDir = java.nio.file.Paths.get(srcDirS)
-    val marker = srcDir.resolve("_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(srcDirS)
-      java.nio.file.Files.createDirectories(srcDir)
-      def pin(p: java.nio.file.Path, mtimeSec: Long): Unit =
-        java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(mtimeSec * 1000))
-      def stageOne(df: DataFrame, name: String, mtimeSec: Long): Unit = {
-        val tmp = work.resolve(s"stage_$name")
-        df.coalesce(1).write.parquet(tmp.toString)
-        val listing = java.nio.file.Files.list(tmp)
-        val part =
-          try {
-            import scala.jdk.CollectionConverters._
-            listing.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-          } finally listing.close()
-        val dst = srcDir.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
-        pin(dst, mtimeSec)
-        graft.streaming.Drain.deleteRecursively(tmp)
-      }
+    graft.etl.Scratch.once(srcDirS) {
       val main = srcDir.resolve("batch1.parquet")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(sfDir, "events.parquet"), main)
-      pin(main, 1)
-      val sentinel = spark.range(1).select(
-        lit(-1L).as("event_id"),
-        Tables.tsLit(rawSchema, maxUs + 4L * 24 * 3600 * 1000000L).as("ts"),
-        lit(-1L).as("user_id"),
-        lit("__wm__").as("event_type"),
-        lit(0.0).as("value"),
-        lit(null).cast("string").as("props"))
-      stageOne(sentinel, "batch2", 2)
-      stageOne(raw.filter(
-        expr(Tables.tsMicrosExpr(rawSchema)) < lateCutUs), "batch3", 3)
-      java.nio.file.Files.createFile(marker)
+      java.nio.file.Files.setLastModifiedTime(main,
+        java.nio.file.attribute.FileTime.fromMillis(1000))
+      graft.etl.Scratch.stageFile(
+        Events.watermarkSentinel(spark, rawSchema, maxUs + 4L * 24 * 3600 * 1000000L),
+        srcDir.resolve("batch2.parquet"), 2)
+      graft.etl.Scratch.stageFile(raw.filter(
+        expr(Tables.tsMicrosExpr(rawSchema)) < lateCutUs), srcDir.resolve("batch3.parquet"), 3)
     }
     val stream = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
@@ -271,32 +237,21 @@ object StreamingOps {
     * table.
     */
   def streamingJoinOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_join_outer_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_join_outer_")
     val raw = Tables.eventsRaw(spark, sfDir)
     val rawSchema = raw.schema
     val maxUs = raw.selectExpr(Tables.tsMicrosExpr(rawSchema) + " AS us")
       .agg(max("us")).head().getLong(0)
     val srcDirS = graft.etl.Sink.scratchPath(sfDir, "events_stream_join_outer")
     val srcDir = java.nio.file.Paths.get(srcDirS)
-    val marker = srcDir.resolve("_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(srcDirS)
-      java.nio.file.Files.createDirectories(srcDir)
+    graft.etl.Scratch.once(srcDirS) {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(sfDir, "events.parquet"),
         srcDir.resolve("events.parquet"))
-      def sentinel(typ: String, userId: Long, plusDays: Long) =
-        spark.range(1).select(
-          lit(-1L).as("event_id"),
-          Tables.tsLit(rawSchema, maxUs + plusDays * 24 * 3600 * 1000000L).as("ts"),
-          lit(userId).as("user_id"),
-          lit(typ).as("event_type"),
-          lit(0.0).as("value"),
-          lit(null).cast("string").as("props"))
-      sentinel("signup", -1L, 40L).unionAll(sentinel("purchase", -2L, 20L))
-        .coalesce(1).write.mode("append").parquet(srcDir.toString)
-      java.nio.file.Files.createFile(marker)
+      val dayUs = 24L * 3600 * 1000000L
+      Events.watermarkSentinel(spark, rawSchema, maxUs + 40 * dayUs, -1L, "signup")
+        .unionAll(Events.watermarkSentinel(spark, rawSchema, maxUs + 20 * dayUs, -2L, "purchase"))
+        .coalesce(1).write.mode("append").parquet(srcDirS)
     }
     def side(typ: String) = spark.readStream.schema(rawSchema).parquet(srcDir.toString)
       .withColumn("ts", expr(Tables.tsTimestampExpr(rawSchema)))
@@ -364,9 +319,8 @@ object StreamingOps {
     */
   def streamingAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_anomaly_" + runs.incrementAndGet() + "_")
-    val srcDir = Events.chunkedEventStaging(spark, sfDir, work)
+    val work = graft.etl.Scratch.workDir("stream_anomaly_")
+    val srcDir = Events.chunkedEventStaging(spark, sfDir)
     val rawSchema = Tables.eventsRaw(spark, sfDir).schema
     val ds = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
@@ -453,9 +407,8 @@ object StreamingOps {
     */
   def streamingKmv(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_kmv_" + runs.incrementAndGet() + "_")
-    val srcDir = Events.chunkedEventStaging(spark, sfDir, work)
+    val work = graft.etl.Scratch.workDir("stream_kmv_")
+    val srcDir = Events.chunkedEventStaging(spark, sfDir)
     val rawSchema = Tables.eventsRaw(spark, sfDir).schema
     val ds = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
@@ -495,7 +448,7 @@ object StreamingOps {
       .select(col("event_type"), col("s.k_used").as("k_used"),
         (-col("s.neg_kth")).as("kth_hash"))
 
-  /** Marker-gated scratch staging for [[streamingNearDup]]: the
+  /** Build-once scratch staging for [[streamingNearDup]]: the
     * persisted LSH artifacts (the full corpus's band index + signature
     * table — what a production pipeline keeps on storage between ingest
     * days) and the DELTA documents (doc_id % 10 == 0, x_dedup_incr's
@@ -505,36 +458,17 @@ object StreamingOps {
   private[graft] def nearDupStaging(spark: SparkSession, sfDir: String): java.nio.file.Path = {
     val rootS = graft.etl.Sink.scratchPath(sfDir, "stream_neardup")
     val root = java.nio.file.Paths.get(rootS)
-    val marker = root.resolve("_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(rootS)
-      java.nio.file.Files.createDirectories(root)
+    graft.etl.Scratch.once(rootS) {
       val sigs = Dedup.signatureTable(spark, sfDir)
       sigs.write.parquet(root.resolve("sigs").toString)
       Dedup.bandsOf(sigs).write.parquet(root.resolve("bands").toString)
       val delta = Tables.documents(spark, sfDir)
         .filter(pmod(col("doc_id"), lit(10L)) === 0L)
-      val chunksDir = root.resolve("chunks")
-      java.nio.file.Files.createDirectories(chunksDir)
       (0 until 4).foreach { i =>
-        val tmp = root.resolve(s"tmp_chunk$i")
-        delta.filter(pmod(expr("doc_id div 10"), lit(4L)) === i.toLong)
-          .coalesce(1).write.parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(tmp)
-        val parts =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          finally listing.close()
-        require(parts.size == 1,
-          s"neardup chunk $i produced ${parts.size} parquet parts, expected 1")
-        val dst = chunksDir.resolve(s"chunk$i.parquet")
-        java.nio.file.Files.move(parts.head, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(i * 1000L))
-        graft.streaming.Drain.deleteRecursively(tmp)
+        graft.etl.Scratch.stageFile(
+          delta.filter(pmod(expr("doc_id div 10"), lit(4L)) === i.toLong),
+          root.resolve(s"chunks/chunk$i.parquet"), i)
       }
-      java.nio.file.Files.createFile(marker)
     }
     root
   }
@@ -562,8 +496,7 @@ object StreamingOps {
     */
   def streamingNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     val root = nearDupStaging(spark, sfDir)
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_neardup_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_neardup_")
     val outDir = work.resolve("out").toString
     val docSchema = Tables.documents(spark, sfDir).schema
     val stream = spark.readStream.schema(docSchema)
@@ -594,7 +527,6 @@ object StreamingOps {
       try q.processAllAvailable() finally q.stop()
     } finally { idx.unpersist(false); sigTbl.unpersist(false) }
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
-    graft.streaming.Drain.cleanupAtExit(work)
     // a delta-delta pair surfaces from both endpoints' batches with the
     // SAME signature-agreement estimate; the pair log dedups on the key
     spark.read.parquet(outDir).dropDuplicates("id_a", "id_b")
@@ -637,7 +569,7 @@ object StreamingOps {
           .cast("double") / Dedup.NumHashes).as("est_jaccard"))
   }
 
-  /** Marker-gated scratch staging for [[streamingSimIngest]]: the
+  /** Build-once scratch staging for [[streamingSimIngest]]: the
     * persisted BASE inverted file + the frozen centroid model (what an
     * ANN store keeps on storage between ingest days) and the DELTA
     * vectors (vec_id ≡ 7 mod 10, x_sim_incr's membership) split into 4
@@ -646,37 +578,17 @@ object StreamingOps {
   private def simIngestStaging(spark: SparkSession, sfDir: String): java.nio.file.Path = {
     val rootS = graft.etl.Sink.scratchPath(sfDir, "stream_sim")
     val root = java.nio.file.Paths.get(rootS)
-    // v2: the pinned hash-order centroid law changed the persisted model
-    val marker = root.resolve("_GRAFT_OK_v2")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(rootS)
-      java.nio.file.Files.createDirectories(root)
+    graft.etl.Scratch.once(rootS) {
       val emb = Tables.embeddings(spark, sfDir)
       val (baseCells, _) = Similarity.incrIndexParts(emb)
       baseCells.write.parquet(root.resolve("base").toString)
       Similarity.centroidModelRows(emb).write.parquet(root.resolve("cents").toString)
       val delta = emb.filter(Similarity.isDeltaVec(col("vec_id")))
-      val chunksDir = root.resolve("chunks")
-      java.nio.file.Files.createDirectories(chunksDir)
       (0 until 4).foreach { i =>
-        val tmp = root.resolve(s"tmp_chunk$i")
-        delta.filter(pmod(expr("vec_id div 10"), lit(4L)) === i.toLong)
-          .coalesce(1).write.parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(tmp)
-        val parts =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          finally listing.close()
-        require(parts.size == 1,
-          s"sim-ingest chunk $i produced ${parts.size} parquet parts, expected 1")
-        val dst = chunksDir.resolve(s"chunk$i.parquet")
-        java.nio.file.Files.move(parts.head, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(i * 1000L))
-        graft.streaming.Drain.deleteRecursively(tmp)
+        graft.etl.Scratch.stageFile(
+          delta.filter(pmod(expr("vec_id div 10"), lit(4L)) === i.toLong),
+          root.resolve(s"chunks/chunk$i.parquet"), i)
       }
-      java.nio.file.Files.createFile(marker)
     }
     root
   }
@@ -699,8 +611,7 @@ object StreamingOps {
     */
   def streamingSimIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val root = simIngestStaging(spark, sfDir)
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_sim_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_sim_")
     val outDir = work.resolve("out").toString
     val embSchema = Tables.embeddings(spark, sfDir).schema
     val stream = spark.readStream.schema(embSchema)
@@ -721,46 +632,26 @@ object StreamingOps {
       .start()
     try q.processAllAvailable() finally { q.stop(); cents.unpersist(false) }
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
-    graft.streaming.Drain.cleanupAtExit(work)
     val cells = spark.read.parquet(root.resolve("base").toString)
       .unionByName(spark.read.parquet(outDir).dropDuplicates("vec_id"))
     Similarity.serveIncrMerged(
       Tables.embeddings(spark, sfDir), cells, Similarity.QueryStride)
   }
 
-  /** Marker-gated scratch staging for [[streamingMediaIngest]]: the FULL
+  /** Build-once scratch staging for [[streamingMediaIngest]]: the FULL
     * documents table split into 4 chronological chunks with pinned
     * mtimes (every doc arrives exactly once — the media landing zone).
     */
   private def mmStaging(spark: SparkSession, sfDir: String): java.nio.file.Path = {
     val rootS = graft.etl.Sink.scratchPath(sfDir, "stream_mm")
     val root = java.nio.file.Paths.get(rootS)
-    val marker = root.resolve("_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(rootS)
-      java.nio.file.Files.createDirectories(root)
+    graft.etl.Scratch.once(rootS) {
       val docs = Tables.documents(spark, sfDir)
-      val chunksDir = root.resolve("chunks")
-      java.nio.file.Files.createDirectories(chunksDir)
       (0 until 4).foreach { i =>
-        val tmp = root.resolve(s"tmp_chunk$i")
-        docs.filter(pmod(col("doc_id"), lit(4L)) === i.toLong)
-          .coalesce(1).write.parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(tmp)
-        val parts =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          finally listing.close()
-        require(parts.size == 1,
-          s"mm chunk $i produced ${parts.size} parquet parts, expected 1")
-        val dst = chunksDir.resolve(s"chunk$i.parquet")
-        java.nio.file.Files.move(parts.head, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(i * 1000L))
-        graft.streaming.Drain.deleteRecursively(tmp)
+        graft.etl.Scratch.stageFile(
+          docs.filter(pmod(col("doc_id"), lit(4L)) === i.toLong),
+          root.resolve(s"chunks/chunk$i.parquet"), i)
       }
-      java.nio.file.Files.createFile(marker)
     }
     root
   }
@@ -777,8 +668,7 @@ object StreamingOps {
     */
   def streamingMediaIngest(spark: SparkSession, sfDir: String): DataFrame = {
     val root = mmStaging(spark, sfDir)
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_mm_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_mm_")
     val outDir = work.resolve("out").toString
     val docSchema = Tables.documents(spark, sfDir).schema
     val stream = spark.readStream.schema(docSchema)
@@ -796,7 +686,6 @@ object StreamingOps {
       .start()
     try q.processAllAvailable() finally q.stop()
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
-    graft.streaming.Drain.cleanupAtExit(work)
     spark.read.parquet(outDir).dropDuplicates("doc_id")
       .groupBy("payload_md5")
       .agg(
@@ -806,7 +695,7 @@ object StreamingOps {
         sum("n_bytes").as("bytes_total"))
   }
 
-  /** Marker-gated scratch staging for [[streamingAnnDelete]]: the
+  /** Build-once scratch staging for [[streamingAnnDelete]]: the
     * deletion REQUESTS (vec_id ≡ DeleteRem mod DeleteMod —
     * x_ann_delete's victim membership, so the streamed purge grades
     * against the same CoW answer) split into 4 chronological chunk
@@ -816,34 +705,15 @@ object StreamingOps {
     import graft.queries.AnnServe.{DeleteMod, DeleteRem}
     val rootS = graft.etl.Sink.scratchPath(sfDir, "stream_ann_delete")
     val root = java.nio.file.Paths.get(rootS)
-    val marker = root.resolve("_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(rootS)
-      java.nio.file.Files.createDirectories(root)
+    graft.etl.Scratch.once(rootS) {
       val victims = Tables.embeddings(spark, sfDir)
         .filter(pmod(col("vec_id"), lit(DeleteMod)) === DeleteRem)
         .select("vec_id")
-      val chunksDir = root.resolve("chunks")
-      java.nio.file.Files.createDirectories(chunksDir)
       (0 until 4).foreach { i =>
-        val tmp = root.resolve(s"tmp_chunk$i")
-        victims.filter(pmod(expr(s"vec_id div $DeleteMod"), lit(4L)) === i.toLong)
-          .coalesce(1).write.parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(tmp)
-        val parts =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          finally listing.close()
-        require(parts.size == 1,
-          s"ann-delete chunk $i produced ${parts.size} parquet parts, expected 1")
-        val dst = chunksDir.resolve(s"chunk$i.parquet")
-        java.nio.file.Files.move(parts.head, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(i * 1000L))
-        graft.streaming.Drain.deleteRecursively(tmp)
+        graft.etl.Scratch.stageFile(
+          victims.filter(pmod(expr(s"vec_id div $DeleteMod"), lit(4L)) === i.toLong),
+          root.resolve(s"chunks/chunk$i.parquet"), i)
       }
-      java.nio.file.Files.createFile(marker)
     }
     root
   }
@@ -867,8 +737,7 @@ object StreamingOps {
     */
   def streamingAnnDelete(spark: SparkSession, sfDir: String): DataFrame = {
     val root = annDeleteStaging(spark, sfDir)
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_ann_delete_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_ann_delete_")
     val tombDir = work.resolve("tombstones").toString
     val schema = new org.apache.spark.sql.types.StructType()
       .add("vec_id", org.apache.spark.sql.types.LongType)
@@ -883,7 +752,6 @@ object StreamingOps {
       .start()
     try q.processAllAvailable() finally q.stop()
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
-    graft.streaming.Drain.cleanupAtExit(work)
     graft.queries.AnnServe.tombstoneServe(spark, sfDir, tombDir)
   }
 
@@ -899,7 +767,7 @@ object StreamingOps {
       graft.functions.PolyHash.poly_hash(col("text"), 137).as("eh31"),
       length(col("text")).cast("long").as("n_chars"))
 
-  /** Marker-gated staging for [[streamingPipeline]]: the LAKE state a
+  /** Build-once staging for [[streamingPipeline]]: the LAKE state a
     * curation service keeps between ingest days — the base corpus's
     * exact-hash triples, LSH band index and signature table (doc_id ≢ 0
     * mod 10) — plus the delta documents (doc_id ≡ 0 mod 10) split into
@@ -908,10 +776,7 @@ object StreamingOps {
   private def pipeStaging(spark: SparkSession, sfDir: String): java.nio.file.Path = {
     val rootS = graft.etl.Sink.scratchPath(sfDir, "stream_pipe")
     val root = java.nio.file.Paths.get(rootS)
-    val marker = root.resolve("_GRAFT_OK")
-    if (!java.nio.file.Files.exists(marker)) {
-      graft.etl.Sink.dropUncommitted(rootS)
-      java.nio.file.Files.createDirectories(root)
+    graft.etl.Scratch.once(rootS) {
       val docs = Tables.documents(spark, sfDir)
       val base = docs.filter(pmod(col("doc_id"), lit(10L)) =!= 0L)
       pipeTriples(base).write.parquet(root.resolve("triples").toString)
@@ -919,27 +784,11 @@ object StreamingOps {
       baseSigs.write.parquet(root.resolve("sigs").toString)
       Dedup.bandsOf(baseSigs).write.parquet(root.resolve("bands").toString)
       val delta = docs.filter(pmod(col("doc_id"), lit(10L)) === 0L)
-      val chunksDir = root.resolve("chunks")
-      java.nio.file.Files.createDirectories(chunksDir)
       (0 until 4).foreach { i =>
-        val tmp = root.resolve(s"tmp_chunk$i")
-        delta.filter(pmod(expr("doc_id div 10"), lit(4L)) === i.toLong)
-          .coalesce(1).write.parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(tmp)
-        val parts =
-          try listing.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          finally listing.close()
-        require(parts.size == 1,
-          s"pipe chunk $i produced ${parts.size} parquet parts, expected 1")
-        val dst = chunksDir.resolve(s"chunk$i.parquet")
-        java.nio.file.Files.move(parts.head, dst)
-        java.nio.file.Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(i * 1000L))
-        graft.streaming.Drain.deleteRecursively(tmp)
+        graft.etl.Scratch.stageFile(
+          delta.filter(pmod(expr("doc_id div 10"), lit(4L)) === i.toLong),
+          root.resolve(s"chunks/chunk$i.parquet"), i)
       }
-      java.nio.file.Files.createFile(marker)
     }
     root
   }
@@ -975,8 +824,7 @@ object StreamingOps {
     */
   def streamingPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val root = pipeStaging(spark, sfDir)
-    val work = java.nio.file.Files.createTempDirectory(
-      "graft_stream_pipe_" + runs.incrementAndGet() + "_")
+    val work = graft.etl.Scratch.workDir("stream_pipe_")
     // lake state: ONE analyzed + cached instance per drain — the old
     // per-batch `ss.read.parquet(...)` form re-listed, re-analyzed and
     // re-scanned all three immutable lake tables on every trigger
@@ -1137,7 +985,6 @@ object StreamingOps {
       (Seq(baseTriples, baseBands, baseSigs) ++
         histTriL ++ histBandsL ++ histSigsL).foreach(_.unpersist(false))
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
-    graft.streaming.Drain.cleanupAtExit(work)
     // the ledger is per-batch metadata (7 longs × #chunks) assembled from
     // driver-side aggregates — build the result frame directly instead of
     // the old write-per-batch parquet sink + end-of-run re-read

@@ -6,14 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
 import graft.Tables
-import graft.etl.Sink
+import graft.etl.{Scratch, Sink}
 import graft.llm.Similarity
 
 /** X-SIM-PQ-SERVE: the IVF-PQ index served through the engine's DSv2
   * catalog — plain SQL probes the PERSISTED index, the way a
   * SQL-only consumer uses an ANN store (VERDICT r12 task 6).
   *
-  * Build once (marker-gated): [[Similarity.pqIndexFrame]] persists the
+  * Build once per process: [[Similarity.pqIndexFrame]] persists the
   * encoded corpus (vec_id, cell id, 8 codeword ids — ≈9 ints per
   * vector) as a cell-partitioned JSONL layout, [[Similarity.pqBooksFrame]]
   * the dim-sized codebook; `CREATE TABLE <cat>.ann.pq_index ...
@@ -38,7 +38,7 @@ import graft.llm.Similarity
 object AnnServe {
 
   /** Stage the index + codebook and register the `ann` catalog tables;
-    * returns the catalog name. Same marker/registration discipline as
+    * returns the catalog name. Same build-once/registration discipline as
     * q_dsv2_sql's `ensureFbSqlTable` (per-sfDir catalog name — Spark
     * caches catalog instances by name, so a shared name would pin the
     * first warehouse).
@@ -49,15 +49,11 @@ object AnnServe {
     spark.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sources.FbInsightsCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    val marker = Paths.get(wh, "_GRAFT_DONE_ann_pq_v2")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(Paths.get(wh))
+    val idxDir = s"$wh/staging/pq_index"
+    val booksDir = s"$wh/staging/pq_books"
+    Scratch.once(idxDir) {
       spark.sql(s"DROP TABLE IF EXISTS $cat.ann.pq_index")
       spark.sql(s"DROP TABLE IF EXISTS $cat.ann.pq_books")
-      val idxDir = s"$wh/staging/pq_index"
-      val booksDir = s"$wh/staging/pq_books"
-      Sink.dropUncommitted(idxDir)
-      Sink.dropUncommitted(booksDir)
       val emb = Tables.embeddings(spark, sfDir)
       Similarity.pqIndexFrame(emb)
         .write.mode("overwrite").partitionBy("cent_id").json(idxDir)
@@ -70,7 +66,6 @@ object AnnServe {
       spark.sql(
         s"""CREATE TABLE $cat.ann.pq_books (bid BIGINT, bv ARRAY<DOUBLE>)
            |USING annindex LOCATION '$booksDir'""".stripMargin)
-      Files.createFile(marker)
     }
     cat
   }
@@ -164,11 +159,9 @@ object AnnServe {
   private[graft] def ensureIvfFlatTable(spark: SparkSession, sfDir: String): String = {
     val cat = ensureAnnTables(spark, sfDir)
     val wh = Sink.scratchPath(sfDir, "ann_warehouse")
-    val marker = Paths.get(wh, "_GRAFT_DONE_ann_ivfflat_v2")
-    if (!Files.exists(marker)) {
+    val dir = s"$wh/staging/ivf_flat"
+    Scratch.once(dir) {
       spark.sql(s"DROP TABLE IF EXISTS $cat.ann.ivf_flat")
-      val dir = s"$wh/staging/ivf_flat"
-      Sink.dropUncommitted(dir)
       Similarity.ivfFlatIndexFrame(Tables.embeddings(spark, sfDir))
         .write.mode("overwrite").partitionBy("cent_id").json(dir)
       spark.sql(
@@ -176,7 +169,6 @@ object AnnServe {
            |  (vec_id BIGINT, cent_id BIGINT, label BIGINT, vec ARRAY<DOUBLE>)
            |USING annindex PARTITIONED BY (cent_id)
            |LOCATION '$dir'""".stripMargin)
-      Files.createFile(marker)
     }
     cat
   }
@@ -341,7 +333,7 @@ object AnnServe {
     // rewrite is promoted (one rename), so no crash window deletes data
     // that has no replacement on disk — a crash between the renames leaves
     // the full old index at `__old`, recoverable by hand and re-staged
-    // from scratch by the marker gate on retry; superseded files vacuum
+    // from scratch by the build-once gate on retry; superseded files vacuum
     // only after the promotion lands
     val old = dir + "__old"
     Sink.dropUncommitted(old)
@@ -352,16 +344,14 @@ object AnnServe {
   }
 
   /** Stage a FRAGMENTED copy of the pq index, compact it, and register
-    * it as `ann.pq_index_compact`. Marker-gated like the live staging.
+    * it as `ann.pq_index_compact`. Built once, like the live staging.
     */
   private[graft] def ensureCompactTable(spark: SparkSession, sfDir: String): String = {
     val cat = ensureAnnTables(spark, sfDir)
     val wh = Sink.scratchPath(sfDir, "ann_warehouse")
-    val marker = Paths.get(wh, "_GRAFT_DONE_ann_compact_v2")
-    if (!Files.exists(marker)) {
+    val dir = s"$wh/staging/pq_index_compact"
+    Scratch.once(dir) {
       spark.sql(s"DROP TABLE IF EXISTS $cat.ann.pq_index_compact")
-      val dir = s"$wh/staging/pq_index_compact"
-      Sink.dropUncommitted(dir)
       Similarity.pqIndexFrame(Tables.embeddings(spark, sfDir))
         .repartition(FragmentSlices)
         .write.mode("overwrite").partitionBy("cent_id").json(dir)
@@ -371,7 +361,6 @@ object AnnServe {
            |  (vec_id BIGINT, cent_id BIGINT, codes ARRAY<BIGINT>)
            |USING annindex PARTITIONED BY (cent_id)
            |LOCATION '$dir'""".stripMargin)
-      Files.createFile(marker)
     }
     cat
   }
@@ -393,11 +382,9 @@ object AnnServe {
   private[graft] def ensurePqLabeledTable(spark: SparkSession, sfDir: String): String = {
     val cat = ensureAnnTables(spark, sfDir)
     val wh = Sink.scratchPath(sfDir, "ann_warehouse")
-    val marker = Paths.get(wh, "_GRAFT_DONE_ann_pq_labeled_v2")
-    if (!Files.exists(marker)) {
+    val dir = s"$wh/staging/pq_index_labeled"
+    Scratch.once(dir) {
       spark.sql(s"DROP TABLE IF EXISTS $cat.ann.pq_index_labeled")
-      val dir = s"$wh/staging/pq_index_labeled"
-      Sink.dropUncommitted(dir)
       Similarity.pqIndexLabeledFrame(Tables.embeddings(spark, sfDir))
         .write.mode("overwrite").partitionBy("cent_id").json(dir)
       spark.sql(
@@ -405,7 +392,6 @@ object AnnServe {
            |  (vec_id BIGINT, cent_id BIGINT, label BIGINT, codes ARRAY<BIGINT>)
            |USING annindex PARTITIONED BY (cent_id)
            |LOCATION '$dir'""".stripMargin)
-      Files.createFile(marker)
     }
     cat
   }
@@ -492,16 +478,14 @@ object AnnServe {
   }
 
   /** Stage a copy of the pq index, purge the deletion set from it, and
-    * register it as `ann.pq_index_deleted`. Marker-gated.
+    * register it as `ann.pq_index_deleted`. Built once.
     */
   private[graft] def ensureDeletedTable(spark: SparkSession, sfDir: String): String = {
     val cat = ensureAnnTables(spark, sfDir)
     val wh = Sink.scratchPath(sfDir, "ann_warehouse")
-    val marker = Paths.get(wh, "_GRAFT_DONE_ann_delete_v2")
-    if (!Files.exists(marker)) {
+    val dir = s"$wh/staging/pq_index_deleted"
+    Scratch.once(dir) {
       spark.sql(s"DROP TABLE IF EXISTS $cat.ann.pq_index_deleted")
-      val dir = s"$wh/staging/pq_index_deleted"
-      Sink.dropUncommitted(dir)
       Similarity.pqIndexFrame(Tables.embeddings(spark, sfDir))
         .write.mode("overwrite").partitionBy("cent_id").json(dir)
       deleteFromIndex(spark, dir)
@@ -510,7 +494,6 @@ object AnnServe {
            |  (vec_id BIGINT, cent_id BIGINT, codes ARRAY<BIGINT>)
            |USING annindex PARTITIONED BY (cent_id)
            |LOCATION '$dir'""".stripMargin)
-      Files.createFile(marker)
     }
     cat
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.etl.{FbInsightsSource, Normalize, RatesSource, Schemas, Sink}
+import graft.etl.{FbInsightsSource, Normalize, RatesSource, Schemas, Scratch, Sink}
 
 /** Reference-faithful flagship queries (SURVEY.md §2.6, Q-*).
   *
@@ -40,16 +40,12 @@ object EtlQueries {
     // be a distinct cache key).
     tableCache.getOrBuild(spark, sfDir, cache = true) {
       val path = Sink.scratchPath(sfDir, "fb_stat")
-      val marker = java.nio.file.Paths.get(path, "_GRAFT_OK_v3")
-      if (!java.nio.file.Files.exists(marker)) {
-        // the reference load path (main.py:219-221): namespace-if-missing
-        // (K-DS), then an APPEND that creates the partitioned+clustered
-        // layout on first write (K-TBL + K-INS). A markerless directory is
-        // an uncommitted half-load — drop it so the append can't double.
-        Sink.dropUncommitted(path)
-        Sink.ensureNamespace(new java.io.File(path).getParent)
+      // the reference load path (main.py:219-221): namespace-if-missing
+      // (K-DS), then an APPEND that creates the partitioned+clustered
+      // layout on first write (K-TBL + K-INS); a failed load leaves no
+      // directory, so a retry's append can't double
+      Scratch.once(path) {
         Sink.appendPartitioned(fbStat(spark, sfDir), path)
-        java.nio.file.Files.createFile(marker)
       }
       // K-TBL's catalog half (reference main.py:63-76 `create_table`): the
       // table is REGISTERED once and consumers query the table, not the
@@ -388,9 +384,7 @@ object EtlQueries {
     */
   def qSinkDsv2(spark: SparkSession, sfDir: String): DataFrame = {
     val path = Sink.scratchPath(sfDir, "fb_sink_dsv2")
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_OK_v2")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(path)
+    Scratch.once(path) {
       // repartition on the partition key first (same discipline as
       // Sink.appendPartitioned): each writer task then spools ~one day,
       // one open file — not every task holding a file per day
@@ -398,7 +392,6 @@ object EtlQueries {
         .repartition(col("date_start"))
         .write.format(classOf[graft.sources.FbInsightsDataSource].getName)
         .option("path", path).mode("append").save()
-      java.nio.file.Files.createFile(marker)
     }
     val back = spark.read
       .format(classOf[graft.sources.FbInsightsDataSource].getName)
@@ -416,12 +409,12 @@ object EtlQueries {
     * the batch load byte-for-byte (q_load_fb's oracle), proving the SQL
     * face and the DataFrame face hit the same write/read machinery.
     */
-  /** Register the per-sfDir catalog + marker-gated `db.fb_sql` table;
+  /** Register the per-sfDir catalog + build-once `db.fb_sql` table;
     * returns the catalog name. Catalog name is per-sfDir: Spark's
     * CatalogManager caches the catalog INSTANCE on first resolution, so
     * re-pointing a shared `fbins.warehouse` conf for a second sfDir
     * would silently keep the first warehouse (wrong-table reads behind
-    * a green marker). A distinct name per sfDir keys the cache
+    * a built table). A distinct name per sfDir keys the cache
     * correctly.
     */
   private def ensureFbSqlTable(spark: SparkSession, sfDir: String): String = {
@@ -430,16 +423,12 @@ object EtlQueries {
     spark.conf.set(s"spark.sql.catalog.$cat",
       classOf[graft.sources.FbInsightsCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    val marker = java.nio.file.Paths.get(wh, "_GRAFT_DONE_fb_sql_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(s"$wh/db/fb_sql")
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(wh))
+    Scratch.once(wh) {
       spark.sql(s"DROP TABLE IF EXISTS $cat.db.fb_sql")
       spark.sql(
         s"CREATE TABLE $cat.db.fb_sql (${Schemas.fbInsightsRaw.toDDL}) USING fbinsights")
       FbInsightsSource.raw(spark, sfDir).createOrReplaceTempView("fb_raw_src")
       spark.sql(s"INSERT INTO $cat.db.fb_sql SELECT * FROM fb_raw_src")
-      java.nio.file.Files.createFile(marker)
     }
     cat
   }
@@ -498,15 +487,13 @@ object EtlQueries {
   /** Q-STREAM-DSV2: the streaming LOAD through the connector's own
     * MICRO_BATCH_READ path — day-partitions admitted a capped number per
     * micro-batch (the connector's maxFilesPerTrigger), drained once into
-    * the sink (marker-gated; a restart resumes from the checkpoint).
+    * the sink (built once per process).
     * Result must equal the batch load byte-for-byte → q_load_fb's oracle.
     */
   def qStreamDsv2(spark: SparkSession, sfDir: String): DataFrame = {
     val path = Sink.scratchPath(sfDir, "fb_stream_dsv2")
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_OK_v1")
     val outDir = s"$path/out"
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(path)
+    Scratch.once(path) {
       val src = FbInsightsSource.jsonlPath(spark, sfDir)
       val stream = spark.readStream
         .format(classOf[graft.sources.FbInsightsDataSource].getName)
@@ -514,7 +501,6 @@ object EtlQueries {
         .option("maxDaysPerBatch", 500)
         .load()
       graft.streaming.Drain.run(Normalize(stream), outDir, s"$path/ckpt")
-      java.nio.file.Files.createFile(marker)
     }
     flatten(spark.read.parquet(outDir))
   }
@@ -530,11 +516,8 @@ object EtlQueries {
   def qStreamSink(spark: SparkSession, sfDir: String): DataFrame = {
     val fmt = classOf[graft.sources.FbInsightsDataSource].getName
     val path = Sink.scratchPath(sfDir, "fb_stream_sink")
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_OK_v1")
     val dstTable = s"$path/table"
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(path)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
+    Scratch.once(path) {
       val src = FbInsightsSource.jsonlPath(spark, sfDir)
       val stream = spark.readStream.format(fmt)
         .option("path", src)
@@ -547,7 +530,6 @@ object EtlQueries {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      java.nio.file.Files.createFile(marker)
     }
     val back = spark.read.format(fmt).option("path", dstTable).load()
     flatten(Normalize(back))
@@ -555,20 +537,15 @@ object EtlQueries {
 
   def qStreamLoad(spark: SparkSession, sfDir: String): DataFrame = {
     // LOAD-stage semantics, like fb_stat: the stream drains the landing
-    // zone into the sink ONCE (marker-gated — a restart would resume from
-    // the checkpoint, not reprocess); queries read the sink.
+    // zone into the sink ONCE per process; queries read the sink.
     val path = Sink.scratchPath(sfDir, "fb_stream_load")
-    val marker = java.nio.file.Paths.get(path, "_GRAFT_OK_v1")
     val outDir = s"$path/out"
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(path)
+    Scratch.once(path) {
       val src = FbInsightsSource.jsonlPath(spark, sfDir)
       val parsed = spark.readStream.text(s"$src/date=*")
         .select(from_json(col("value"), Schemas.fbInsightsRaw).as("r"))
         .select(col("r.*"))
-      // checkpoint stays in scratch: a restart resumes, not reprocesses
       graft.streaming.Drain.run(Normalize(parsed), outDir, s"$path/ckpt")
-      java.nio.file.Files.createFile(marker)
     }
     flatten(spark.read.parquet(outDir))
   }
@@ -626,25 +603,21 @@ object EtlQueries {
 
   /** Size-targeted compaction rewrite: day-partitioned fb_stat →
     * month-partitioned copy whose shuffle width is derived from input
-    * bytes / `targetBytes`. Returns the destination path (marker-gated
-    * per (sfDir, table, target)).
+    * bytes / `targetBytes`. Returns the destination path, built once per
+    * (sfDir, table): a table name stands for one target.
     */
   private[graft] def compactSized(
       spark: SparkSession, sfDir: String, targetBytes: Long, table: String): String = {
     fbStatTable(spark, sfDir) // ensure the day-partitioned source exists
     val src = Sink.scratchPath(sfDir, "fb_stat")
     val dst = Sink.scratchPath(sfDir, table)
-    val marker = java.nio.file.Paths.get(dst, s"_GRAFT_OK_v2_t$targetBytes")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(dst)
+    Scratch.once(dst) {
       val n = Sink.sizedPartitions(Sink.dataBytes(src), targetBytes)
       spark.read.parquet(src)
         .withColumn("month", date_format(col("date"), "yyyy-MM"))
         .repartitionByRange(n, col("month"), col("date"), col("ad_id"))
         .write.partitionBy("month").mode("overwrite").parquet(dst)
-      java.nio.file.Files.createFile(marker)
     }
-    dst
   }
 
   private val compactScanCache = new graft.Memo
@@ -768,7 +741,7 @@ object EtlQueries {
     * twice into a fresh path; counts must double, not upsert.
     */
   def qIdem(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idem")
+    val dir = Scratch.workDir("idem_")
     val path = dir.resolve("exchange_rate").toString
     // Unpartitioned append: Q-IDEM locks the reference's at-least-once
     // *insert* semantics (main.py:81-91); partitioned layout fidelity is
@@ -794,7 +767,7 @@ object EtlQueries {
     * no-ops).
     */
   def qIdemKeyed(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idem_keyed")
+    val dir = Scratch.workDir("idem_keyed_")
     val path = dir.resolve("exchange_rate").toString
     val rates = RatesSource.rates(spark, sfDir).coalesce(1).cache()
     Sink.appendKeyed(rates, path, Seq("date", "currencies"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.etl.Sink
+import graft.etl.{Scratch, Sink}
 import graft.llm.Similarity
 
 /** Scale-technique operators: each demonstrates a 100 TB pattern on the
@@ -196,9 +196,7 @@ object ScaleQueries {
 
   def zorderLayout(spark: SparkSession, sfDir: String): String = {
     val dst = Sink.scratchPath(sfDir, "events_zorder")
-    val marker = java.nio.file.Paths.get(dst, "_GRAFT_OK_v3")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(dst)
+    Scratch.once(dst) {
       val ev = graft.Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
           col("ts").cast("date").as("day"))
@@ -222,9 +220,7 @@ object ScaleQueries {
         .repartitionByRange(n, col("z"))
         .sortWithinPartitions("z")
         .write.mode("overwrite").parquet(dst)
-      java.nio.file.Files.createFile(marker)
     }
-    dst
   }
 
   def zorderQuery(spark: SparkSession, sfDir: String): DataFrame = {
@@ -263,14 +259,11 @@ object ScaleQueries {
     */
   def fileSkipAudit(spark: SparkSession, sfDir: String): (DataFrame, Int, Int) = {
     val dst = Sink.scratchPath(sfDir, "events_ranged")
-    val marker = java.nio.file.Paths.get(dst, "_GRAFT_OK_v1")
-    if (!java.nio.file.Files.exists(marker)) {
-      Sink.dropUncommitted(dst)
+    Scratch.once(dst) {
       Tables.events(spark, sfDir)
         .select(col("user_id"), col("event_type"), col("value"))
         .repartitionByRange(16, col("user_id"))
         .write.mode("overwrite").parquet(dst)
-      java.nio.file.Files.createFile(marker)
     }
     val ranged = spark.read.parquet(dst)
     // the manifest job: one (file, min, max) row per non-empty file —

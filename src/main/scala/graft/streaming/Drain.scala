@@ -11,23 +11,6 @@ import org.apache.spark.sql.DataFrame
   */
 object Drain {
 
-  /** Low-level: run `stream` into `outDir` with `ckptDir`, synchronously.
-    *
-    * `shufflePartitions` sizes the stateful operators' state-store count
-    * for the stream's data volume (a micro-batch query pins its
-    * partition count at first start from the session conf): every
-    * stateful partition costs checkpointed store files PER MICRO-BATCH
-    * regardless of how little state it holds, so an oversized count is
-    * pure fixed overhead — measured here, a stream-stream join over the
-    * sf0.1 fixture spends most of its wall clock on 32-partition state
-    * churn that 8 partitions absorb, and dropping to 4 shaved a further
-    * ~17% off the streaming family's wall clock with bit-identical
-    * results (most of these drains key state on event_type — 5 keys —
-    * or a user hash whose fixture volume 4 stores absorb). On a real
-    * cluster the same knob scales UP with key cardinality and volume.
-    * The session conf is restored after the drain; batch queries in the
-    * session never see the override.
-    */
   /** Engine-reported drain accounting from StreamingQueryProgress.
     * NOTE `droppedByWatermark` counts only late rows that REACH a state
     * store; the derived watermark filter ahead of the stateful operator
@@ -37,17 +20,6 @@ object Drain {
     */
   case class DrainStats(inputRows: Long, droppedByWatermark: Long)
 
-  /** Returns [[DrainStats]] summed across the drained micro-batches
-    * (most callers ignore it; x_stream_late asserts on it).
-    */
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the prior value after. A micro-batch query snapshots the
-    * session conf at `start()`, so the custom `foreachBatch` drains use
-    * this exactly the way [[run]]'s override works for the file-sink
-    * drains: the Drain-measured 4 absorbs every per-batch shuffle at
-    * fixture volume, and the same knob scales UP with volume on a real
-    * cluster (see the [[run]] scaladoc for the measurement).
-    */
   /** ~128 MB of batch input per shuffle/state partition (guide §2.1's
     * partition-sizing target), floored at the Drain-measured fixture
     * minimum of 4 (see [[run]]'s scaladoc for that measurement).
@@ -120,6 +92,14 @@ object Drain {
     }
   }
 
+  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
+    * restoring the prior value after. A micro-batch query snapshots the
+    * session conf at `start()`, so the custom `foreachBatch` drains use
+    * this exactly the way [[run]]'s override works for the file-sink
+    * drains: the Drain-measured 4 absorbs every per-batch shuffle at
+    * fixture volume, and the same knob scales UP with volume on a real
+    * cluster (see the [[run]] scaladoc for the measurement).
+    */
   def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession, n: Int)(
       body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -131,6 +111,26 @@ object Drain {
     }
   }
 
+  /** Low-level: run `stream` into `outDir` with `ckptDir`, synchronously.
+    *
+    * `shufflePartitions` sizes the stateful operators' state-store count
+    * for the stream's data volume (a micro-batch query pins its
+    * partition count at first start from the session conf): every
+    * stateful partition costs checkpointed store files PER MICRO-BATCH
+    * regardless of how little state it holds, so an oversized count is
+    * pure fixed overhead — measured here, a stream-stream join over the
+    * sf0.1 fixture spends most of its wall clock on 32-partition state
+    * churn that 8 partitions absorb, and dropping to 4 shaved a further
+    * ~17% off the streaming family's wall clock with bit-identical
+    * results (most of these drains key state on event_type — 5 keys —
+    * or a user hash whose fixture volume 4 stores absorb). On a real
+    * cluster the same knob scales UP with key cardinality and volume.
+    * The session conf is restored after the drain; batch queries in the
+    * session never see the override.
+    *
+    * Returns [[DrainStats]] summed across the drained micro-batches
+    * (most callers ignore it; x_stream_late asserts on it).
+    */
   def run(stream: DataFrame, outDir: String, ckptDir: String,
           shufflePartitions: Option[Int] = None): DrainStats = {
     val spark = stream.sparkSession
@@ -168,12 +168,11 @@ object Drain {
     }
   }
 
-  /** Temp-dir variant: drain into `work/out`, then immediately delete the
+  /** Work-dir variant: drain into `work/out`, then immediately delete the
     * checkpoint and any staged inputs (`alsoDelete`) — they are dead once
-    * the drain finishes — and schedule the remaining sink files for
-    * JVM-exit cleanup (the returned DataFrame reads them lazily, so they
-    * must outlive the call). Without this, every invocation leaked a
-    * staged copy of its input plus a checkpoint into the temp dir.
+    * the drain finishes. The sink files stay (the returned DataFrame
+    * reads them lazily); `work` comes from [[graft.etl.Scratch.workDir]],
+    * so they go with the process's scratch root at exit.
     */
   def toParquet(stream: DataFrame, work: Path, alsoDelete: Seq[Path] = Nil,
                 shufflePartitions: Option[Int] = None): DataFrame =
@@ -185,30 +184,15 @@ object Drain {
     val outDir = work.resolve("out").toString
     val stats = run(stream, outDir, work.resolve("ckpt").toString, shufflePartitions)
     (work.resolve("ckpt") +: alsoDelete).foreach(deleteRecursively)
-    cleanupAtExit(work)
     (stream.sparkSession.read.parquet(outDir), stats)
   }
 
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(f =>
+      val walk = Files.walk(p)
+      val entries = try walk.iterator().asScala.toSeq.reverse finally walk.close()
+      entries.foreach(f =>
         try Files.deleteIfExists(f) catch { case _: java.io.IOException => () })
     }
-
-  private val exitPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
-  private lazy val hook: Thread = {
-    val t = new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      exitPaths.asScala.foreach(deleteRecursively)
-    }, "graft-drain-cleanup")
-    Runtime.getRuntime.addShutdownHook(t)
-    t
-  }
-
-  /** Schedule `p` for recursive deletion at JVM exit — for artifacts a
-    * lazily-evaluated DataFrame still reads, so they must outlive the
-    * producing call but should not outlive the process.
-    */
-  def cleanupAtExit(p: Path): Unit = { hook; exitPaths.add(p); () }
 }

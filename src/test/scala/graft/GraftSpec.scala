@@ -3054,7 +3054,7 @@ class GraftSpec extends AnyFunSuite {
     spark.range(0).select(col("id").as("vec_id")).write.parquet(emptyTomb)
     val (t2, r2) = AnnServe.applyTombstones(spark, copy.toString, emptyTomb)
     assert(r2 === 0 && t2 > 0)
-    graft.streaming.Drain.cleanupAtExit(work)
+    graft.streaming.Drain.deleteRecursively(work)
   }
 
   test("x_contrastive: triplets straddle the threshold and both sides are argmax-optimal") {
@@ -4970,32 +4970,66 @@ class GraftSpec extends AnyFunSuite {
     "sort_merge_joins", "broadcast_hash_joins", "shuffled_hash_joins",
     "nested_loop_joins", "cartesians", "pushed_filter_scans")
 
+  /** Operator counts of a query's physical plan at the spec fixture,
+    * from a walk of the plan TREE (not its explain text): it descends into
+    * AQE plans and subqueries, counts an in-memory table scan as one leaf
+    * (the cached build plan it prints is not re-executed), and skips
+    * reused exchanges/subqueries (reuse is not new work). The plan is
+    * AQE's INITIAL plan from a fresh planning of the query: the final plan
+    * is re-optimized at run time, and x_sim_filtered's final plan counted
+    * 5 shuffles run alone but 6 in the full suite.
+    */
   private def planFingerprint(name: String): Map[String, Int] = {
-    val p = SparkEntry.queries(name)(spark, sf)
-      .queryExecution.executedPlan.toString
-    def c(sub: String): Int = {
-      var n = 0; var i = p.indexOf(sub)
-      while (i >= 0) { n += 1; i = p.indexOf(sub, i + 1) }
-      n
+    import org.apache.spark.sql.execution.{DataSourceScanExec, ReusedSubqueryExec,
+      SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins._
+    val df = SparkEntry.queries(name)(spark, sf)
+    val plan = spark.sessionState.executePlan(df.queryExecution.logical).executedPlan
+    val nodes = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case _: ReusedExchangeExec | _: ReusedSubqueryExec => ()
+      case _ =>
+        nodes += p
+        p.children.foreach(walk)
+        p.subqueries.foreach(walk)
     }
+    walk(plan)
+    def c(pf: PartialFunction[SparkPlan, Boolean]): Int =
+      nodes.count(n => pf.applyOrElse(n, (_: SparkPlan) => false))
     Map(
-      "shuffles" -> (c("Exchange hashpartitioning") +
-        c("Exchange rangepartitioning") + c("Exchange SinglePartition")),
-      "broadcasts" -> c("BroadcastExchange"),
-      "sorts" -> c("Sort ["),
-      "sort_merge_joins" -> c("SortMergeJoin"),
-      "broadcast_hash_joins" -> c("BroadcastHashJoin"),
-      "shuffled_hash_joins" -> c("ShuffledHashJoin"),
-      "nested_loop_joins" -> c("BroadcastNestedLoopJoin"),
-      "cartesians" -> c("CartesianProduct"),
-      "pushed_filter_scans" -> (c("PushedFilters: [") - c("PushedFilters: []")))
+      "shuffles" -> c { case _: ShuffleExchangeLike => true },
+      "broadcasts" -> c { case _: BroadcastExchangeLike => true },
+      "sorts" -> c { case _: SortExec => true },
+      "sort_merge_joins" -> c { case _: SortMergeJoinExec => true },
+      "broadcast_hash_joins" -> c { case _: BroadcastHashJoinExec => true },
+      "shuffled_hash_joins" -> c { case _: ShuffledHashJoinExec => true },
+      "nested_loop_joins" -> c { case _: BroadcastNestedLoopJoinExec => true },
+      "cartesians" -> c { case _: CartesianProductExec => true },
+      "pushed_filter_scans" -> c { case s: DataSourceScanExec =>
+        val t = s.simpleString(Int.MaxValue) // this scan node alone
+        t.contains("PushedFilters: [") && !t.contains("PushedFilters: []") })
+  }
+
+  /** The manifest's recorded fingerprints, by query name. */
+  private def recordedManifest(): Map[String, Map[String, Int]] = {
+    val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("PLAN_MANIFEST.json"))
+    val entry = """"([a-z0-9_]+)": \{([^}]*)\}""".r
+    val kv = """"([a-z_]+)": (\d+)""".r
+    entry.findAllMatchIn(txt).map { m =>
+      m.group(1) -> kv.findAllMatchIn(m.group(2))
+        .map(g => g.group(1) -> g.group(2).toInt).toMap
+    }.toMap
   }
 
   test("plan manifest: expensive-tail plan shapes match PLAN_MANIFEST.json") {
-    // A checked-in fingerprint (node counts of the STATIC physical plan at
-    // the spec fixture) per expensive query: a broadcast→SMJ demotion, a
-    // lost parquet pushdown, or a new exchange now fails `sbt test`
-    // instead of surfacing as bench drift.
+    // A checked-in fingerprint (operator counts of the physical plan at
+    // the spec fixture, see planFingerprint) per expensive query: a
+    // broadcast→SMJ demotion, a lost parquet pushdown, or a new exchange
+    // now fails `sbt test` instead of surfacing as bench drift.
     //
     // Condition-independence: the fingerprints legitimately depend on the
     // shared memo caches being MATERIALIZED (post-materialization
@@ -5028,13 +5062,7 @@ class GraftSpec extends AnyFunSuite {
     } else {
       assert(java.nio.file.Files.exists(path),
         "PLAN_MANIFEST.json missing — regenerate with GRAFT_UPDATE_PLAN_MANIFEST=1")
-      val txt = java.nio.file.Files.readString(path)
-      val entry = """"([a-z0-9_]+)": \{([^}]*)\}""".r
-      val kv = """"([a-z_]+)": (\d+)""".r
-      val recorded = entry.findAllMatchIn(txt).map { m =>
-        m.group(1) -> kv.findAllMatchIn(m.group(2))
-          .map(g => g.group(1) -> g.group(2).toInt).toMap
-      }.toMap
+      val recorded = recordedManifest()
       val diffs = current.flatMap { case (n, m) =>
         recorded.get(n) match {
           case None => Seq(s"$n: missing from manifest")
@@ -5048,6 +5076,55 @@ class GraftSpec extends AnyFunSuite {
       assert(diffs.isEmpty,
         s"plan shapes drifted from PLAN_MANIFEST.json (regenerate ONLY if " +
           s"intentional):\n${diffs.mkString("\n")}")
+    }
+  }
+
+  test("plan manifest: a broadcast forced down to a sort-merge join changes the fingerprint") {
+    // the manifest gate must still see what it exists for: with
+    // auto-broadcast off, q_join_fx_asof's size-driven broadcast joins
+    // demote to sort-merge joins and the fingerprint leaves the manifest
+    val target = "q_join_fx_asof"
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val demoted =
+      try { keys.foreach(spark.conf.set(_, "-1")); planFingerprint(target) }
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    val recorded = recordedManifest()(target)
+    assert(recorded("broadcast_hash_joins") > 0, s"$target must broadcast in the manifest")
+    assert(demoted("sort_merge_joins") > recorded("sort_merge_joins"),
+      s"auto-broadcast off must add sort-merge joins: $demoted vs $recorded")
+  }
+
+  test("scratch: a completed-looking artifact left in the shared warehouse by an older run is never read") {
+    import java.nio.file.{Files, Paths}
+    // a private sfDir (symlinks to the fixture) so no other spec has
+    // staged its spool in this JVM yet
+    val sfCopy = Files.createTempDirectory("graft_stale_sf_")
+    new java.io.File(sf).listFiles().map(_.toPath)
+      .foreach(f => Files.createSymbolicLink(sfCopy.resolve(f.getFileName), f))
+    // the shared pre-per-process layout, $tmpdir/graft_warehouse/<sf key>/
+    // fb_jsonl, with its commit marker over rows no build ever wrote
+    val key = sfCopy.toString.replaceAll("[^A-Za-z0-9._-]", "_")
+    val stale = Paths.get(System.getProperty("java.io.tmpdir"),
+      "graft_warehouse", key, "fb_jsonl")
+    try {
+      Files.createDirectories(stale.resolve("date=1999-01-01"))
+      Files.writeString(stale.resolve("date=1999-01-01").resolve("part-0.txt"),
+        """{"ad_id":"stale-row","date_start":"1999-01-01"}""" + "\n")
+      Files.createFile(stale.resolve("_GRAFT_OK_v1"))
+      val path = etl.FbInsightsSource.jsonlPath(spark, sfCopy.toString)
+      assert(Paths.get(path).toAbsolutePath.normalize != stale.toAbsolutePath.normalize)
+      val lines = spark.read.text(path).collect().map(_.getString(0))
+      assert(!lines.exists(_.contains("stale-row")), "stale rows were served")
+      val fresh = spark.read.text(etl.FbInsightsSource.jsonlPath(spark, sf)).count()
+      assert(lines.length.toLong === fresh)
+    } finally {
+      graft.streaming.Drain.deleteRecursively(stale.getParent)
+      graft.streaming.Drain.deleteRecursively(sfCopy)
     }
   }
 
