@@ -1,0 +1,63 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** Dev main on the engine's one session ([[Session.local]]).
+  *
+  * Usage: runMain graft.Dev <command> [args ...]
+  *  - `smoke`: the driver's entry() check (rows > 0).
+  *  - `run <sfDir> <query>`: one registry query, shown with its row count
+  *    and full stack traces.
+  *  - `plan <sfDir> [query ...]`: formatted physical plans.
+  *  - `sql <statement> ...`: SQL with the graft functions registered.
+  *  - `hot <sfDir> [query ...]`: each query's first and second run timed
+  *    after the fb_stat load (the second is the bench's warm number).
+  *    Jobs, stages and task time per query come from `etlbench --trace 1`.
+  *
+  * `plan` and `hot` take every registry query when none is named.
+  */
+object Dev {
+  def main(args: Array[String]): Unit = {
+    def named(rest: Seq[String]): Seq[String] =
+      if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted
+    val cmd: SparkSession => Unit = args.toSeq match {
+      case Seq("smoke") => spark =>
+        val df = SparkEntry.entry(spark)
+        val n = df.count()
+        df.show(5, truncate = false)
+        println(s"[smoke] entry rows=$n " + (if (n > 0) "OK" else "EMPTY"))
+      case Seq("run", sfDir, name) => spark =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.show(20, truncate = false)
+        println(s"[run] $name rows=${df.count()}")
+      case "plan" +: sfDir +: rest => spark =>
+        named(rest).foreach { n =>
+          println(s"\n===================== $n =====================")
+          try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+          catch { case e: Throwable => println(s"(failed: ${e.getMessage})") }
+        }
+      case "sql" +: statements => spark =>
+        functions.GraftFunctions.register(spark)
+        statements.foreach(sql => spark.sql(sql).show(50, truncate = false))
+      case "hot" +: sfDir +: rest => spark =>
+        queries.EtlQueries.fbStatTable(spark, sfDir).head(1)
+        named(rest).foreach { n =>
+          val fn = SparkEntry.queries(n)
+          def timed(): Double = {
+            val t0 = System.nanoTime()
+            fn(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
+          }
+          val first = timed()
+          val second = timed()
+          println(f"[hot] $n%-18s first=$first%7.2fs  second=$second%7.2fs")
+        }
+      case _ =>
+        System.err.println("usage: graft.Dev smoke | run <sfDir> <query> | " +
+          "plan <sfDir> [query ...] | sql <statement> ... | hot <sfDir> [query ...]")
+        sys.exit(2)
+    }
+    val spark = Session.local()
+    try cmd(spark) finally spark.stop()
+  }
+}

@@ -25,10 +25,25 @@ object Tables {
     * normalize with the schema-keyed helpers below, so either vintage
     * produces identical query results.
     */
-  def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    load(spark, sfDir, "events")
-  }
+  def eventsRaw(spark: SparkSession, sfDir: String): DataFrame =
+    Session.in(spark, load(rawReader(spark), sfDir, "events"))
+
+  /** A streaming scan of raw events files under `dir` (the fixture, byte
+    * copies of it, or files staged from [[eventsRaw]]) with `rawSchema`.
+    */
+  def eventsRawStream(spark: SparkSession, rawSchema: StructType, dir: String,
+      options: (String, String)*): DataFrame =
+    Session.in(spark, rawReader(spark).readStream.schema(rawSchema)
+      .options(options.toMap).parquet(dir))
+
+  /** The session raw events files are read through: a child with the
+    * legacy nanos-as-long conf. A file scan reads with the conf of the
+    * session that created it, so frames read here keep reading nanos
+    * as int64 after they are rebound to the caller, whose own conf is
+    * never written.
+    */
+  private def rawReader(spark: SparkSession): SparkSession =
+    Session.pinned(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** SQL expr turning the raw `ts` into epoch MICROSECONDS as a long.
     * Nanos-vintage fixtures convert with *integer* division (`div`) — a

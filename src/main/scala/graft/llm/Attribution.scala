@@ -297,8 +297,8 @@ object Attribution {
     val work = graft.etl.Scratch.workDir("stream_attrib_")
     val srcDir = Events.chunkedEventStaging(spark, sfDir)
     val rawSchema = Tables.eventsRaw(spark, sfDir).schema
-    val ds = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
+    val ds = Tables.eventsRawStream(spark, rawSchema, srcDir.toString,
+        "maxFilesPerTrigger" -> "1")
       .selectExpr(
         // coalesce the primitive-typed fields: the tuple encoder's
         // AssertNotNull would crash the whole query on a null value /

@@ -152,7 +152,7 @@ object Events {
     // EventTimeWatermark node, which would drop the sentinel before it
     // ever advances the watermark; predicates referencing the watermark
     // attribute stay above it.
-    val stream = spark.readStream.schema(rawSchema).parquet(srcDir.toString)
+    val stream = Tables.eventsRawStream(spark, rawSchema, srcDir.toString)
       .withColumn("ts", expr(Tables.tsTimestampExpr(rawSchema)))
       .withWatermark("ts", "1 hour")
       .filter(col("ts") <= timestamp_micros(lit(maxUs)))
@@ -265,8 +265,8 @@ object Events {
     val work = graft.etl.Scratch.workDir("stream_sessions_inc_")
     val srcDir = chunkedEventStaging(spark, sfDir)
 
-    val ds = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
+    val ds = Tables.eventsRawStream(spark, rawSchema, srcDir.toString,
+        "maxFilesPerTrigger" -> "1")
       .selectExpr("user_id", Tables.tsMicrosExpr(rawSchema) + " AS us",
         Tables.tsTimestampExpr(rawSchema) + " AS ts")
       .withWatermark("ts", "1 hour")
@@ -332,8 +332,8 @@ object Events {
     val gapMicros = 30L * 60 * 1000 * 1000
     val rawSchema = Tables.eventsRaw(spark, sfDir).schema
     val work = graft.etl.Scratch.workDir("stream_sessions_")
-    val ds = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+    val ds = Tables.eventsRawStream(spark, rawSchema, sfDir,
+        "pathGlobFilter" -> "events.parquet")
       .selectExpr("user_id", Tables.tsMicrosExpr(rawSchema) + " AS us")
       .as[(Long, Long)]
     val perSession = ds.groupByKey(_._1)

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** Graph operators over the near-duplicate pair graph (SURVEY.md §2.7
   * dedup family): pairwise near-dup detection (x_dedup_minhash) finds
   * EDGES, but deduplication acts on CLUSTERS — transitively-closed
@@ -48,20 +50,22 @@ object Graph {
   /** Run `body` — a dim-graph loop whose frames are ≤|V|² rows BY
     * CONSTRUCTION at any fact-table scale (V = the aggregated dim
     * entities, e.g. ≤25 nations; the 100 TB work is the one edge-build
-    * aggregation, whose map side is split-driven and unaffected) — with
-    * the loop execution conf: shuffle partitions pinned at the fixture
-    * floor and AQE off. Each of a loop's per-round exchanges otherwise
-    * costs one adaptively re-planned stage JOB (measured 20–150 ms of
-    * pure scheduling over sub-KB frames) plus a session-wide task flood;
-    * neither can pay off on a frame that is dim-bounded by construction,
-    * at ANY scale — this is a property of the operator, not of the local
-    * fixture. NOT applied to the doc-scale loops (connectedComponents,
-    * shortestPathsOf), whose state grows with the corpus and keeps AQE.
-    * Session confs are restored after `body`; the returned frame's lazy
-    * tail (nation joins, orderBy) executes under session confs as before.
+    * aggregation, whose map side is split-driven and unaffected) — in a
+    * [[graft.Session.pinned]] child with the loop execution conf: shuffle
+    * partitions pinned at the fixture floor and AQE off. Each of a loop's
+    * per-round exchanges otherwise costs one adaptively re-planned stage
+    * JOB (measured 20–150 ms of pure scheduling over sub-KB frames) plus
+    * a session-wide task flood; neither can pay off on a frame that is
+    * dim-bounded by construction, at ANY scale — this is a property of
+    * the operator, not of the local fixture. NOT applied to the
+    * doc-scale loops (connectedComponents, shortestPathsOf), whose state
+    * grows with the corpus and keeps AQE. `body` rebinds the frames it
+    * acts on into the child ([[graft.Session.in]]); its result is rebound
+    * to `spark`, so the returned frame's lazy tail (nation joins,
+    * orderBy) executes under the caller's conf.
     */
-  private def withDimLoopConf[T](spark: SparkSession)(body: => T): T = {
-    val pins = Seq(
+  private def dimLoop(spark: SparkSession)(body: SparkSession => DataFrame): DataFrame =
+    Session.in(spark, body(Session.pinned(spark,
       "spark.sql.shuffle.partitions" -> graft.streaming.Drain.PartitionFloor.toString,
       "spark.sql.adaptive.enabled" -> "false",
       // no auto-broadcast inside the loop: each auto-chosen broadcast of a
@@ -69,14 +73,7 @@ object Graph {
       // pure scheduling), and a fixed-round loop pays it per round — the
       // 4-partition shuffle joins pipeline all rounds inside ONE sealed
       // job instead (explicit broadcast() hints are unaffected)
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pins.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")))
 
   /** Iterative minimum-label propagation WITH pointer jumping: every node
     * starts labeled with its own id; each round every node takes the min
@@ -315,13 +312,14 @@ object Graph {
     * — they are loop invariants.
     */
   def pageRankOf(edges: DataFrame, iterations: Int = PrIterations): DataFrame =
-      withDimLoopConf(edges.sparkSession) {
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().cache()
-    val outw = edges.groupBy("src").agg(sum("w").cast("double").as("outw"))
+      dimLoop(edges.sparkSession) { s =>
+    val e = Session.in(s, edges)
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct().cache()
+    val outw = e.groupBy("src").agg(sum("w").cast("double").as("outw"))
     // edge frame pre-joined with its out-weight: r(i)·w/outw(i) needs only
     // the current ranks joined in per round
-    val ew = edges.join(outw, "src")
+    val ew = e.join(outw, "src")
       .select(col("src"), col("dst"), (col("w").cast("double")).as("w"), col("outw"))
       .cache()
     ew.count() // materialize invariants BEFORE the per-round checkpoints
@@ -353,7 +351,7 @@ object Graph {
     ew.unpersist()
     nodes.unpersist()
     out
-  } // withDimLoopConf
+  }
 
   /** X-PAGERANK: rank the nation trade graph. Output carries the rank
     * (round 6 — double summation order is the only engine-dependent bit)
@@ -493,11 +491,12 @@ object Graph {
     * ([[connectedComponents]]' discipline).
     */
   def labelPropOf(edges: DataFrame, rounds: Int = LpRounds): DataFrame =
-      withDimLoopConf(edges.sparkSession) {
+      dimLoop(edges.sparkSession) { s =>
+    val e = Session.in(s, edges)
     import org.apache.spark.sql.expressions.Window
-    val und = edges.filter(col("src") =!= col("dst"))
+    val und = e.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"), col("w"))
-      .union(edges.filter(col("src") =!= col("dst"))
+      .union(e.filter(col("src") =!= col("dst"))
         .select(col("dst").as("src"), col("src").as("dst"), col("w")))
       .groupBy("src", "dst").agg(sum("w").as("w"))
       .cache()
@@ -523,7 +522,7 @@ object Graph {
     val out = cuts.seal(labels)
     und.unpersist()
     out
-  } // withDimLoopConf
+  }
 
   /** X-LABELPROP: communities of the nation trade graph — the symmetrized
     * [[tradeEdges]] weight matrix (fact-sized work is the ONE aggregated
@@ -620,18 +619,19 @@ object Graph {
     * released by the caller afterwards).
     */
   def kcoreOf(und: DataFrame, k: Int = KcoreK, rounds: Int = KcoreRounds): DataFrame =
-      withDimLoopConf(und.sparkSession) {
-    und.count() // materialize the edge cache before the round loop
+      dimLoop(und.sparkSession) { s =>
+    val u = Session.in(s, und)
+    u.count() // materialize the edge cache before the round loop
     // fixed rounds, no convergence probe → lazy cuts, ONE final job
     // (each round's `alive` is consumed twice by the next round's two
     // semi-joins; the cut makes both read one persisted copy)
     val cuts = new LazyCuts
-    var alive = cuts.cut(und.select(col("a").as("id")).distinct())
+    var alive = cuts.cut(u.select(col("a").as("id")).distinct())
     // b-side semi-join FIRST, a-side LAST (guide §2.4): the last join
     // leaves the frame hash-partitioned by `a`, which the degree groupBy
     // reuses — one exchange per round removed vs the a-then-b order
     (1 to rounds).foreach { _ =>
-      val act = und
+      val act = u
         .join(alive.select(col("id").as("b")), Seq("b"), "left_semi")
         .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
       alive = cuts.cut(
@@ -639,11 +639,11 @@ object Graph {
           .filter(col("deg") >= k)
           .select(col("a").as("id")))
     }
-    cuts.seal(und
+    cuts.seal(u
       .join(alive.select(col("id").as("b")), Seq("b"), "left_semi")
       .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
       .groupBy("a").agg(count(lit(1)).as("core_degree")))
-  } // withDimLoopConf
+  }
 
   def kcore(spark: SparkSession, sfDir: String): DataFrame = {
     // shared memoized cache — NOT unpersisted here; linkPred reuses it
@@ -742,19 +742,20 @@ object Graph {
     */
   private[graft] def multiSourceBfs(
       und: DataFrame, rounds: Int = ClosenessRounds): DataFrame =
-      withDimLoopConf(und.sparkSession) {
+      dimLoop(und.sparkSession) { s =>
+    val u = Session.in(s, und)
     // fixed rounds, no convergence probe → lazy cuts, ONE final job.
     // Each round keeps two frames alive (settled dist + last frontier),
     // both cut: dist is consumed by the anti-join AND the union, the
     // frontier by the next relax — the cuts make every reference read
     // one persisted copy inside the single sealing job.
     val cuts = new LazyCuts
-    val seed = cuts.cut(und.select(col("a")).distinct()
+    val seed = cuts.cut(u.select(col("a")).distinct()
       .select(col("a").as("src"), col("a").as("id"), lit(0L).as("d")))
     var dist = seed
     var frontier = seed
     (1 to rounds).foreach { _ =>
-      val relax = frontier.join(und, frontier("id") === und("a"))
+      val relax = frontier.join(u, frontier("id") === u("a"))
         .select(col("src"), col("b").as("id"), (col("d") + 1L).as("d"))
       // min-agg the frontier-sized delta, keep only first discoveries
       val discovered = cuts.cut(relax.groupBy("src", "id").agg(min("d").as("d"))
@@ -767,7 +768,7 @@ object Graph {
     // (including the final frontier, which has no further consumer) is
     // released — only the returned dist pins storage memory
     cuts.seal(dist)
-  } // withDimLoopConf
+  }
 
   private val bfsCache = new graft.Memo
 
@@ -833,21 +834,22 @@ object Graph {
     // the joined (src,id,d,σ) table materializes ONE job, releases every
     // intermediate round, and its three downstream readers (a, b, st)
     // read one persisted copy instead of tripling the subtree.
-    val ds = withDimLoopConf(spark) {
+    val ds = dimLoop(spark) { s =>
+      val (d, u) = (Session.in(s, dist), Session.in(s, und))
       val cuts = new LazyCuts
-      var sig = cuts.cut(dist.filter(col("d") === 0L)
+      var sig = cuts.cut(d.filter(col("d") === 0L)
         .select(col("src"), col("id"), lit(1L).as("sigma")))
       var all = sig
       (1 to ClosenessRounds).foreach { i =>
-        val next = cuts.cut(sig.join(und, sig("id") === und("a"))
+        val next = cuts.cut(sig.join(u, sig("id") === u("a"))
           .select(col("src"), col("b").as("id"), col("sigma"))
-          .join(dist.filter(col("d") === i.toLong).select("src", "id"),
+          .join(d.filter(col("d") === i.toLong).select("src", "id"),
             Seq("src", "id"), "left_semi")
           .groupBy("src", "id").agg(sum("sigma").as("sigma")))
         all = cuts.cut(all.unionAll(next))
         sig = next
       }
-      cuts.seal(dist.join(all, Seq("src", "id")))
+      cuts.seal(d.join(all, Seq("src", "id")))
     }
     val a = ds.filter(col("d") > 0)
       .select(col("src").as("s"), col("id").as("v"), col("d").as("da"),
@@ -895,15 +897,15 @@ object Graph {
     * internal-weight join); everything after is ≤|V|²-row arithmetic.
     */
   def modularity(spark: SparkSession, sfDir: String): DataFrame =
-      withDimLoopConf(spark) {
-    val e = tradeEdges(spark, sfDir)
+      dimLoop(spark) { s =>
+    val e = tradeEdges(s, sfDir)
     val und = e.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"), col("w"))
       .union(e.filter(col("src") =!= col("dst"))
         .select(col("dst").as("src"), col("src").as("dst"), col("w")))
       .groupBy("src", "dst").agg(sum("w").as("w"))
       .cache()
-    val labels = labelTable(spark, sfDir).select(col("id"), col("lab"))
+    val labels = Session.in(s, labelTable(spark, sfDir)).select(col("id"), col("lab"))
     val wtot = und.agg(sum("w").as("W"))
     val degs = und.groupBy(col("src").as("id")).agg(sum("w").as("k"))
     val dc = labels.join(degs, Seq("id"))
@@ -925,5 +927,5 @@ object Graph {
       .localCheckpoint(true) // materialize before releasing the edge cache
     und.unpersist()
     out
-  } // withDimLoopConf
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Session, Tables}
 
 /** Streaming ingestion operators beyond windowed aggregation (SURVEY.md
   * §2.7 streaming family): at-least-once dedup and stream-stream joins —
@@ -38,8 +38,8 @@ object StreamingOps {
 
   /** A streaming scan of the staged landing zone with event-time `ts`. */
   private def eventStream(spark: SparkSession, sfDir: String, srcDir: java.nio.file.Path): DataFrame = {
-    val rawSchema = Tables.eventsRaw(spark, sfDir).schema // also sets nanosAsLong
-    spark.readStream.schema(rawSchema).parquet(srcDir.toString)
+    val rawSchema = Tables.eventsRaw(spark, sfDir).schema
+    Tables.eventsRawStream(spark, rawSchema, srcDir.toString)
       .withColumn("ts", expr(Tables.tsTimestampExpr(rawSchema)))
   }
 
@@ -186,8 +186,8 @@ object StreamingOps {
       graft.etl.Scratch.stageFile(raw.filter(
         expr(Tables.tsMicrosExpr(rawSchema)) < lateCutUs), srcDir.resolve("batch3.parquet"), 3)
     }
-    val stream = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
+    val stream = Tables.eventsRawStream(spark, rawSchema, srcDir.toString,
+        "maxFilesPerTrigger" -> "1")
       .withColumn("ts", expr(Tables.tsTimestampExpr(rawSchema)))
       .withWatermark("ts", "1 hour")
       // sentinel dropped by a predicate on the WATERMARK column — a
@@ -253,7 +253,7 @@ object StreamingOps {
         .unionAll(Events.watermarkSentinel(spark, rawSchema, maxUs + 20 * dayUs, -2L, "purchase"))
         .coalesce(1).write.mode("append").parquet(srcDirS)
     }
-    def side(typ: String) = spark.readStream.schema(rawSchema).parquet(srcDir.toString)
+    def side(typ: String) = Tables.eventsRawStream(spark, rawSchema, srcDir.toString)
       .withColumn("ts", expr(Tables.tsTimestampExpr(rawSchema)))
       .filter(col("event_type") === typ)
     val signups = side("signup")
@@ -322,8 +322,8 @@ object StreamingOps {
     val work = graft.etl.Scratch.workDir("stream_anomaly_")
     val srcDir = Events.chunkedEventStaging(spark, sfDir)
     val rawSchema = Tables.eventsRaw(spark, sfDir).schema
-    val ds = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
+    val ds = Tables.eventsRawStream(spark, rawSchema, srcDir.toString,
+        "maxFilesPerTrigger" -> "1")
       .selectExpr("event_type",
         Tables.tsMicrosExpr(rawSchema) + " AS us",
         "coalesce(event_id, 0L) AS event_id")
@@ -410,8 +410,8 @@ object StreamingOps {
     val work = graft.etl.Scratch.workDir("stream_kmv_")
     val srcDir = Events.chunkedEventStaging(spark, sfDir)
     val rawSchema = Tables.eventsRaw(spark, sfDir).schema
-    val ds = spark.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
+    val ds = Tables.eventsRawStream(spark, rawSchema, srcDir.toString,
+        "maxFilesPerTrigger" -> "1")
       .filter(col("event_type") =!= "__wm__")
       .select(col("event_type"),
         graft.functions.PolyHash.poly_hash(col("user_id").cast("string"),
@@ -511,15 +511,18 @@ object StreamingOps {
     val sigTbl = spark.read.parquet(root.resolve("sigs").toString).cache()
     // per-batch shuffle sizing: the candidate-pair distinct shuffles
     // inside every micro-batch — count derived from the staged chunk
-    // volume (fixture floor 4, scales up with batch bytes)
-    try graft.streaming.Drain.withBatchShuffle(spark,
+    // volume (fixture floor 4, scales up with batch bytes), pinned on the
+    // session the stream starts from
+    val ss = graft.streaming.Drain.batchSession(spark,
       graft.streaming.Drain.adaptivePartitions(
-        root.resolve("chunks"), perTriggerFiles = Some(1))) {
-      val q = stream.writeStream
+        root.resolve("chunks"), perTriggerFiles = Some(1)))
+    val (idxS, sigTblS) = (Session.in(ss, idx), Session.in(ss, sigTbl))
+    try {
+      val q = Session.in(ss, stream).writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // sign + band ONLY the batch (no .cache(): micro-batch frames are
           // single-consumer here and a per-batch cache entry would leak)
-          nearDupBatchPairs(nearDupBatchSigs(batch), idx, sigTbl)
+          nearDupBatchPairs(nearDupBatchSigs(batch), idxS, sigTblS)
             .write.mode("append").parquet(outDir)
         }
         .option("checkpointLocation", work.resolve("ckpt").toString)
@@ -864,23 +867,20 @@ object StreamingOps {
     // inside the micro-batch, where the session's core-count partitioning
     // is pure per-task overhead at batch volume — count derived from the
     // staged chunk volume (fixture floor 4; scales up with batch bytes,
-    // guide §2.1).
-    try graft.streaming.Drain.withBatchShuffle(spark,
+    // guide §2.1), pinned on the session the stream starts from.
+    val ss = graft.streaming.Drain.batchSession(spark,
       graft.streaming.Drain.adaptivePartitions(
-        root.resolve("chunks"), perTriggerFiles = Some(1))) {
-    val q = stream.writeStream
+        root.resolve("chunks"), perTriggerFiles = Some(1)))
+    val Seq(baseTriplesS, baseBandsS, baseSigsS) =
+      Seq(baseTriples, baseBands, baseSigs).map(Session.in(ss, _))
+    try {
+    val q = Session.in(ss, stream).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // each stage frame below is consumed by several actions (ledger
         // counts, the stage-3 banding, the cross-batch history): persist
         // the batch-sized frames once per batch, or every action
         // re-executes the whole quality+hash chain — measured, the
         // uncached form re-ran it ~12× per micro-batch
-        def tmark(label: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime()
-          f
-          if (sys.env.contains("GRAFT_PIPE_DEBUG"))
-            println(f"[pipe-debug] $label%-12s ${(System.nanoTime() - t0) / 1e9}%6.3fs")
-        }
         // stage 1: row-local quality gate (materialized by stage 2's
         // first consumer — no dedicated count action needed anymore)
         val s1 = Pipeline.qualityOf(Pipeline.enrichedOf(batch))
@@ -891,7 +891,7 @@ object StreamingOps {
         // the history side stays un-shuffled: probe it with the
         // broadcast batch key set, then flag batch rows off the (small)
         // hit list
-        val histT = (baseTriples +: histTriL.toSeq).reduce(_ unionByName _)
+        val histT = (baseTriplesS +: histTriL.toSeq).reduce(_ unionByName _)
         val keys = Seq("eh64", "eh31", "n_chars")
         // no inner distinct on the probe keys: in-batch exact dups are
         // rare, hitKeys re-distincts after the probe, and the distinct
@@ -914,8 +914,8 @@ object StreamingOps {
         // stage 3: near-dup vs base index + survivor history + same batch
         val sigs2 = nearDupBatchSigs(s2).persist()
         val bands2 = Dedup.bandsOf(sigs2).persist()
-        val histBands = (baseBands +: histBandsL.toSeq).reduce(_ unionByName _)
-        val histSigs = (baseSigs +: histSigsL.toSeq).reduce(_ unionByName _)
+        val histBands = (baseBandsS +: histBandsL.toSeq).reduce(_ unionByName _)
+        val histSigs = (baseSigsS +: histSigsL.toSeq).reduce(_ unionByName _)
         // no per-side distinct: the union below re-distincts anyway, so
         // the inner ones were two pure-overhead shuffles per micro-batch
         // (multi-band collisions only duplicate batch-sized pair rows)
@@ -947,28 +947,24 @@ object StreamingOps {
         // bands2 ⊆ sigs2 ⊆ s2) and is distinct, so the stage-3 counts
         // are exact differences — no dropNear broadcast build and no
         // flag-join job the previous separate-actions form paid.
-        var nIn = 0L; var nS1 = 0L
-        var nS2 = 0L; var nS3 = 0L; var sumAcc = 0L
-        tmark("acc") {
-          val aggIn = Pipeline.enrichedOf(batch)
-            .agg(count(lit(1)).as("a"),
-              count(when(Pipeline.qualityPred, 1)).as("b"))
-            .select(lit(0L).as("k"), col("a"), col("b"))
-          val aggS2 = s2
-            .agg(count(lit(1)).as("a"),
-              coalesce(sum("doc_id"), lit(0L)).as("b"))
-            .select(lit(1L).as("k"), col("a"), col("b"))
-          val aggDrop = dropNear
-            .agg(count(lit(1)).as("a"),
-              coalesce(sum("doc_id"), lit(0L)).as("b"))
-            .select(lit(2L).as("k"), col("a"), col("b"))
-          val rows = aggIn.unionAll(aggS2).unionAll(aggDrop).collect()
-            .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-          nIn = rows(0L)._1; nS1 = rows(0L)._2
-          val (s2n, s2sum) = rows(1L)
-          val (dropN, dropSum) = rows(2L)
-          nS2 = s2n; nS3 = s2n - dropN; sumAcc = s2sum - dropSum
-        }
+        val aggIn = Pipeline.enrichedOf(batch)
+          .agg(count(lit(1)).as("a"),
+            count(when(Pipeline.qualityPred, 1)).as("b"))
+          .select(lit(0L).as("k"), col("a"), col("b"))
+        val aggS2 = s2
+          .agg(count(lit(1)).as("a"),
+            coalesce(sum("doc_id"), lit(0L)).as("b"))
+          .select(lit(1L).as("k"), col("a"), col("b"))
+        val aggDrop = dropNear
+          .agg(count(lit(1)).as("a"),
+            coalesce(sum("doc_id"), lit(0L)).as("b"))
+          .select(lit(2L).as("k"), col("a"), col("b"))
+        val rows = aggIn.unionAll(aggS2).unionAll(aggDrop).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        val (nIn, nS1) = rows(0L)
+        val (nS2, s2sum) = rows(1L)
+        val (dropN, dropSum) = rows(2L)
+        val (nS3, sumAcc) = (nS2 - dropN, s2sum - dropSum)
 
         // ledger row + history ingest (all deterministic per doc:
         // at-least-once retries contribute duplicate-insensitive rows)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared drain-a-stream-into-parquet machinery for the synchronous
   * streaming queries (streamingDaily, streamingSessions, qStreamLoad):
@@ -68,54 +68,43 @@ object Drain {
     */
   val PartitionFloor = 4
 
-  /** [[withShufflePartitions]] plus, when the derived count sits at the
-    * fixture floor (batch ≤ ~512 MB), adaptive query execution disabled
-    * for the drain's per-batch bodies: AQE materializes EVERY exchange of
-    * every per-batch action as its own scheduled job so it can
-    * re-optimize between stages (measured on the curation funnel: ~23
-    * stage-jobs per micro-batch, 20–150 ms each — ~1.3 s/drain of pure
-    * scheduling), and below the floor there is nothing to re-optimize —
-    * no partitions to coalesce below the floor, no skew to split in
-    * single-digit-task stages. At production batch volumes (count above
-    * the floor) AQE stays ON — coalescing and skew handling earn their
-    * per-stage jobs there. Session confs are restored after `body`.
+  /** The session a `foreachBatch` drain starts its stream from: shuffle
+    * partitions pinned to `n` (a micro-batch query snapshots its session's
+    * conf at `start()`, so this is the per-batch count) and, when `n` sits
+    * at the fixture floor (batch ≤ ~512 MB), adaptive query execution off
+    * for the per-batch bodies: AQE materializes EVERY exchange of every
+    * per-batch action as its own scheduled job so it can re-optimize
+    * between stages (measured on the curation funnel: ~23 stage-jobs per
+    * micro-batch, 20–150 ms each — ~1.3 s/drain of pure scheduling), and
+    * below the floor there is nothing to re-optimize — no partitions to
+    * coalesce below the floor, no skew to split in single-digit-task
+    * stages. At production batch volumes (count above the floor) AQE
+    * stays ON — coalescing and skew handling earn their per-stage jobs
+    * there. The pins live on a [[graft.Session.pinned]] child; the
+    * caller's session is never written.
     */
-  def withBatchShuffle[T](spark: org.apache.spark.sql.SparkSession, n: Int)(
-      body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val saved = spark.conf.getOption(aqeKey)
-    if (n <= PartitionFloor) spark.conf.set(aqeKey, "false")
-    try withShufflePartitions(spark, n)(body)
-    finally if (n <= PartitionFloor) saved match {
-      case Some(v) => spark.conf.set(aqeKey, v)
-      case None => spark.conf.unset(aqeKey)
-    }
+  def batchSession(spark: SparkSession, n: Int): SparkSession =
+    streamSession(spark, Seq(ShufflePartitions -> n.toString) ++
+      (if (n <= PartitionFloor) Seq("spark.sql.adaptive.enabled" -> "false") else Nil): _*)
+
+  /** A [[graft.Session.pinned]] child to start a stream from, with the
+    * caller's streaming-query listeners registered on it too: a listener
+    * only hears queries started from its own session, and a caller that
+    * watches its session's streams must still see this drain's progress.
+    */
+  private def streamSession(spark: SparkSession, pins: (String, String)*): SparkSession = {
+    val child = graft.Session.pinned(spark, pins: _*)
+    spark.streams.listListeners().foreach(child.streams.addListener)
+    child
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the prior value after. A micro-batch query snapshots the
-    * session conf at `start()`, so the custom `foreachBatch` drains use
-    * this exactly the way [[run]]'s override works for the file-sink
-    * drains: the Drain-measured 4 absorbs every per-batch shuffle at
-    * fixture volume, and the same knob scales UP with volume on a real
-    * cluster (see the [[run]] scaladoc for the measurement).
-    */
-  def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession, n: Int)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
   /** Low-level: run `stream` into `outDir` with `ckptDir`, synchronously.
     *
     * `shufflePartitions` sizes the stateful operators' state-store count
     * for the stream's data volume (a micro-batch query pins its
-    * partition count at first start from the session conf): every
+    * partition count at first start from its session's conf): every
     * stateful partition costs checkpointed store files PER MICRO-BATCH
     * regardless of how little state it holds, so an oversized count is
     * pure fixed overhead — measured here, a stream-stream join over the
@@ -125,47 +114,48 @@ object Drain {
     * results (most of these drains key state on event_type — 5 keys —
     * or a user hash whose fixture volume 4 stores absorb). On a real
     * cluster the same knob scales UP with key cardinality and volume.
-    * The session conf is restored after the drain; batch queries in the
-    * session never see the override.
+    * The count is pinned on a [[graft.Session.pinned]] child the stream
+    * starts from; the caller's session, and the batch queries in it,
+    * never see it.
+    *
+    * The state store stays the default HDFS-backed provider. Measured
+    * (sf0.1, local[32], idle box) over the six stateful drains: 19.1 s
+    * with it, 21.9 s with RocksDB, 19.3 s with RocksDB plus changelog
+    * checkpointing. At fixture scale every store holds a few KB, so the
+    * in-memory map and tiny snapshot files are near-free, while RocksDB
+    * pays a native open/flush/compact cycle per partition per
+    * micro-batch. RocksDB becomes the right choice only when
+    * per-partition state outgrows executor heap.
     *
     * Returns [[DrainStats]] summed across the drained micro-batches
     * (most callers ignore it; x_stream_late asserts on it).
     */
   def run(stream: DataFrame, outDir: String, ckptDir: String,
           shufflePartitions: Option[Int] = None): DrainStats = {
-    val spark = stream.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.getOption(key)
-    shufflePartitions.foreach(n => spark.conf.set(key, n.toString))
+    val spark = shufflePartitions.fold(stream.sparkSession)(n =>
+      streamSession(stream.sparkSession, ShufflePartitions -> n.toString))
+    val q = graft.Session.in(spark, stream).writeStream
+      .outputMode("append")
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", ckptDir)
+      .start()
     try {
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      try {
-        q.processAllAvailable()
-        val ps = q.recentProgress.toSeq
-        // recentProgress is a RING (spark.sql.streaming.numRecentProgressUpdates,
-        // default 100): a drain with more micro-batches than the ring
-        // would silently UNDERCOUNT inputRows — fail loudly instead
-        val cap = spark.conf.get(
-          "spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-        require(ps.length < cap,
-          s"drain produced >= $cap micro-batches; recentProgress ring " +
-            "overflowed and DrainStats would undercount — raise " +
-            "spark.sql.streaming.numRecentProgressUpdates for this drain")
-        DrainStats(
-          ps.map(_.numInputRows).sum,
-          ps.flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum)
-      } finally q.stop()
-    } finally if (shufflePartitions.isDefined) {
-      saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+      q.processAllAvailable()
+      val ps = q.recentProgress.toSeq
+      // recentProgress is a RING (spark.sql.streaming.numRecentProgressUpdates,
+      // default 100): a drain with more micro-batches than the ring
+      // would silently UNDERCOUNT inputRows — fail loudly instead
+      val cap = spark.conf.get(
+        "spark.sql.streaming.numRecentProgressUpdates", "100").toInt
+      require(ps.length < cap,
+        s"drain produced >= $cap micro-batches; recentProgress ring " +
+          "overflowed and DrainStats would undercount — raise " +
+          "spark.sql.streaming.numRecentProgressUpdates for this drain")
+      DrainStats(
+        ps.map(_.numInputRows).sum,
+        ps.flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum)
+    } finally q.stop()
   }
 
   /** Work-dir variant: drain into `work/out`, then immediately delete the

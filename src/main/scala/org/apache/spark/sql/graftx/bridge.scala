@@ -4,7 +4,8 @@
  * extension library to expose a custom Catalyst Expression as a Column is
  * org.apache.spark.sql.classic.ExpressionUtils, which is private[sql] —
  * hence this one-file package bridge (the same pattern public Spark
- * extension libraries use). No other internals are touched.
+ * extension libraries use). The session clone behind `graft.Session` is
+ * private[sql] for the same reason. No other internals are touched.
  */
 package org.apache.spark.sql.graftx
 
@@ -24,6 +25,14 @@ object ColumnBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A child session (classic `cloneSession` is private[sql]): it shares
+    * the SparkContext, the cache manager and the catalogs, starts from a
+    * copy of the parent's conf, temp views and functions, and owns its own
+    * SQLConf from then on.
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** The exact persisted RDD behind a `localCheckpoint`ed Dataset (its
     * analyzed plan is a LogicalRDD wrapping the checkpoint blocks).

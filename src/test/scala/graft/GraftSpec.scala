@@ -14,12 +14,7 @@ import graft.llm.{Dedup, Multimodal, Similarity}
   */
 class GraftSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   val sf = "/root/testdata/sf0.001"
 
@@ -2921,6 +2916,44 @@ class GraftSpec extends AnyFunSuite {
     assert(out.collect().length === df.collect().length)
   }
 
+  test("GraftExtensions: the injected optimizer rule rewrites a windowed top-k on its own") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    import org.apache.spark.sql.expressions.{Window => W}
+    // a fresh SparkSessionExtensions: builder().withExtensions(...)
+    // .getOrCreate() hands back the shared session, built without them
+    val rules = scala.collection.mutable.ArrayBuffer.empty[SparkSession => Rule[LogicalPlan]]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectOptimizerRule(builder: SparkSession => Rule[LogicalPlan]): Unit = {
+        rules += builder
+        super.injectOptimizerRule(builder)
+      }
+    }
+    new graft.functions.GraftExtensions()(ext)
+    val windowed = queries.EtlQueries.fbStatTable(spark, sf)
+      .groupBy("date", "campaign_id").agg(sum("clicks").as("c"))
+      .withColumn("rn", row_number().over(
+        W.partitionBy("date").orderBy(desc("c"), asc("campaign_id"))))
+      .filter(col("rn") <= 3)
+    val analyzed = windowed.queryExecution.analyzed
+    val optimized = rules.map(_(spark)).foldLeft(analyzed)((p, r) => r(p))
+    assert(optimized.exists(_.isInstanceOf[plans.TopKPerKeyNode]),
+      s"injected rule did not fire:\n${analyzed.toString.take(2000)}")
+  }
+
+  test("TopKPerKey: k at or above the group size keeps every row; k=1 keeps one row per key") {
+    val d = queries.EtlQueries.fbStatTable(spark, sf)
+      .groupBy("date", "campaign_id").agg(sum("clicks").as("c"))
+    val order = Seq(("c", true), ("campaign_id", false))
+    val rows = d.count()
+    val largest = d.groupBy("date").count().agg(max("count")).head().getLong(0).toInt
+    assert(plans.TopKPerKey(d, Seq("date"), order, largest).count() === rows)
+    assert(plans.TopKPerKey(d, Seq("date"), order, 1000).count() === rows)
+    val one = plans.TopKPerKey(d, Seq("date"), order, 1)
+    assert(one.count() === d.select("date").distinct().count())
+    assert(one.groupBy("date").count().filter(col("count") =!= 1L).isEmpty)
+  }
+
   test("q_join_fx: rates side is broadcast, no shuffle join") {
     val df = queries.EtlQueries.qJoinFx(spark, sf)
     val plan = df.queryExecution.executedPlan.toString
@@ -4065,57 +4098,43 @@ class GraftSpec extends AnyFunSuite {
     // mitigation shapes are proven. Thresholds are lowered to make the
     // fixture's hot event_type partition legally "skewed" at test scale;
     // at 100 TB the defaults (256 MB / 5× median) fire on their own.
-    val keys = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val s = Session.pinned(spark,
+      "spark.sql.adaptive.enabled" -> "true",
       // no broadcast: the skew path needs a shuffled join on both sides
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8KB")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // the sf0.001 fixture's event_type counts are near-uniform (the
-      // x_skew story is few-giant-keys at scale, not count imbalance at
-      // 1k rows), so amplify the hot key deterministically: every
-      // 'click' row replicated 50× — the shape the defaults would see
-      // at 100 TB, at thresholds this test can afford
-      // repartition(8) first: a skewed reduce partition is split along its
-      // MAP-output boundaries, so a single-mapper stage (one tiny parquet
-      // file) can never be split no matter how skewed it reads
-      val ev = Tables.events(spark, sf)
-        .repartition(8)
-        .withColumn("rep", explode(sequence(lit(1),
-          when(col("event_type") === "click", lit(50)).otherwise(lit(1)))))
-      // dim pre-materialized to a local table: OptimizeSkewedJoin only
-      // matches Sort directly over the shuffle stage — an aggregate
-      // between them (distinct()) hides the join from the rule
-      import spark.implicits._
-      val dim = ev.select(col("event_type")).distinct().as[String].collect().sorted.toSeq
-        .toDF("event_type")
-        .withColumn("weight", (length(col("event_type")) % 5 + 1).cast("long"))
-      // no aggregate on the join key downstream: AQE refuses to split a
-      // skewed partition whose output partitioning a parent still needs
-      val joined = ev.join(dim, Seq("event_type"))
-        .select(col("event_type"), col("event_id"), col("rep"), col("weight"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true") || plan.contains("skewed"),
-        s"expected AQE to mark the hot partition skewed and split it:\n${plan.take(3000)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    // the sf0.001 fixture's event_type counts are near-uniform (the
+    // x_skew story is few-giant-keys at scale, not count imbalance at
+    // 1k rows), so amplify the hot key deterministically: every
+    // 'click' row replicated 50× — the shape the defaults would see
+    // at 100 TB, at thresholds this test can afford
+    // repartition(8) first: a skewed reduce partition is split along its
+    // MAP-output boundaries, so a single-mapper stage (one tiny parquet
+    // file) can never be split no matter how skewed it reads
+    val ev = Tables.events(s, sf)
+      .repartition(8)
+      .withColumn("rep", explode(sequence(lit(1),
+        when(col("event_type") === "click", lit(50)).otherwise(lit(1)))))
+    // dim pre-materialized to a local table: OptimizeSkewedJoin only
+    // matches Sort directly over the shuffle stage — an aggregate
+    // between them (distinct()) hides the join from the rule
+    import s.implicits._
+    val dim = ev.select(col("event_type")).distinct().as[String].collect().sorted.toSeq
+      .toDF("event_type")
+      .withColumn("weight", (length(col("event_type")) % 5 + 1).cast("long"))
+    // no aggregate on the join key downstream: AQE refuses to split a
+    // skewed partition whose output partitioning a parent still needs
+    val joined = ev.join(dim, Seq("event_type"))
+      .select(col("event_type"), col("event_id"), col("rep"), col("weight"))
+    joined.collect()
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("skew=true") || plan.contains("skewed"),
+      s"expected AQE to mark the hot partition skewed and split it:\n${plan.take(3000)}")
   }
 
   test("DPP: a dim-side filter prunes the day-partitioned fact at runtime") {
@@ -4979,15 +4998,15 @@ class GraftSpec extends AnyFunSuite {
     * is re-optimized at run time, and x_sim_filtered's final plan counted
     * 5 shuffles run alone but 6 in the full suite.
     */
-  private def planFingerprint(name: String): Map[String, Int] = {
+  private def planFingerprint(name: String, session: SparkSession = spark): Map[String, Int] = {
     import org.apache.spark.sql.execution.{DataSourceScanExec, ReusedSubqueryExec,
       SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
       ReusedExchangeExec, ShuffleExchangeLike}
     import org.apache.spark.sql.execution.joins._
-    val df = SparkEntry.queries(name)(spark, sf)
-    val plan = spark.sessionState.executePlan(df.queryExecution.logical).executedPlan
+    val df = SparkEntry.queries(name)(session, sf)
+    val plan = session.sessionState.executePlan(df.queryExecution.logical).executedPlan
     val nodes = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     def walk(p: SparkPlan): Unit = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
@@ -5084,15 +5103,9 @@ class GraftSpec extends AnyFunSuite {
     // auto-broadcast off, q_join_fx_asof's size-driven broadcast joins
     // demote to sort-merge joins and the fingerprint leaves the manifest
     val target = "q_join_fx_asof"
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    val demoted =
-      try { keys.foreach(spark.conf.set(_, "-1")); planFingerprint(target) }
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    val demoted = planFingerprint(target, Session.pinned(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
     val recorded = recordedManifest()(target)
     assert(recorded("broadcast_hash_joins") > 0, s"$target must broadcast in the manifest")
     assert(demoted("sort_merge_joins") > recorded("sort_merge_joins"),
@@ -5329,20 +5342,14 @@ class GraftSpec extends AnyFunSuite {
     // physical plan (partition ids, non-total orders, float re-association)
     // diverges here long before a 1000-executor run re-plans it for real.
     // Rows compare as sorted strings — the driver's hash gate sorts too.
-    val prior = spark.conf.get("spark.sql.adaptive.enabled")
+    val Seq(aqeOff, aqeOn) =
+      Seq("false", "true").map(v => Session.pinned(spark, "spark.sql.adaptive.enabled" -> v))
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
-    try {
-      val diffs = scala.collection.mutable.ArrayBuffer.empty[String]
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        val off = canon(fn(spark, sf))
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        val on = canon(fn(spark, sf))
-        if (off != on) diffs += name
-      }
-      assert(diffs.isEmpty, s"AQE-sensitive queries: ${diffs.mkString(", ")}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
+    val diffs = SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, fn) if canon(fn(aqeOff, sf)) != canon(fn(aqeOn, sf)) => name
+    }
+    assert(diffs.isEmpty, s"AQE-sensitive queries: ${diffs.mkString(", ")}")
   }
 
   test("ts vintage invariance: long-nanos / NTZ / timestamp fixtures give identical results") {

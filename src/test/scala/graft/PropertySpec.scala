@@ -15,12 +15,7 @@ import graft.etl.{Normalize, Schemas}
   */
 class PropertySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   /** Minimal deterministic forAll: the scalatest/scalacheck bridge module
     * is not in the offline dependency cache, so sample the generator

@@ -14,12 +14,7 @@ import graft.streaming.Drain.deleteRecursively
   */
 class ScratchSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   // scratch tables are keyed by (sfDir, table); these specs only need a key
   val sf = "scratch_spec"
