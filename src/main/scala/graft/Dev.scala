@@ -11,12 +11,23 @@ import org.apache.spark.sql.SparkSession
   *  - `plan <sfDir> [query ...]`: formatted physical plans.
   *  - `sql <statement> ...`: SQL with the graft functions registered.
   *  - `hot <sfDir> [query ...]`: each query's first and second run timed
-  *    after the fb_stat load (the second is the bench's warm number).
+  *    after the fb_stat load (the second is the bench's warm number), with
+  *    the used heap after three collections; then every memoized frame
+  *    with its build seconds, stored bytes and hits, and the count of
+  *    stored artifacts against the SparkContext's persistent RDDs.
   *    Jobs, stages and task time per query come from `etlbench --trace 1`.
   *
   * `plan` and `hot` take every registry query when none is named.
   */
 object Dev {
+  /** Used heap after three full collections, with pauses so the context
+    * cleaner can release what each one made unreachable.
+    */
+  private def heapUsedMb(): Double = {
+    (1 to 3).foreach { _ => System.gc(); Thread.sleep(200) }
+    java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
+  }
+
   def main(args: Array[String]): Unit = {
     def named(rest: Seq[String]): Seq[String] =
       if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted
@@ -50,8 +61,14 @@ object Dev {
           }
           val first = timed()
           val second = timed()
-          println(f"[hot] $n%-18s first=$first%7.2fs  second=$second%7.2fs")
+          println(f"[hot] $n%-18s first=$first%7.2fs  second=$second%7.2fs  heap=${heapUsedMb()}%6.1fMB")
         }
+        println(f"[memo] ${"key"}%-48s ${"build_s"}%8s ${"bytes"}%12s ${"hits"}%5s")
+        Memo.entries(spark).foreach { a =>
+          println(f"[memo] ${a.key}%-48s ${a.buildSeconds}%8.2f ${a.bytes}%12d ${a.hits.get}%5d")
+        }
+        println(s"[memo] stored=${Memo.stored(spark).size} " +
+          s"persistent_rdds=${spark.sparkContext.getPersistentRDDs.size}")
       case _ =>
         System.err.println("usage: graft.Dev smoke | run <sfDir> <query> | " +
           "plan <sfDir> [query ...] | sql <statement> ... | hot <sfDir> [query ...]")

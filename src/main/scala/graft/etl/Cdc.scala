@@ -95,7 +95,7 @@ object Cdc {
       .foreachBatch(applyChangeBatch(spark, snapRoot) _)
       .start()
     try q.processAllAvailable()
-    finally q.stop()
+    finally graft.streaming.Drain.stop(q, None)
 
     val v = currentVersion(snapRoot)
     val out = spark.read.parquet(snapRoot.resolve(s"v$v").toString)

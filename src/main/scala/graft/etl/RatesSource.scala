@@ -70,7 +70,7 @@ object RatesSource {
           get_json_object(col("payload"), s"$$.quotes.$Pair").cast("double").as("rate"))
     }
 
-  private val ratesCache = new graft.Memo
+  private val ratesCache = new graft.Memo("etl.rates")
 
   /** Response fixture WITH failures: dates whose day-of-month divides by 7
     * answer `success: false` with a currencylayer-shaped error object and

@@ -14,7 +14,7 @@ import graft.Tables
   */
 object Analytics {
 
-  private val overlapCache = new graft.Memo
+  private val overlapCache = new graft.Memo("analytics.overlap")
 
   /** Histogram bin width (value domain is [0, ~500]); 20 regular bins
     * plus clamp-into-edge-bins for outliers, the `width_bucket` pattern.
@@ -593,7 +593,7 @@ object Analytics {
     // `.cache()` entry is created once per (session, sfDir), not per pass
     theilsenCache.getOrBuild(spark, sfDir)(theilSenBuild(spark, sfDir))
 
-  private val theilsenCache = new graft.Memo
+  private val theilsenCache = new graft.Memo("analytics.theilsen")
 
   private def theilSenBuild(spark: SparkSession, sfDir: String): DataFrame =
     theilSenOf(Tables.events(spark, sfDir)
@@ -731,7 +731,7 @@ object Analytics {
     // reusing or releasing them
     conformalCache.getOrBuild(spark, sfDir)(conformalBuild(spark, sfDir))
 
-  private val conformalCache = new graft.Memo
+  private val conformalCache = new graft.Memo("analytics.conformal")
 
   private def conformalBuild(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -83,24 +83,24 @@ object Dedup {
     when(size(hs) > 0, graft.functions.MinHashSig.minhash_sig(hs))
   }
 
-  /** doc_id → signature, cached: the pair-generation self-join and the
-    * estimate join both reuse it (at 100 TB this is a persisted signature
-    * table, not a recomputation per consumer).
+  /** doc_id → signature. [[signatureTable]] stores it once per corpus:
+    * the pair-generation self-join and the estimate join both reuse it
+    * (at 100 TB this is a persisted signature table, not a recomputation
+    * per consumer).
     */
   def signatures(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), shingleHashes(col("text")).as("hs"))
       .filter(size(col("hs")) > 0) // shingle-less docs have no signature
       .select(col("doc_id"), graft.functions.MinHashSig.minhash_sig(col("hs")).as("sig"))
-      .cache()
 
-  private val sigCache = new graft.Memo
+  private val sigCache = new graft.Memo("dedup.signatures")
 
-  /** Memoized per (session, sfDir): `.cache()` on a freshly-built plan is
-    * a NEW cache entry — consumers (minhashPairs, dedupPipeline) must
-    * share one DataFrame instance or each recomputes the signatures.
+  /** Memoized and stored per (session, sfDir): consumers (minhashPairs,
+    * dedupPipeline) share one DataFrame instance, so the signatures are
+    * computed once.
     */
   def signatureTable(spark: SparkSession, sfDir: String): DataFrame =
-    sigCache.getOrBuild(spark, sfDir) {
+    sigCache.getOrBuild(spark, sfDir, cache = true) {
       signatures(Tables.documents(spark, sfDir))
     }
 
@@ -140,7 +140,7 @@ object Dedup {
       .distinct()
   }
 
-  private val pairsCache = new graft.Memo
+  private val pairsCache = new graft.Memo("dedup.minhash_pairs")
 
   /** Memoized + cached estimated-similarity pair table: FIVE consumers
     * (x_dedup_minhash, x_dedup_pipeline, x_decontam, x_connected,
@@ -258,7 +258,7 @@ object Dedup {
 
   // ---- asymmetric shingle containment (X-CONTAINMENT) -----------------
 
-  private val hsCache = new graft.Memo
+  private val hsCache = new graft.Memo("dedup.shingles")
 
   /** Memoized per-doc shingle-hash SETS (doc_id, hs) — the exact-verify
     * sibling of [[signatureTable]]: signatures estimate, the sets decide.
@@ -458,7 +458,7 @@ object Dedup {
   def simhash(c: Column): Column =
     graft.functions.SimHash.simhash(TextAnalysis.tokens(c))
 
-  private val fpCache = new graft.Memo
+  private val fpCache = new graft.Memo("dedup.fingerprints")
 
   /** Memoized + cached fingerprint table: the banded SELF-join below
     * references it twice, and without a shared cached instance each side
@@ -861,7 +861,7 @@ object Dedup {
       nearDupEdges(spark, sfDir))
   }
 
-  private val compCache = new graft.Memo
+  private val compCache = new graft.Memo("dedup.components")
 
   /** The ≥-threshold near-dup pair graph off the shared banded index. */
   def nearDupEdges(spark: SparkSession, sfDir: String): DataFrame =

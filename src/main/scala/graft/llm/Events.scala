@@ -1002,7 +1002,7 @@ object Events {
     // entry is created once per (session, sfDir), not once per bench pass
     bloomCache.getOrBuild(spark, sfDir)(bloomFprBuild(spark, sfDir))
 
-  private val bloomCache = new graft.Memo
+  private val bloomCache = new graft.Memo("events.bloom_fpr")
 
   private def bloomFprBuild(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.PolyHash

@@ -531,7 +531,7 @@ object Graph {
     * community's size — plus the community-count health column every
     * clustering run reads first.
     */
-  private val lpCache = new graft.Memo
+  private val lpCache = new graft.Memo("graph.label_prop")
 
   /** Memoized (session, sfDir) label table: labelPropOf's result is an
     * eager localCheckpoint, so memoizing the frame shares the whole LPA
@@ -539,7 +539,7 @@ object Graph {
     * fact-sized edge build + 4 rounds per consumer.
     */
   def labelTable(spark: SparkSession, sfDir: String): DataFrame =
-    lpCache.getOrBuild(spark, sfDir) {
+    lpCache.getOrBuild(spark, sfDir, cache = true) {
       labelPropOf(tradeEdges(spark, sfDir))
     }
 
@@ -589,7 +589,7 @@ object Graph {
     * ≤|nations|² partial-agg shuffle); the peel loop runs on the tiny
     * aggregated graph with per-round lineage cuts.
     */
-  private val undCache = new graft.Memo
+  private val undCache = new graft.Memo("graph.undirected")
 
   /** The ABOVE-MEAN-weight undirected simple trade graph shared by
     * [[kcore]] and [[linkPred]]: edges kept by the exact integer
@@ -770,7 +770,7 @@ object Graph {
     cuts.seal(dist)
   }
 
-  private val bfsCache = new graft.Memo
+  private val bfsCache = new graft.Memo("graph.bfs")
 
   /** Memoized settled multi-source BFS distances of the thresholded
     * trade graph — x_closeness and x_betweenness consume the IDENTICAL
@@ -780,7 +780,7 @@ object Graph {
     * the parquet inputs in every fresh session).
     */
   private[graft] def bfsDistTable(spark: SparkSession, sfDir: String): DataFrame =
-    bfsCache.getOrBuild(spark, sfDir) {
+    bfsCache.getOrBuild(spark, sfDir, cache = true) {
       multiSourceBfs(thresholdedUndirected(spark, sfDir))
     }
 

@@ -216,9 +216,9 @@ object Multimodal {
     // final global sort is a pure-waste exchange on the write path
   }
 
-  private val payloadHsCache = new graft.Memo
-  private val payloadPairsCache = new graft.Memo
-  private val mmMemo = new graft.Memo
+  private val payloadHsCache = new graft.Memo("mm.payload_shingles")
+  private val payloadPairsCache = new graft.Memo("mm.payload_pairs")
+  private val mmMemo = new graft.Memo("mm.survivors")
 
   /** Memoized + cached verified pair table — x_mm_neardup's manifest and
     * x_mm_cluster's grouping both consume it, and re-running the banded

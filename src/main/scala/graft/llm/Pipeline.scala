@@ -82,7 +82,7 @@ object Pipeline {
       .join(s2ids.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_semi")
       .select(col("id_b").as("doc_id")).distinct()
 
-  private val memo = new graft.Memo
+  private val memo = new graft.Memo("pipeline")
 
   /** The text-curation dedup survivor set — (doc_id, source) after
     * quality + exact dedup + near dedup, i.e. x_pipeline's stage-3

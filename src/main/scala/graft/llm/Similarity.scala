@@ -141,7 +141,7 @@ object Similarity {
     * -per-query result — one build, one cache entry, not three brute
     * passes per bench round.
     */
-  private val bruteCache = new graft.Memo
+  private val bruteCache = new graft.Memo("similarity.topk")
   private def bruteFor(spark: SparkSession, sfDir: String): DataFrame =
     bruteCache.getOrBuild(spark, s"$sfDir#brute", cache = true) {
       bruteTopK(spark, sfDir)
@@ -413,7 +413,7 @@ object Similarity {
 
   // ---- full Lloyd iteration (X-KMEANS-ITER) ---------------------------
 
-  private val kmCache = new graft.Memo
+  private val kmCache = new graft.Memo("similarity.kmeans")
 
   /** Lloyd iterations run by [[kmeansIter]]. */
   val KmeansIters = 3

@@ -527,7 +527,7 @@ object StreamingOps {
         }
         .option("checkpointLocation", work.resolve("ckpt").toString)
         .start()
-      try q.processAllAvailable() finally q.stop()
+      try q.processAllAvailable() finally graft.streaming.Drain.stop(q, Some(ss))
     } finally { idx.unpersist(false); sigTbl.unpersist(false) }
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
     // a delta-delta pair surfaces from both endpoints' batches with the
@@ -633,7 +633,8 @@ object StreamingOps {
       }
       .option("checkpointLocation", work.resolve("ckpt").toString)
       .start()
-    try q.processAllAvailable() finally { q.stop(); cents.unpersist(false) }
+    try q.processAllAvailable()
+    finally { graft.streaming.Drain.stop(q, None); cents.unpersist(false) }
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
     val cells = spark.read.parquet(root.resolve("base").toString)
       .unionByName(spark.read.parquet(outDir).dropDuplicates("vec_id"))
@@ -687,7 +688,7 @@ object StreamingOps {
       }
       .option("checkpointLocation", work.resolve("ckpt").toString)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    try q.processAllAvailable() finally graft.streaming.Drain.stop(q, None)
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
     spark.read.parquet(outDir).dropDuplicates("doc_id")
       .groupBy("payload_md5")
@@ -753,7 +754,7 @@ object StreamingOps {
       }
       .option("checkpointLocation", work.resolve("ckpt").toString)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    try q.processAllAvailable() finally graft.streaming.Drain.stop(q, None)
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
     graft.queries.AnnServe.tombstoneServe(spark, sfDir, tombDir)
   }
@@ -976,7 +977,7 @@ object StreamingOps {
       }
       .option("checkpointLocation", work.resolve("ckpt").toString)
       .start()
-    try q.processAllAvailable() finally q.stop()
+    try q.processAllAvailable() finally graft.streaming.Drain.stop(q, Some(ss))
     } finally
       (Seq(baseTriples, baseBands, baseSigs) ++
         histTriL ++ histBandsL ++ histSigsL).foreach(_.unpersist(false))

@@ -316,7 +316,7 @@ object TextAnalysis {
 
   // ---- X-BM25 ---------------------------------------------------------
 
-  private val bmCache = new graft.Memo
+  private val bmCache = new graft.Memo("text.bm25")
 
   val Bm25K1 = 1.2
   val Bm25B = 0.75

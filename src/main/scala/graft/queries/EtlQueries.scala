@@ -32,7 +32,7 @@ object EtlQueries {
     * load pipeline; downstream queries then get partition pruning +
     * clustered row-group skipping from the parquet layout for free.
     */
-  private val tableCache = new graft.Memo
+  private val tableCache = new graft.Memo("etl.fb_stat")
 
   def fbStatTable(spark: SparkSession, sfDir: String): DataFrame =
     // Memoized per (session, sfDir) so every consumer shares ONE DataFrame
@@ -52,16 +52,19 @@ object EtlQueries {
       // path. The catalog keeps the partition index, so the ~2.4k day
       // directories are listed once at RECOVER PARTITIONS instead of
       // re-listed + schema-re-inferred by every downstream query.
-      // sanitization is lossy ("sf0.1" and "sf0_1" collide) — suffix the
-      // raw path's hash so distinct sfDirs can never share a table
-      val tbl = "fb_stat_" + sfDir.replaceAll("[^A-Za-z0-9_]", "_") +
-        "_" + java.lang.Integer.toHexString(sfDir.hashCode)
-      if (!spark.catalog.tableExists(tbl)) {
-        val cols = Schemas.fbStat.fields
-          .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-        spark.sql(s"CREATE TABLE IF NOT EXISTS $tbl ($cols) USING parquet " +
-          s"PARTITIONED BY (${Schemas.partitionCol}) LOCATION '$path'")
-        spark.sql(s"MSCK REPAIR TABLE $tbl")
+      // A table of that name registered elsewhere (a persistent catalog
+      // remembers the scratch root of a run that is gone) is replaced:
+      // only this run's path holds this run's rows.
+      val tbl = fbStatTableName(sfDir)
+      registerLock.synchronized {
+        if (!(spark.catalog.tableExists(tbl) && tableLocation(spark, tbl) == localPath(path))) {
+          val cols = Schemas.fbStat.fields
+            .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+          spark.sql(s"DROP TABLE IF EXISTS $tbl")
+          spark.sql(s"CREATE TABLE $tbl ($cols) USING parquet " +
+            s"PARTITIONED BY (${Schemas.partitionCol}) LOCATION '$path'")
+          spark.sql(s"MSCK REPAIR TABLE $tbl")
+        }
       }
       // Cache the scan: nine downstream queries read this table. At 100 TB
       // the catalog index + partition pruning is the durable win and the
@@ -70,6 +73,26 @@ object EtlQueries {
       // re-scan entirely.
       spark.table(tbl)
     }
+
+  /** The catalog name of `sfDir`'s fb_stat table. Sanitization is lossy
+    * ("sf0.1" and "sf0_1" collide), so the raw path's hash is appended and
+    * distinct sfDirs never share a table.
+    */
+  private[graft] def fbStatTableName(sfDir: String): String =
+    "fb_stat_" + sfDir.replaceAll("[^A-Za-z0-9_]", "_") +
+      "_" + java.lang.Integer.toHexString(sfDir.hashCode)
+
+  /** Serializes the check-then-replace of a catalog registration across
+    * the sessions of this JVM, which share one catalog.
+    */
+  private val registerLock = new Object
+
+  private def localPath(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  private def tableLocation(spark: SparkSession, tbl: String): String =
+    spark.sql(s"DESCRIBE TABLE EXTENDED $tbl").collect()
+      .collectFirst { case r if r.getString(0) == "Location" => localPath(r.getString(1)) }
+      .getOrElse("")
 
   private def decSum(c: String) =
     sum(col(c).cast(DecimalType(18, 2))).cast("double")
@@ -349,7 +372,7 @@ object EtlQueries {
     flatten(tbl.filter(col("date") === to_date(lit(minDate)))).orderBy("ad_id")
   }
 
-  private val pruneScanCache = new graft.Memo
+  private val pruneScanCache = new graft.Memo("etl.prune_scan")
 
   /** Q-DSV2: the real-connector path (SURVEY.md §2.1 S-FB stretch goal) —
     * scan insights JSONL through the DataSourceV2 connector with a pushed
@@ -529,7 +552,7 @@ object EtlQueries {
         .outputMode("append")
         .start()
       try q.processAllAvailable()
-      finally q.stop()
+      finally graft.streaming.Drain.stop(q, None)
     }
     val back = spark.read.format(fmt).option("path", dstTable).load()
     flatten(Normalize(back))
@@ -620,7 +643,7 @@ object EtlQueries {
     }
   }
 
-  private val compactScanCache = new graft.Memo
+  private val compactScanCache = new graft.Memo("etl.compact_scan")
 
   /** Q-MERGE: upsert (MERGE INTO) semantics — the sink operation the
     * reference's append-only `insert_rows_json` (main.py:81-91) cannot

@@ -239,7 +239,7 @@ object ScaleQueries {
       .orderBy("event_type")
   }
 
-  private val zorderScanCache = new graft.Memo
+  private val zorderScanCache = new graft.Memo("scale.zorder_scan")
 
   /** X-FILE-SKIP: per-file min/max statistics manifest + whole-file
     * skipping — the statistics layer BETWEEN Q-PRUNE's partition pruning

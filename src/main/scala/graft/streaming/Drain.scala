@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftx.ReuseBridge
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Shared drain-a-stream-into-parquet machinery for the synchronous
   * streaming queries (streamingDaily, streamingSessions, qStreamLoad):
@@ -87,6 +89,26 @@ object Drain {
     streamSession(spark, Seq(ShufflePartitions -> n.toString) ++
       (if (n <= PartitionFloor) Seq("spark.sql.adaptive.enabled" -> "false") else Nil): _*)
 
+  /** Stop `q` and release what it leaves behind in this JVM: the
+    * state-store providers of its run, which Spark's maintenance pass
+    * would otherwise keep loaded for up to a minute (a finished
+    * x_stream_dedup drain on the benchmark fixture held ~21 MB of state
+    * rows), and, when `child` is the drain-made session `q` started from,
+    * that session's streaming listener bus, which would otherwise stay
+    * registered on the SparkContext for the JVM's life. Only `q`'s own
+    * run is touched, so
+    * streams running concurrently keep their providers. Not
+    * `StateStore.unloadAll`, which would drop every running stream's
+    * providers, and not `stateStore.unloadOnCommit`, which reloads state
+    * on every micro-batch of the multi-batch replay drains.
+    */
+  def stop(q: StreamingQuery, child: Option[SparkSession]): Unit =
+    try q.stop()
+    finally {
+      ReuseBridge.unloadStores(q.runId)
+      child.foreach(ReuseBridge.removeStreamBus)
+    }
+
   /** A [[graft.Session.pinned]] child to start a stream from, with the
     * caller's streaming-query listeners registered on it too: a listener
     * only hears queries started from its own session, and a caller that
@@ -127,13 +149,17 @@ object Drain {
     * micro-batch. RocksDB becomes the right choice only when
     * per-partition state outgrows executor heap.
     *
+    * When the drain ends, [[stop]] unloads the state-store providers of
+    * its run, and the listener bus of the child session it started from.
+    *
     * Returns [[DrainStats]] summed across the drained micro-batches
     * (most callers ignore it; x_stream_late asserts on it).
     */
   def run(stream: DataFrame, outDir: String, ckptDir: String,
           shufflePartitions: Option[Int] = None): DrainStats = {
-    val spark = shufflePartitions.fold(stream.sparkSession)(n =>
+    val child = shufflePartitions.map(n =>
       streamSession(stream.sparkSession, ShufflePartitions -> n.toString))
+    val spark = child.getOrElse(stream.sparkSession)
     val q = graft.Session.in(spark, stream).writeStream
       .outputMode("append")
       .format("parquet")
@@ -155,7 +181,7 @@ object Drain {
       DrainStats(
         ps.map(_.numInputRows).sum,
         ps.flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum)
-    } finally q.stop()
+    } finally stop(q, child)
   }
 
   /** Work-dir variant: drain into `work/out`, then immediately delete the

@@ -5,7 +5,11 @@
  * org.apache.spark.sql.classic.ExpressionUtils, which is private[sql] —
  * hence this one-file package bridge (the same pattern public Spark
  * extension libraries use). The session clone behind `graft.Session` is
- * private[sql] for the same reason. No other internals are touched.
+ * private[sql] for the same reason. `ReuseBridge` reaches what a memo or
+ * a finished stream releases: a cache entry's column buffers, the state
+ * store's loaded providers and a session's streaming listener bus (the
+ * last two private fields, read by reflection). No other internals are
+ * touched.
  */
 package org.apache.spark.sql.graftx
 
@@ -46,4 +50,90 @@ object ColumnBridge {
         case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
         case _ => None
       }
+}
+
+/** What a memoized artifact holds and what a finished stream leaves
+  * behind, reached where the public API stops: the lineage-cut artifact
+  * with its measured size, the data behind a cache entry, the state-store
+  * providers of one query run and a session's streaming listener bus.
+  */
+object ReuseBridge {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.catalyst.plans.logical.Statistics
+  import org.apache.spark.sql.execution.LogicalRDD
+  import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProvider, StateStoreProviderId}
+
+  /** Bytes the block manager holds for RDD `rddId` (memory plus disk). */
+  def storedBytes(spark: SparkSession, rddId: Int): Long =
+    spark.sparkContext.getRDDStorageInfo.find(_.id == rddId)
+      .fold(0L)(r => r.memSize + r.diskSize)
+
+  /** `df` materialized now and cut from the plan that built it: an eager
+    * `localCheckpoint`, which keeps the output partitioning and ordering.
+    * Its statistics are the stored size, not the build plan's estimate,
+    * so a downstream join plans against it as it would against a filled
+    * cache entry. Returns the frame and the id of its persisted RDD.
+    */
+  def checkpoint(df: DataFrame): (DataFrame, Int) = {
+    val spark = df.sparkSession
+    df.localCheckpoint(eager = true).queryExecution.analyzed match {
+      case l: LogicalRDD =>
+        val bytes = storedBytes(spark, l.rdd.id)
+        val sized = LogicalRDD(l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
+          l.isStreaming, l.stream)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+          Some(Statistics(sizeInBytes = BigInt(bytes max 1L))), None)
+        (ColumnBridge.ofRows(spark, sized), l.rdd.id)
+      case other => throw new IllegalStateException(s"localCheckpoint gave ${other.nodeName}")
+    }
+  }
+
+
+  /** The cache manager's column-buffer RDD behind `df`, once an action
+    * has started to fill it, and the bytes its batches hold so far.
+    */
+  def cached(df: DataFrame): Option[(Int, Long)] =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(b => b.sizeInBytesStats.value > 0 || b.isCachedColumnBuffersLoaded)
+      .map(b => (b.cachedColumnBuffers.id, b.sizeInBytesStats.value.longValue))
+
+  private lazy val loadedProviders = {
+    val m = StateStore.getClass.getDeclaredMethod("loadedProviders")
+    m.setAccessible(true)
+    m.invoke(StateStore).asInstanceOf[scala.collection.mutable.HashMap[StateStoreProviderId, StateStoreProvider]]
+  }
+
+  /** State-store providers of query run `runId` loaded in this JVM. */
+  def loadedStores(runId: java.util.UUID): Seq[StateStoreProviderId] = {
+    val m = loadedProviders
+    m.synchronized(m.keys.filter(_.queryRunId == runId).toSeq)
+  }
+
+  /** Close and forget the state-store providers of query run `runId`
+    * loaded in this JVM (the executors of a local master), leaving every
+    * other run's providers loaded.
+    */
+  def unloadStores(runId: java.util.UUID): Unit =
+    loadedStores(runId).foreach(StateStore.removeFromLoadedProvidersAndClose(_))
+
+  private lazy val busField = {
+    val f = classOf[org.apache.spark.sql.classic.StreamingQueryManager].getDeclaredField("listenerBus")
+    f.setAccessible(true)
+    f
+  }
+
+  /** Deregister `spark`'s streaming listener bus from its SparkContext
+    * once every event posted so far has been delivered, so its listeners
+    * still hear all of a stopped query's progress. Only for a session
+    * that starts no further streams.
+    */
+  def removeStreamBus(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    try sc.listenerBus.waitUntilEmpty()
+    catch { case _: java.util.concurrent.TimeoutException => () }
+    sc.removeSparkListener(busField.get(spark.streams)
+      .asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.{ReuseBridge, SpecBridge}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.{Normalize, Schemas}
@@ -277,7 +279,9 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("ivfpq ANN: encode is map-only and the shortlist bounds the exchange") {
-    val df = Similarity.ivfpqTopK(spark, sf)
+    // the build the memoized ivfpqTopK stores: its consumers scan the
+    // stored result, so the encode and top-k plan shows only here
+    val df = Similarity.ivfpqTopKOf(graft.Tables.embeddings(spark, sf), Similarity.QueryStride)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"),
       s"PQ encode must fold broadcast codebooks per row, not rank a cross product:\n${plan.take(2000)}")
@@ -5510,5 +5514,124 @@ class GraftSpec extends AnyFunSuite {
     // total event count conservation vs the raw table
     val totalEv = rows.map(_.getLong(4)).sum
     assert(totalEv === graft.Tables.events(spark, sf).count())
+  }
+
+  // ---- reuse: memoized artifacts hold results, not the plans that built
+  // them; a finished drain releases its state stores and listener bus ----
+
+  val AnalystSample = Seq("q_daily", "x_join_card", "x_did", "x_freq_cap", "x_dedup_exact",
+    "x_latest", "x_graph_degree", "x_mm_features", "x_pca", "x_dataset_card", "x_kanon",
+    "x_quantile_sketch", "x_rand_proj", "x_sample_topk", "x_sim_brute", "x_stream_dedup",
+    "x_token_count")
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  /** `check`, after full collections, until it holds or ~20 s pass: the
+    * context cleaner releases a broadcast some time after its last
+    * reference goes.
+    */
+  private def eventually(check: => Boolean): Boolean =
+    (1 to 40).exists { _ => System.gc(); Thread.sleep(500); check }
+
+  test("memo: a stored artifact keeps none of its build's broadcast relations") {
+    val sc = spark.sparkContext
+    // broadcast ids are sequential: two markers bracket the build's
+    def marker(): Long = { val b = sc.broadcast(0); b.destroy(); b.id }
+    val s = spark.newSession()
+    val lo = marker()
+    val pairs = llm.Dedup.minhashPairsTable(s, sf)
+    val n = pairs.count()
+    val hi = marker()
+    assert(n > 0)
+    def left = SpecBridge.broadcastRelations().filter(id => id > lo && id < hi)
+    assert(eventually(left.isEmpty), s"broadcast relations of the build still held: $left")
+    assert(llm.Dedup.minhashPairsTable(s, sf).count() === n)
+  }
+
+  test("memo: after an analyst pass every persistent RDD it added is a stored memo artifact") {
+    val sc = spark.sparkContext
+    val s = spark.newSession()
+    val before = sc.getPersistentRDDs.keySet
+    AnalystSample.foreach(q =>
+      SparkEntry.queries(q)(s, sf).write.format("noop").mode("overwrite").save())
+    val stored = Memo.stored(s)
+    assert(stored.nonEmpty)
+    assert(stored.forall(_.rddId.isDefined), stored.filter(_.rddId.isEmpty).map(_.key))
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(added === stored.flatMap(_.rddId).toSet -- before)
+    assert(Memo.entries(s).exists(_.hits.get > 0))
+  }
+
+  test("drain: a finished drain unloads its state stores; a stream running beside it keeps its own") {
+    import scala.jdk.CollectionConverters._
+    val s = spark.newSession()
+    val want = sortedRows(SparkEntry.queries("x_stream_dedup")(s, sf))
+    val work = java.nio.file.Files.createTempDirectory("graft_reuse_spec_")
+    try {
+      // a stateful stream that is still running while the drain finishes
+      val src = work.resolve("src").toString
+      s.range(0, 1000).select((col("id") % 97).as("k")).write.parquet(src)
+      val other = s.readStream.schema("k long").parquet(src).dropDuplicates("k")
+        .writeStream.format("memory").queryName("reuse_spec_beside")
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .outputMode("append").start()
+      try {
+        other.processAllAvailable()
+        assert(ReuseBridge.loadedStores(other.runId).nonEmpty)
+
+        val runs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+        val stateful = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+        val listener = new StreamingQueryListener {
+          override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+            runs.add(e.runId)
+          override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+            if (e.progress.stateOperators.nonEmpty) stateful.add(e.progress.runId)
+          override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+        }
+        s.streams.addListener(listener)
+        val got = try sortedRows(SparkEntry.queries("x_stream_dedup")(s, sf))
+          finally s.streams.removeListener(listener)
+        assert(got === want)
+        assert(!stateful.isEmpty, "the drain kept no state; the spec checks nothing")
+        assert(stateful.asScala.forall(runs.contains))
+        runs.asScala.foreach(run => assert(ReuseBridge.loadedStores(run).isEmpty))
+
+        assert(other.isActive)
+        assert(ReuseBridge.loadedStores(other.runId).nonEmpty)
+        streaming.Drain.stop(other, None)
+        assert(ReuseBridge.loadedStores(other.runId).isEmpty)
+        assert(s.table("reuse_spec_beside").count() === 97L)
+      } finally if (other.isActive) other.stop()
+    } finally streaming.Drain.deleteRecursively(work)
+  }
+
+  test("drain: N drains from pinned children leave at most N streaming listener buses") {
+    val s = spark.newSession()
+    def drain(): Unit = SparkEntry.queries("x_stream_dedup")(s, sf).count()
+    drain()
+    val before = SpecBridge.streamBuses(s)
+    val n = 3
+    (1 to n).foreach(_ => drain())
+    val grown = SpecBridge.streamBuses(s) - before
+    assert(grown <= n, s"$grown buses added by $n drains")
+  }
+
+  test("fb_stat: a table registered under its name at another location is replaced") {
+    // a path alias of the fixture: its own scratch table and catalog name
+    val alias = sf + "/"
+    val tbl = queries.EtlQueries.fbStatTableName(alias)
+    val empty = java.nio.file.Files.createTempDirectory("graft_stale_fb_stat_")
+    try {
+      val cols = etl.Schemas.fbStat.fields
+        .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      spark.sql(s"CREATE TABLE $tbl ($cols) USING parquet " +
+        s"PARTITIONED BY (${etl.Schemas.partitionCol}) LOCATION '$empty'")
+      val want = queries.EtlQueries.fbStatTable(spark, sf).count()
+      assert(want > 0)
+      val s = spark.newSession()
+      assert(queries.EtlQueries.fbStatTable(s, alias).count() === want)
+      assert(SparkEntry.queries("q_daily")(s, alias).count() > 0)
+    } finally streaming.Drain.deleteRecursively(empty)
   }
 }
