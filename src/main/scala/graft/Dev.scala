@@ -14,7 +14,10 @@ import org.apache.spark.sql.SparkSession
   *    after the fb_stat load (the second is the bench's warm number), with
   *    the used heap after three collections; then every memoized frame
   *    with its build seconds, stored bytes and hits, and the count of
-  *    stored artifacts against the SparkContext's persistent RDDs.
+  *    stored artifacts against the SparkContext's persistent RDDs. Each
+  *    query line also counts the generated classes its first and second
+  *    run compiled; a second run that compiles any was evicted from the
+  *    codegen cache.
   *    Jobs, stages and task time per query come from `etlbench --trace 1`.
   *
   * `plan` and `hot` take every registry query when none is named.
@@ -27,6 +30,10 @@ object Dev {
     (1 to 3).foreach { _ => System.gc(); Thread.sleep(200) }
     java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1e6
   }
+
+  /** Generated classes compiled in this JVM so far (codegen cache misses). */
+  private def compiled(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def main(args: Array[String]): Unit = {
     def named(rest: Seq[String]): Seq[String] =
@@ -59,10 +66,15 @@ object Dev {
             fn(spark, sfDir).count()
             (System.nanoTime() - t0) / 1e9
           }
+          val c0 = compiled()
           val first = timed()
+          val c1 = compiled()
           val second = timed()
-          println(f"[hot] $n%-18s first=$first%7.2fs  second=$second%7.2fs  heap=${heapUsedMb()}%6.1fMB")
+          println(f"[hot] $n%-18s first=$first%7.2fs  second=$second%7.2fs  " +
+            f"heap=${heapUsedMb()}%6.1fMB  compiled=${c1 - c0}%4d+${compiled() - c1}%d")
         }
+        println(s"[hot] classes compiled=${compiled()} " +
+          s"(codegen cache ${spark.conf.get("spark.sql.codegen.cache.maxEntries")} entries)")
         println(f"[memo] ${"key"}%-48s ${"build_s"}%8s ${"bytes"}%12s ${"hits"}%5s")
         Memo.entries(spark).foreach { a =>
           println(f"[memo] ${a.key}%-48s ${a.buildSeconds}%8.2f ${a.bytes}%12d ${a.hits.get}%5d")

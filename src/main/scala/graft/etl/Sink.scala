@@ -2,7 +2,8 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.graftx.LoggedCommitProtocol
 
 /** Sink side of the reference (SURVEY.md §2.3):
   *
@@ -14,6 +15,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                  `insert_rows_json` has no dedup key and no transaction —
   *                  a rerun duplicates rows. We keep that fidelity: append
   *                  mode, never overwrite (Q-IDEM locks it).
+  *
+  * Commit: every append adds the files it wrote to the table's log,
+  * `<table>/_spark_metadata` (Spark's file-sink log,
+  * [[org.apache.spark.sql.graftx.LoggedCommitProtocol]]), and becomes
+  * visible to readers at that log commit. `spark.read.parquet(<table>)`
+  * and a catalog table at the location read the file list and the `date=`
+  * partitions from the log, so no reader lists the table's directories.
+  * A write that fails commits nothing, and a file the log does not list
+  * is never read. The log does not change K-INS: a rerun still appends
+  * its rows a second time (Q-IDEM). A writer that bypasses this object
+  * would write rows no reader sees; none in the engine does.
   *
   * Spark mapping: BigQuery DAY time-partitioning → parquet
   * `partitionBy("date")` (partition pruning for free, asserted by Q-PRUNE);
@@ -35,7 +47,6 @@ object Sink {
       path: String,
       partitionCol: String = Schemas.partitionCol,
       clusterCols: Seq[String] = Schemas.fbClusteringCols): String = {
-    val spark = df.sparkSession
     // One write task per day-partition: repartition on the partition key so
     // a 1000-executor write emits ~1 file per day, not tasks×days files.
     // AQE coalesces the small SF case back down.
@@ -43,10 +54,7 @@ object Sink {
       .repartition(org.apache.spark.sql.functions.col(partitionCol))
       .sortWithinPartitions(
         (partitionCol +: clusterCols).map(org.apache.spark.sql.functions.col): _*)
-    clustered.write
-      .mode("append")
-      .partitionBy(partitionCol)
-      .parquet(path)
+    logged(clustered).partitionBy(partitionCol).parquet(path)
     path
   }
 
@@ -55,7 +63,7 @@ object Sink {
     * Append-only, at-least-once, exactly like `insert_rows_json`.
     */
   def append(df: DataFrame, path: String): String = {
-    df.write.mode("append").parquet(path)
+    logged(df).parquet(path)
     path
   }
 
@@ -83,9 +91,28 @@ object Sink {
       if (!Files.exists(Paths.get(path))) batch
       else batch.join(
         spark.read.parquet(path).select(keys.map(col): _*), keys, "left_anti")
-    fresh.write.mode("append").parquet(path)
+    logged(fresh).parquet(path)
     path
   }
+
+  /** An append of `df` that commits to the table's log: the write runs in
+    * a child session whose commit protocol is [[LoggedCommitProtocol]].
+    * Each caller session keeps one such child, rebuilt when the caller's
+    * conf changes; a fresh child per append cost ~50 ms of per-session
+    * planner set-up on every write.
+    */
+  private def logged(df: DataFrame): DataFrameWriter[Row] = {
+    val spark = df.sparkSession
+    val conf = spark.conf.getAll
+    val child = writers.compute(spark, (_, held) =>
+      if (held != null && held._1 == conf) held
+      else conf -> graft.Session.pinned(spark,
+        "spark.sql.sources.commitProtocolClass" -> classOf[LoggedCommitProtocol].getName))._2
+    graft.Session.in(child, df).write.mode("append")
+  }
+
+  private val writers = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]())
 
   /** Remove a directory that holds an unfinished write — a failed
     * [[Scratch.once]] build, or the temp side of a rewrite-and-swap —
@@ -133,24 +160,31 @@ object Sink {
     */
   val TargetFileBytes: Long = 128L * 1024 * 1024
 
-  /** Total data bytes under `path` (recursive; skips `_`/`.` metadata
-    * files) — the input-size side of size-targeted rewrites. A listing,
-    * not a scan: at 100 TB this is the manifest's summed file sizes.
+  /** Total data bytes under `path` — the input-size side of size-targeted
+    * rewrites. A listing, not a scan: at 100 TB this is the manifest's
+    * summed file sizes. Hidden files and directories are skipped as
+    * Spark's own listing skips them: a name starting with `.`, or with
+    * `_` unless it is a `col=value` partition directory. So the table's
+    * log (`_spark_metadata`) and any `_temporary` staging are not data.
     */
   def dataBytes(path: String): Long = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) 0L
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(root)
-      try s.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !p.getFileName.toString.startsWith("_") &&
-          !p.getFileName.toString.startsWith("."))
-        .map(Files.size)
-        .sum
-      finally s.close()
+    import java.nio.file.{FileVisitResult, Path, SimpleFileVisitor}
+    import java.nio.file.attribute.BasicFileAttributes
+    def hidden(p: Path) = {
+      val n = p.getFileName.toString
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
     }
+    val root = Paths.get(path)
+    var bytes = 0L
+    if (Files.exists(root)) Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult =
+        if (d != root && hidden(d)) FileVisitResult.SKIP_SUBTREE else FileVisitResult.CONTINUE
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        if (a.isRegularFile && !hidden(f)) bytes += a.size
+        FileVisitResult.CONTINUE
+      }
+    })
+    bytes
   }
 
   /** Partition count that lands output files near `targetBytes` for

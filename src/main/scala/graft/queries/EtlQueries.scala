@@ -49,9 +49,10 @@ object EtlQueries {
       }
       // K-TBL's catalog half (reference main.py:63-76 `create_table`): the
       // table is REGISTERED once and consumers query the table, not the
-      // path. The catalog keeps the partition index, so the ~2.4k day
-      // directories are listed once at RECOVER PARTITIONS instead of
-      // re-listed + schema-re-inferred by every downstream query.
+      // path. Its files and `date=` partitions come from the sink's commit
+      // log (`_spark_metadata`, see Sink), so the ~2.4k day directories
+      // are never listed and no partition repair is needed; the catalog
+      // schema spares every reader the schema inference.
       // A table of that name registered elsewhere (a persistent catalog
       // remembers the scratch root of a run that is gone) is replaced:
       // only this run's path holds this run's rows.
@@ -63,7 +64,6 @@ object EtlQueries {
           spark.sql(s"DROP TABLE IF EXISTS $tbl")
           spark.sql(s"CREATE TABLE $tbl ($cols) USING parquet " +
             s"PARTITIONED BY (${Schemas.partitionCol}) LOCATION '$path'")
-          spark.sql(s"MSCK REPAIR TABLE $tbl")
         }
       }
       // Cache the scan: nine downstream queries read this table. At 100 TB
@@ -364,8 +364,8 @@ object EtlQueries {
     // deliberately a PATH scan, not the cached table: this query asserts
     // the parquet LAYOUT prunes (PartitionFilters reaching the file scan)
     // — the cached-table fast path would hide it. The DataFrame (and so
-    // its file index) is memoized; re-listing 2.4k day dirs per call was
-    // ~4s at sf0.1.
+    // its file index, read from the sink's commit log rather than by
+    // listing the ~2.4k day directories) is memoized per session.
     val tbl = pruneScanCache.getOrBuild(spark, sfDir) {
       spark.read.parquet(Sink.scratchPath(sfDir, "fb_stat"))
     }

@@ -1834,21 +1834,44 @@ class GraftSpec extends AnyFunSuite {
       s"restart must process only unseen input: $rows")
   }
 
-  test("Sink.appendPartitioned: double append doubles per-partition rows, files stay clustered") {
+  /** Five rows over two days, in the fb_stat layout's key columns. */
+  private def sinkRows(): DataFrame = {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/t"
-    val df = Seq(
+    Seq(
       ("1995-01-01", "c-2", "x", 1L), ("1995-01-01", "c-1", "y", 2L),
       ("1995-01-02", "c-3", "z", 3L), ("1995-01-02", "c-0", "w", 4L),
       ("1995-01-01", "c-0", "v", 5L))
       .toDF("d", "campaign_id", "campaign_name", "v")
       .withColumn("date", to_date(col("d"))).drop("d")
+  }
+
+  private def sinkAppend(df: DataFrame, path: String): Unit =
+    etl.Sink.appendPartitioned(df, path, "date", Seq("campaign_id", "campaign_name"))
+
+  /** Parquet part files under `path`, outside its hidden directories. */
+  private def partFiles(path: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(path)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".parquet") && root.relativize(p).iterator().asScala
+        .forall(n => !n.toString.startsWith("_") && !n.toString.startsWith(".")))
+      .map(_.toString).toSeq
+    finally walk.close()
+  }
+
+  private def loggedPaths(path: String): Seq[String] =
+    SpecBridge.loggedFiles(spark, path).map(f => new org.apache.hadoop.fs.Path(f._1).toUri.getPath)
+
+  test("Sink.appendPartitioned: double append doubles per-partition rows, files stay clustered") {
+    val path = etl.Scratch.workDir("sink_").resolve("t").toString
+    val df = sinkRows()
     def counts() = spark.read.parquet(path).groupBy("date").count()
       .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
-    etl.Sink.appendPartitioned(df, path, "date", Seq("campaign_id", "campaign_name"))
+    sinkAppend(df, path)
     assert(counts() === Map("1995-01-01" -> 3L, "1995-01-02" -> 2L))
     // K-INS fidelity: a rerun APPENDS (at-least-once), it must not upsert
-    etl.Sink.appendPartitioned(df, path, "date", Seq("campaign_id", "campaign_name"))
+    sinkAppend(df, path)
     assert(counts() === Map("1995-01-01" -> 6L, "1995-01-02" -> 4L))
     // layout: one file per append per day (repartition by partition key),
     // rows inside each file sorted by the clustering columns
@@ -1861,6 +1884,88 @@ class GraftSpec extends AnyFunSuite {
       assert(ids.toSeq === ids.sorted.toSeq,
         s"within-file clustering order: ${ids.mkString(",")}")
     }
+  }
+
+  test("Sink commit: a part file copied into a day directory without a commit is not read") {
+    val path = etl.Scratch.workDir("sink_copy_").resolve("t").toString
+    sinkAppend(sinkRows(), path)
+    val n = spark.read.parquet(path).count()
+    val day = java.nio.file.Paths.get(path, "date=1995-01-01")
+    val part = partFiles(day.toString).head
+    java.nio.file.Files.copy(java.nio.file.Paths.get(part), day.resolve("part-99999-copied.parquet"))
+    assert(partFiles(path).size === 3)
+    assert(spark.read.parquet(path).count() === n)
+    assert(SpecBridge.fileIndexes(spark.read.parquet(path)) === Seq("MetadataLogFileIndex"))
+  }
+
+  test("Sink commit: an append whose write throws leaves the log and the row count unchanged") {
+    val path = etl.Scratch.workDir("sink_fail_").resolve("t").toString
+    val df = sinkRows()
+    sinkAppend(df, path)
+    val logged = SpecBridge.loggedFiles(spark, path)
+    val n = spark.read.parquet(path).count()
+    val bad = df.withColumn("v",
+      when(col("v") === 3L, raise_error(lit("write fails mid-job"))).otherwise(col("v")))
+    val e = intercept[Exception](sinkAppend(bad, path))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("write fails mid-job")), e.toString)
+    assert(SpecBridge.loggedFiles(spark, path) === logged)
+    assert(spark.read.parquet(path).count() === n)
+    // the next append commits as usual
+    sinkAppend(df, path)
+    assert(spark.read.parquet(path).count() === 2 * n)
+  }
+
+  test("Sink commit: four threads appending to one table land every row, each file listed once") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    val path = etl.Scratch.workDir("sink_conc_").resolve("t").toString
+    val df = sinkRows()
+    val n = df.count()
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      val jobs = (1 to 4).map(_ => pool.submit(new Callable[Unit] { def call(): Unit = sinkAppend(df, path) }))
+      jobs.foreach(_.get(5, TimeUnit.MINUTES))
+    } finally pool.shutdown()
+    assert(spark.read.parquet(path).count() === 4 * n)
+    val logged = loggedPaths(path)
+    assert(logged.distinct.size === logged.size, s"a file is listed twice: ${logged.sorted}")
+    assert(logged.toSet === partFiles(path).toSet)
+  }
+
+  test("Sink commit: a table written before the log existed keeps all its rows after a logged append") {
+    val path = etl.Scratch.workDir("sink_adopt_").resolve("t").toString
+    val df = sinkRows()
+    df.write.partitionBy("date").parquet(path) // no commit log
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_spark_metadata")))
+    val n = spark.read.parquet(path).count()
+    sinkAppend(df, path)
+    assert(spark.read.parquet(path).count() === 2 * n)
+    val logged = loggedPaths(path)
+    assert(logged.distinct.size === logged.size, s"a file is listed twice: ${logged.sorted}")
+    assert(logged.toSet === partFiles(path).toSet)
+  }
+
+  test("Sink.dataBytes: a logged table's bytes are its part files' bytes") {
+    val path = etl.Scratch.workDir("sink_bytes_").resolve("t").toString
+    sinkAppend(sinkRows(), path)
+    sinkAppend(sinkRows(), path)
+    val meta = java.nio.file.Paths.get(path, "_spark_metadata")
+    assert(java.nio.file.Files.list(meta).count() > 0)
+    assert(etl.Sink.dataBytes(path) === SpecBridge.loggedFiles(spark, path).map(_._2).sum)
+    assert(etl.Sink.dataBytes(path) ===
+      partFiles(path).map(p => java.nio.file.Files.size(java.nio.file.Paths.get(p))).sum)
+  }
+
+  test("fb_stat catalog table reads its files from the commit log, no partition repair") {
+    val fb = queries.EtlQueries.fbStatTable(spark, sf)
+    val tbl = queries.EtlQueries.fbStatTableName(sf)
+    val path = etl.Sink.scratchPath(sf, "fb_stat")
+    assert(SpecBridge.fileIndexes(spark.table(tbl)) === Seq("MetadataLogFileIndex"))
+    assert(SpecBridge.fileIndexes(spark.read.parquet(path)) === Seq("MetadataLogFileIndex"))
+    assert(fb.count() === spark.read.parquet(path).count())
+    val day = spark.read.parquet(path).agg(min("date")).head().getDate(0)
+    assert(spark.table(tbl).filter(col("date") === lit(day)).count() ===
+      spark.read.parquet(path).filter(col("date") === lit(day)).count())
   }
 
   // ---- Physical-plan assertions (scale hygiene) -----------------------

@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 import org.apache.spark.storage.BroadcastBlockId
 
-/** What the reuse specs inspect in this JVM: the broadcast join
-  * relations its block manager holds and the streaming listener buses of
-  * a SparkContext.
+/** What the reuse and sink specs inspect in this JVM: the broadcast
+  * join relations its block manager holds, the streaming listener buses
+  * of a SparkContext, a sink table's commit log and the file index a
+  * scan reads.
   */
 object SpecBridge {
 
@@ -34,4 +35,19 @@ object SpecBridge {
   /** Streaming listener buses registered on `spark`'s SparkContext. */
   def streamBuses(spark: SparkSession): Int =
     spark.sparkContext.listenerBus.findListenersByClass[StreamingQueryListenerBus]().size
+
+  /** The files the commit log of the `graft.etl.Sink` table at `table`
+    * lists: the part files its readers see.
+    */
+  def loggedFiles(spark: SparkSession, table: String): Seq[(String, Long)] =
+    SinkLog.open(spark, table).allFiles().toSeq.map(f => (f.path, f.size))
+
+  /** Class names of the file indexes `df`'s analyzed plan scans. */
+  def fileIndexes(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        r.location.getClass.getSimpleName
+    }
 }
