@@ -83,28 +83,14 @@ object Bench {
             .map(g => g.group(1) -> g.group(2).toDouble).toMap
         }.getOrElse(Map.empty)
       } catch { case _: Throwable => Map.empty }
-    // Intentional semantic changes: a query whose WORK legitimately grew
-    // this round (documented reason) is reported under
-    // "intentional_changes" instead of "regressions" — the artifact stays
-    // self-adjudicating without burying a real plan drift behind it.
-    // SCOPED: each entry names the prev_sec range (from the prior round's
-    // committed artifact) it excuses, so it can only absorb the ONE
-    // transition it documents — once the new baseline is committed the
-    // entry goes dead instead of suppressing future genuine regressions
-    // of the same query forever (the round-13 x_containment entry did
-    // exactly that and is removed now that its baseline landed).
-    final case class Intentional(reason: String, prevLo: Double, prevHi: Double)
-    val intentional = Map.empty[String, Intentional]
     def classify(rs: Seq[(String, Double, Double, Double)])
-        : (Double, Seq[(String, Double, Double, Double)], Seq[(String, Double, Double, Double)]) = {
+        : (Double, Seq[(String, Double, Double, Double)]) = {
       val medianRatio =
         if (rs.isEmpty) 1.0 else rs.map(_._2).sorted.apply(rs.size / 2)
       val flagged = rs
         .filter { case (_, r, v, _) => r > 1.5 * medianRatio && v > 0.2 }
         .sortBy(-_._2)
-      val (i, g) = flagged.partition { case (k, _, _, p) =>
-        intentional.get(k).exists(e => p >= e.prevLo && p <= e.prevHi) }
-      (medianRatio, i, g)
+      (medianRatio, flagged)
     }
     def ratiosOf(res: Seq[(String, Double)]) = res.flatMap { case (k, v) =>
       prev.get(k).filter(_ > 0).map(p => (k, v / p, v, p))
@@ -118,7 +104,7 @@ object Bench {
     // can't do after the fact.
     var finalResults = results
     var extraPasses: Seq[Map[String, Double]] = Nil
-    var (medianRatio, intended, regressions) = classify(ratiosOf(results))
+    var (medianRatio, regressions) = classify(ratiosOf(results))
     if (regressions.nonEmpty) {
       val names = regressions.map(_._1).toSet
       extraPasses = (1 to 2).map { _ =>
@@ -136,7 +122,7 @@ object Bench {
         }
       }
       val re = classify(ratiosOf(finalResults))
-      medianRatio = re._1; intended = re._2; regressions = re._3
+      medianRatio = re._1; regressions = re._2
     }
     val qs = finalResults.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     // Per-query diagnostics: [warmup, pass1, pass2, pass3, re-measure...].
@@ -158,10 +144,6 @@ object Bench {
     val regs = regressions.map { case (k, r, v, p) =>
       s"""{"q":${jstr(k)},"ratio":${jnum(r)},"sec":${jnum(v)},"prev_sec":${jnum(p)}}"""
     }.mkString("[", ",", "]")
-    val intentionals = intended.map { case (k, r, v, p) =>
-      s"""{"q":${jstr(k)},"ratio":${jnum(r)},"sec":${jnum(v)},""" +
-        s""""prev_sec":${jnum(p)},"reason":${jstr(intentional(k).reason)}}"""
-    }.mkString("[", ",", "]")
     // BASELINE.md honesty: the reference publishes no benchmark; its only
     // implied latency bound is the 540 s Cloud Function timeout for ONE
     // day-batch. The artifact self-reports the whole-suite total against
@@ -171,18 +153,18 @@ object Bench {
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""passes":$ps,"median_ratio_vs_prev":${jnum(medianRatio)},""" +
       s""""regressions":$regs,""" +
-      s""""intentional_changes":$intentionals,""" +
+      s""""intentional_changes":[],""" +
       s""""baseline_sec":$baselineSec,""" +
       s""""bench_vs_baseline":${jnum(total / baselineSec)},""" +
       s""""n_failed":${failures.size},"failures":$fs,"sf":"$sfDir"}"""
     // The gate REFUSES to persist an inconsistent artifact: a recorded
-    // baseline claiming unadjudicated regressions (survived the
-    // re-measure AND not routed through a scoped intentional entry)
-    // would make the next round's comparison start from numbers this
-    // run itself could not explain. The previous artifact stays in
-    // place; the stdout line still reports everything, marked refused —
-    // the fix is to adjudicate (quiet box rerun, or a scoped
-    // intentional entry documenting the semantic change) and re-run.
+    // baseline claiming regressions that survived the re-measure would
+    // make the next round's comparison start from numbers this run
+    // itself could not explain. The previous artifact stays in place;
+    // the stdout line still reports everything, marked refused — the fix
+    // is to adjudicate (a quiet-box rerun) and re-run.
+    // "intentional_changes" / "n_intentional" stay as empty keys: the
+    // output format is parsed downstream.
     val gateOk = regressions.isEmpty
     if (gateOk)
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
@@ -227,7 +209,7 @@ object Bench {
       s""""n_queries":${finalResults.size},"queries":$qs3,""" +
       s""""n_regressions":${regressions.size},""" +
       s""""regressions":$regsCompact,""" +
-      s""""n_intentional":${intended.size},""" +
+      s""""n_intentional":0,""" +
       s""""gate":${jstr(if (gateOk) "ok" else "refused_unadjudicated_regressions_artifact_not_persisted")},""" +
       s""""bench_vs_baseline":${j3(total / baselineSec)},""" +
       s""""n_failed":${failures.size},"failures":$fsCompact,"sf":"$sfDir"}"""

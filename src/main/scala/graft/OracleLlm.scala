@@ -1503,32 +1503,35 @@ object OracleLlm {
     * [[llm.Similarity.KCenterK]] rounds of (argmax min-dist → least-fold)
     * CTE pairs in the same floor(x·2^10) quantized domain — every
     * selection, distance, and tie-break is integer-exact, so the rounds
-    * agree bit-for-bit with the Spark loop.
+    * agree bit-for-bit with the Spark loop. Every CTE is MATERIALIZED:
+    * round i's fold feeds both round i+1's pick and its fold, so an
+    * inlined chain re-evaluates the first fold 2^k times.
     */
   val kcenterSql: String = {
     val k = llm.Similarity.KCenterK
     def centerQe(sel: String): String =
       s"(SELECT e.qe FROM e JOIN $sel s ON e.vec_id = s.vec_id) c"
     val head =
-      s"""WITH e AS (
+      s"""WITH e AS MATERIALIZED (
          |  SELECT vec_id,
          |         list_transform(embedding,
          |           x -> CAST(floor(CAST(x AS DOUBLE) * 1024) AS REAL)) AS qe
          |  FROM embeddings),
-         |n1 AS (SELECT vec_id, CAST(0 AS DOUBLE) AS mind FROM e ORDER BY vec_id LIMIT 1),
-         |m1 AS (
+         |n1 AS MATERIALIZED (
+         |  SELECT vec_id, CAST(0 AS DOUBLE) AS mind FROM e ORDER BY vec_id LIMIT 1),
+         |m1 AS MATERIALIZED (
          |  SELECT m.vec_id, m.qe, ${sqdist("m.qe", "c.qe")} AS mind
          |  FROM e m, ${centerQe("n1")})""".stripMargin
     val rounds = (2 to k).map { i =>
       val excl = (1 until i).map(j => s"SELECT vec_id FROM n$j").mkString(" UNION ALL ")
       val pick =
-        s"""n$i AS (
+        s"""n$i AS MATERIALIZED (
            |  SELECT vec_id, mind FROM m${i - 1}
            |  WHERE vec_id NOT IN ($excl)
            |  ORDER BY mind DESC, vec_id LIMIT 1)""".stripMargin
       val fold = if (i == k) "" else
         s""",
-           |m$i AS (
+           |m$i AS MATERIALIZED (
            |  SELECT m.vec_id, m.qe, least(m.mind, ${sqdist("m.qe", "c.qe")}) AS mind
            |  FROM m${i - 1} m, ${centerQe(s"n$i")})""".stripMargin
       pick + fold

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Session
+import graft.{Scope, Session}
 
 /** Graph operators over the near-duplicate pair graph (SURVEY.md §2.7
   * dedup family): pairwise near-dup detection (x_dedup_minhash) finds
@@ -14,38 +14,6 @@ import graft.Session
   * one doc per connected component.
   */
 object Graph {
-
-  /** Lazy lineage cuts for FIXED-round loops. `cut` truncates the plan to
-    * a LogicalRDD immediately — the per-round plan stays flat, and shared
-    * references (a frame consumed twice in the next round) read ONE
-    * persisted copy instead of recomputing a duplicated subtree — but
-    * defers every job to the single final materialization: a fixed-round
-    * dim-sized loop needs no mid-loop action, so the eager per-round
-    * checkpoint's job (one scheduled job per round, measured 0.1–0.3 s
-    * each at fixture scale) was pure overhead. Convergence-PROBED loops
-    * (connectedComponents, shortestPathsOf) keep an action per round by
-    * necessity and fuse it with the materialization instead.
-    * `seal` eagerly materializes the loop's result (ONE job running every
-    * pending round) and then releases all intermediate rounds' blocks —
-    * they are materialized garbage at that point, never still-needed
-    * lineage.
-    */
-  private final class LazyCuts {
-    private val inter =
-      scala.collection.mutable.ListBuffer.empty[org.apache.spark.rdd.RDD[_]]
-    def cut(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint(false)
-      org.apache.spark.sql.graftx.ColumnBridge.checkpointRdd(out)
-        .foreach(inter += _)
-      out
-    }
-    def seal(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint(true)
-      inter.foreach(_.unpersist(blocking = false))
-      inter.clear()
-      out
-    }
-  }
 
   /** Run `body` — a dim-graph loop whose frames are ≤|V|² rows BY
     * CONSTRUCTION at any fact-table scale (V = the aggregated dim
@@ -62,10 +30,11 @@ object Graph {
     * grows with the corpus and keeps AQE. `body` rebinds the frames it
     * acts on into the child ([[graft.Session.in]]); its result is rebound
     * to `spark`, so the returned frame's lazy tail (nation joins,
-    * orderBy) executes under the caller's conf.
+    * orderBy) executes under the caller's conf. `body` also gets the
+    * call's [[graft.Scope]] for its caches and lineage cuts.
     */
-  private def dimLoop(spark: SparkSession)(body: SparkSession => DataFrame): DataFrame =
-    Session.in(spark, body(Session.pinned(spark,
+  private def dimLoop(spark: SparkSession)(body: (SparkSession, Scope) => DataFrame): DataFrame = {
+    val child = Session.pinned(spark,
       "spark.sql.shuffle.partitions" -> graft.streaming.Drain.PartitionFloor.toString,
       "spark.sql.adaptive.enabled" -> "false",
       // no auto-broadcast inside the loop: each auto-chosen broadcast of a
@@ -73,7 +42,9 @@ object Graph {
       // pure scheduling), and a fixed-round loop pays it per round — the
       // 4-partition shuffle joins pipeline all rounds inside ONE sealed
       // job instead (explicit broadcast() hints are unaffected)
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")))
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    Session.in(spark, Scope.run(body(child, _)))
+  }
 
   /** Iterative minimum-label propagation WITH pointer jumping: every node
     * starts labeled with its own id; each round every node takes the min
@@ -92,45 +63,17 @@ object Graph {
     * via the round cap without the fixpoint is an ERROR, never silently
     * wrong labels.
     */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = Scope.run { sc =>
     // undirected: propagate along both directions of every edge
-    val und = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
-    // iterative plans MUST truncate lineage every round: the pointer-jump
-    // self-join doubles the logical plan per iteration, so an uncut
-    // lineage grows exponentially (the driver OOMs stringifying it long
-    // before executors feel it). localCheckpoint materializes the round's
-    // labels and restarts the plan from the stored blocks — the same
-    // discipline GraphFrames applies to its iterative algorithms.
-    // deterministic release of superseded checkpoint blocks: a reassigned
-    // `labels` only frees its blocks when the ContextCleaner eventually
-    // GCs the unreachable RDD — over tens of rounds that pins dozens of
-    // full (id, comp) snapshots in executor storage. Hold the exact RDD
-    // each localCheckpoint registers (via the frame's LogicalRDD) and
-    // unpersist the PREVIOUS round's blocks as soon as the next round is
-    // materialized — never a registry diff, which would sweep RDDs other
-    // threads persist concurrently.
+    val und = sc.keep(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst"))))
     und.count() // materialize the edge cache before the round loop
-    // LAZY lineage cut + fused probe: localCheckpoint(eager = false)
-    // truncates the plan to a LogicalRDD immediately but defers
-    // materialization to the round's convergence probe — ONE action per
-    // round instead of the eager checkpoint's two (materialize job +
-    // probe job). The probe's agg computes over the marked RDD, which
-    // persists its blocks on that first computation; only THEN is the
-    // superseded round released (its blocks are materialized garbage by
-    // that point, never still-needed lineage).
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    def probeSum(df: DataFrame): (DataFrame, Long) = {
-      val out = df.localCheckpoint(false)
-      val s = out.agg(org.apache.spark.sql.functions.sum("comp")).head().getLong(0)
-      val fresh = org.apache.spark.sql.graftx.ColumnBridge.checkpointRdd(out)
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = fresh
-      (out, s)
-    }
-    var (labels, sum) = probeSum(
-      und.select(col("src").as("id")).distinct().withColumn("comp", col("id")))
+    // every round's labels are a probe (see graft.Scope): the pointer-jump
+    // self-join doubles an uncut plan per round, and the round's
+    // convergence sum is the one job that fills the cut
+    val labelSum = (df: DataFrame) => df.agg(sum("comp")).head().getLong(0)
+    var (labels, total) = sc.probe(
+      und.select(col("src").as("id")).distinct().withColumn("comp", col("id")))(labelSum)
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
@@ -143,19 +86,18 @@ object Graph {
         .groupBy("id").agg(min("comp").as("comp"))
       // pointer jump: a label is always some node's id, so re-resolving it
       // through `stepped` moves every node to its label's (smaller) label
-      val (next, nextSum) = probeSum(stepped.as("a")
+      val (next, nextTotal) = sc.probe(stepped.as("a")
         .join(
           stepped.select(col("id").as("p_id"), col("comp").as("p_comp")),
           col("a.comp") === col("p_id"), "left")
         .select(
           col("a.id").as("id"),
-          least(col("a.comp"), coalesce(col("p_comp"), col("a.comp"))).as("comp")))
+          least(col("a.comp"), coalesce(col("p_comp"), col("a.comp"))).as("comp")))(labelSum)
       labels = next
-      converged = nextSum == sum
-      sum = nextSum
+      converged = nextTotal == total
+      total = nextTotal
       rounds += 1
     }
-    und.unpersist()
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxRounds rounds — " +
@@ -307,28 +249,26 @@ object Graph {
     * mass (rank on nodes with no out-edges) redistributed uniformly.
     * Each iteration is one join-aggregate over the edge frame plus a
     * one-row dangling aggregate; lineage is cut per round
-    * ([[connectedComponents]]' discipline) so the plan stays flat however
-    * many rounds run. Edges and out-weights are computed once and cached
-    * — they are loop invariants.
+    * ([[graft.Scope.cut]]) so the plan stays flat however many rounds
+    * run. Edges and out-weights are computed once and kept — they are
+    * loop invariants.
     */
   def pageRankOf(edges: DataFrame, iterations: Int = PrIterations): DataFrame =
-      dimLoop(edges.sparkSession) { s =>
+      dimLoop(edges.sparkSession) { (s, sc) =>
     val e = Session.in(s, edges)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
+    val nodes = sc.keep(e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct())
     val outw = e.groupBy("src").agg(sum("w").cast("double").as("outw"))
     // edge frame pre-joined with its out-weight: r(i)·w/outw(i) needs only
     // the current ranks joined in per round
-    val ew = e.join(outw, "src")
-      .select(col("src"), col("dst"), (col("w").cast("double")).as("w"), col("outw"))
-      .cache()
+    val ew = sc.keep(e.join(outw, "src")
+      .select(col("src"), col("dst"), (col("w").cast("double")).as("w"), col("outw")))
     ew.count() // materialize invariants BEFORE the per-round checkpoints
     val nDouble = nodes.count().toDouble
     // fixed iterations, no convergence probe → lazy cuts, ONE final job
     // (each round's ranks feed both the contribution join and the
     // dangling-mass anti-join; the cut makes both read one persisted copy)
-    val cuts = new LazyCuts
-    var ranks = cuts.cut(nodes.withColumn("r", lit(1.0) / lit(nDouble)))
+    var ranks = sc.cut(nodes.withColumn("r", lit(1.0) / lit(nDouble)))
     (1 to iterations).foreach { _ =>
       val contrib = ew.join(ranks, ew("src") === ranks("id"))
         .select(col("dst"), (col("r") * col("w") / col("outw")).as("c"))
@@ -337,7 +277,7 @@ object Graph {
       val dangling = ranks.join(ew.select("src").distinct(),
           ranks("id") === col("src"), "left_anti")
         .agg(coalesce(sum("r"), lit(0.0)).as("dang"))
-      ranks = cuts.cut(nodes
+      ranks = sc.cut(nodes
         .join(contrib, nodes("id") === contrib("dst"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"),
@@ -345,12 +285,7 @@ object Graph {
             lit(PrDamping) * (coalesce(col("c"), lit(0.0)) + col("dang") / lit(nDouble)))
             .as("r")))
     }
-    val out = cuts.seal(ranks)
-    // the returned ranks are materialized (seal), so the loop invariants
-    // can be released immediately — no JVM-lifetime pins
-    ew.unpersist()
-    nodes.unpersist()
-    out
+    sc.seal(ranks)
   }
 
   /** X-PAGERANK: rank the nation trade graph. Output carries the rank
@@ -390,9 +325,8 @@ object Graph {
     * emitting a sentinel would make the histogram lie).
     *
     * Scale shape: each round shuffles (id, dist) pairs only — never the
-    * edge payload twice — and the loop state is localCheckpoint'ed with
-    * the previous round's blocks released eagerly
-    * ([[connectedComponents]]' lineage/storage discipline). Round count
+    * edge payload twice — and the loop state is a [[graft.Scope.probe]]
+    * per round, as in [[connectedComponents]]. Round count
     * is the graph's seed-eccentricity (true BFS depth), each round one
     * join + one min-aggregate; convergence is detected by the
     * (reached-count, distance-sum) pair, which changes on every
@@ -401,40 +335,31 @@ object Graph {
     * not approximate.
     */
   def shortestPathsOf(edges: DataFrame, seed: org.apache.spark.sql.Column,
-      maxRounds: Int = 40): DataFrame = {
-    val und = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .cache()
+      maxRounds: Int = 40): DataFrame = Scope.run { sc =>
+    val und = sc.keep(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(edges.select(col("id_b").as("src"), col("id_a").as("dst"))))
     und.count() // materialize the edge cache before the round loop
-    // LAZY lineage cut + fused (count, sum) probe — one action per round
-    // (the connectedComponents discipline: the probe materializes the
-    // lazily-marked checkpoint, then the superseded round is released)
-    var prevCkpt: Option[org.apache.spark.rdd.RDD[_]] = None
-    def probeSig(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val out = df.localCheckpoint(false)
-      val r = out.agg(count(lit(1)), coalesce(sum("dist"), lit(0L))).head()
-      val fresh = org.apache.spark.sql.graftx.ColumnBridge.checkpointRdd(out)
-      prevCkpt.foreach(_.unpersist(blocking = false))
-      prevCkpt = fresh
-      (out, (r.getLong(0), r.getLong(1)))
+    // one probe per round: the (count, sum) signature fills the round's cut
+    val signature = (df: DataFrame) => {
+      val r = df.agg(count(lit(1)), coalesce(sum("dist"), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
     }
     val nodes = und.select(col("src").as("id")).distinct()
-    var (dist, state) = probeSig(
-      nodes.filter(seed).withColumn("dist", lit(0L)))
+    var (dist, state) = sc.probe(
+      nodes.filter(seed).withColumn("dist", lit(0L)))(signature)
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
       val prop = und.join(dist, und("src") === dist("id"))
         .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
-      val (next, nextState) = probeSig(
+      val (next, nextState) = sc.probe(
         dist.select(col("id").as("id"), col("dist").as("dist")).union(prop)
-          .groupBy("id").agg(min("dist").as("dist")))
+          .groupBy("id").agg(min("dist").as("dist")))(signature)
       dist = next
       converged = nextState == state
       state = nextState
       rounds += 1
     }
-    und.unpersist()
     if (!converged)
       throw new IllegalStateException(
         s"shortestPathsOf did not converge within $maxRounds rounds — " +
@@ -486,25 +411,22 @@ object Graph {
     *
     * Each round is ONE join + one (node, label) weight agg + one argmax
     * window over per-node candidate labels — shuffles carry (id, label,
-    * weight) triples, never edges×edges; loop state is
-    * localCheckpoint'ed with eager release of the superseded round
-    * ([[connectedComponents]]' discipline).
+    * weight) triples, never edges×edges; loop state is cut per round
+    * ([[graft.Scope.cut]]).
     */
   def labelPropOf(edges: DataFrame, rounds: Int = LpRounds): DataFrame =
-      dimLoop(edges.sparkSession) { s =>
+      dimLoop(edges.sparkSession) { (s, sc) =>
     val e = Session.in(s, edges)
     import org.apache.spark.sql.expressions.Window
-    val und = e.filter(col("src") =!= col("dst"))
+    val und = sc.keep(e.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"), col("w"))
       .union(e.filter(col("src") =!= col("dst"))
         .select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .cache()
+      .groupBy("src", "dst").agg(sum("w").as("w")))
     und.count() // materialize the edge cache before the round loop
     // fixed rounds, no convergence probe → lazy cuts, ONE final job
-    val cuts = new LazyCuts
     val nodes = und.select(col("src").as("id")).distinct()
-    var labels = cuts.cut(nodes.withColumn("lab", col("id")))
+    var labels = sc.cut(nodes.withColumn("lab", col("id")))
     (1 to rounds).foreach { _ =>
       val scores = und.join(labels, und("dst") === labels("id"))
         .groupBy(und("src").as("nid"), col("lab"))
@@ -515,13 +437,11 @@ object Graph {
         .filter(col("rn") === 1)
         .select(col("nid").as("id"), col("lab"))
       // isolated nodes (none here, but the operator contract) keep theirs
-      labels = cuts.cut(
+      labels = sc.cut(
         nodes.join(argmax, Seq("id"), "left")
           .select(col("id"), coalesce(col("lab"), col("id")).as("lab")))
     }
-    val out = cuts.seal(labels)
-    und.unpersist()
-    out
+    sc.seal(labels)
   }
 
   /** X-LABELPROP: communities of the nation trade graph — the symmetrized
@@ -619,14 +539,13 @@ object Graph {
     * released by the caller afterwards).
     */
   def kcoreOf(und: DataFrame, k: Int = KcoreK, rounds: Int = KcoreRounds): DataFrame =
-      dimLoop(und.sparkSession) { s =>
+      dimLoop(und.sparkSession) { (s, sc) =>
     val u = Session.in(s, und)
     u.count() // materialize the edge cache before the round loop
     // fixed rounds, no convergence probe → lazy cuts, ONE final job
     // (each round's `alive` is consumed twice by the next round's two
     // semi-joins; the cut makes both read one persisted copy)
-    val cuts = new LazyCuts
-    var alive = cuts.cut(u.select(col("a").as("id")).distinct())
+    var alive = sc.cut(u.select(col("a").as("id")).distinct())
     // b-side semi-join FIRST, a-side LAST (guide §2.4): the last join
     // leaves the frame hash-partitioned by `a`, which the degree groupBy
     // reuses — one exchange per round removed vs the a-then-b order
@@ -634,12 +553,12 @@ object Graph {
       val act = u
         .join(alive.select(col("id").as("b")), Seq("b"), "left_semi")
         .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
-      alive = cuts.cut(
+      alive = sc.cut(
         act.groupBy("a").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k)
           .select(col("a").as("id")))
     }
-    cuts.seal(u
+    sc.seal(u
       .join(alive.select(col("id").as("b")), Seq("b"), "left_semi")
       .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
       .groupBy("a").agg(count(lit(1)).as("core_degree")))
@@ -742,15 +661,14 @@ object Graph {
     */
   private[graft] def multiSourceBfs(
       und: DataFrame, rounds: Int = ClosenessRounds): DataFrame =
-      dimLoop(und.sparkSession) { s =>
+      dimLoop(und.sparkSession) { (s, sc) =>
     val u = Session.in(s, und)
     // fixed rounds, no convergence probe → lazy cuts, ONE final job.
     // Each round keeps two frames alive (settled dist + last frontier),
     // both cut: dist is consumed by the anti-join AND the union, the
     // frontier by the next relax — the cuts make every reference read
     // one persisted copy inside the single sealing job.
-    val cuts = new LazyCuts
-    val seed = cuts.cut(u.select(col("a")).distinct()
+    val seed = sc.cut(u.select(col("a")).distinct()
       .select(col("a").as("src"), col("a").as("id"), lit(0L).as("d")))
     var dist = seed
     var frontier = seed
@@ -758,16 +676,16 @@ object Graph {
       val relax = frontier.join(u, frontier("id") === u("a"))
         .select(col("src"), col("b").as("id"), (col("d") + 1L).as("d"))
       // min-agg the frontier-sized delta, keep only first discoveries
-      val discovered = cuts.cut(relax.groupBy("src", "id").agg(min("d").as("d"))
+      val discovered = sc.cut(relax.groupBy("src", "id").agg(min("d").as("d"))
         .join(dist, Seq("src", "id"), "left_anti"))
-      val next = cuts.cut(dist.union(discovered))
+      val next = sc.cut(dist.union(discovered))
       dist = next
       frontier = discovered
     }
-    // seal: one job materializes every round, then every intermediate
-    // (including the final frontier, which has no further consumer) is
-    // released — only the returned dist pins storage memory
-    cuts.seal(dist)
+    // seal: one job materializes every round; the scope then releases
+    // every intermediate (including the final frontier, which has no
+    // further consumer) — only the returned dist pins storage memory
+    sc.seal(dist)
   }
 
   private val bfsCache = new graft.Memo("graph.bfs")
@@ -826,30 +744,29 @@ object Graph {
   def betweenness(spark: SparkSession, sfDir: String): DataFrame = {
     val und = thresholdedUndirected(spark, sfDir)
     val dist = bfsDistTable(spark, sfDir)
-    // fixed-round σ loop: the same LazyCuts discipline as multiSourceBfs —
-    // without cuts, `all = all.unionAll(next)` plus the re-joined `sig`
+    // fixed-round σ loop, cut per round as in multiSourceBfs — without
+    // cuts, `all = all.unionAll(next)` plus the re-joined `sig`
     // unrolled the plan past 2600 Exchange mentions (the committed r15
     // dump), all optimizer/compile cost. Each round cuts `next` (consumed
     // by the union AND the next relax) and the growing `all`; `seal` on
-    // the joined (src,id,d,σ) table materializes ONE job, releases every
-    // intermediate round, and its three downstream readers (a, b, st)
-    // read one persisted copy instead of tripling the subtree.
-    val ds = dimLoop(spark) { s =>
+    // the joined (src,id,d,σ) table materializes ONE job, the scope then
+    // releases every intermediate round, and its three downstream readers
+    // (a, b, st) read one persisted copy instead of tripling the subtree.
+    val ds = dimLoop(spark) { (s, sc) =>
       val (d, u) = (Session.in(s, dist), Session.in(s, und))
-      val cuts = new LazyCuts
-      var sig = cuts.cut(d.filter(col("d") === 0L)
+      var sig = sc.cut(d.filter(col("d") === 0L)
         .select(col("src"), col("id"), lit(1L).as("sigma")))
       var all = sig
       (1 to ClosenessRounds).foreach { i =>
-        val next = cuts.cut(sig.join(u, sig("id") === u("a"))
+        val next = sc.cut(sig.join(u, sig("id") === u("a"))
           .select(col("src"), col("b").as("id"), col("sigma"))
           .join(d.filter(col("d") === i.toLong).select("src", "id"),
             Seq("src", "id"), "left_semi")
           .groupBy("src", "id").agg(sum("sigma").as("sigma")))
-        all = cuts.cut(all.unionAll(next))
+        all = sc.cut(all.unionAll(next))
         sig = next
       }
-      cuts.seal(d.join(all, Seq("src", "id")))
+      sc.seal(d.join(all, Seq("src", "id")))
     }
     val a = ds.filter(col("d") > 0)
       .select(col("src").as("s"), col("id").as("v"), col("d").as("da"),
@@ -897,14 +814,13 @@ object Graph {
     * internal-weight join); everything after is ≤|V|²-row arithmetic.
     */
   def modularity(spark: SparkSession, sfDir: String): DataFrame =
-      dimLoop(spark) { s =>
+      dimLoop(spark) { (s, sc) =>
     val e = tradeEdges(s, sfDir)
-    val und = e.filter(col("src") =!= col("dst"))
+    val und = sc.keep(e.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"), col("w"))
       .union(e.filter(col("src") =!= col("dst"))
         .select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .cache()
+      .groupBy("src", "dst").agg(sum("w").as("w")))
     val labels = Session.in(s, labelTable(spark, sfDir)).select(col("id"), col("lab"))
     val wtot = und.agg(sum("w").as("W"))
     val degs = und.groupBy(col("src").as("id")).agg(sum("w").as("k"))
@@ -917,15 +833,13 @@ object Graph {
       .filter(col("lab_a") === col("lab_b"))
       .groupBy(col("lab_a").as("lab"))
       .agg(sum("w").as("e_c"))
-    val out = dc.join(ec, Seq("lab"), "left")
+    // sealed: materialized before the scope releases the edge cache
+    sc.seal(dc.join(ec, Seq("lab"), "left")
       .crossJoin(broadcast(wtot))
       .select(col("lab").cast("long").as("community"), col("n_nodes"), col("d_c"),
         coalesce(col("e_c"), lit(0L)).as("e_c"),
         ((coalesce(col("e_c"), lit(0L)) * col("W") - col("d_c") * col("d_c"))
           .cast("double") / (col("W") * col("W")).cast("double")).as("q_contrib"))
-      .orderBy("community")
-      .localCheckpoint(true) // materialize before releasing the edge cache
-    und.unpersist()
-    out
+      .orderBy("community"))
   }
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** X-PCA (SURVEY.md §2.7): top principal component of the embedding
   * corpus via power iteration in the exact-integer domain — the
@@ -106,10 +106,9 @@ object Pca {
   def pca(spark: SparkSession, sfDir: String): DataFrame =
     pcaOf(Tables.embeddings(spark, sfDir).select(col("label"), col("embedding")))
 
-  def pcaOf(e: DataFrame): DataFrame = {
-    val q = e.select(col("label"),
-        transform(col("embedding"), x => floor(x.cast("double") * 1024).cast("long")).as("q"))
-      .cache()
+  def pcaOf(e: DataFrame): DataFrame = Scope.run { sc =>
+    val q = sc.keep(e.select(col("label"),
+        transform(col("embedding"), x => floor(x.cast("double") * 1024).cast("long")).as("q")))
     val (n, c) = scatterOf(q)
     val v = powerIterate(c, Rounds).last
     val lambda = rayleigh(c, v)
@@ -118,8 +117,7 @@ object Pca {
     // v components fit long by construction (|v_i| ≤ 2^20); varPc is the
     // per-unit variance (≤ max q² ≈ 10^6) and the checksum ≤ 64·65·2^20/2
     val vLit = typedlit(v.map(_.toLong).toSeq)
-    val out = q
-      .select(col("label"),
+    q.select(col("label"),
         aggregate(zip_with(col("q"), vLit, _ * _), lit(0L), _ + _).as("p"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vectors"),
@@ -127,7 +125,5 @@ object Pca {
       .withColumn("var_pc", lit(varPc.toLong))
       .withColumn("vec_checksum", lit(vChk.toLong))
       .orderBy("label")
-    q.unpersist()
-    out
   }
 }

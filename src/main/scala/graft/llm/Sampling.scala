@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.RollingHash.rolling_hash
 
 /** X-SAMPLE (training-data pipeline): deterministic corpus splitting and
@@ -367,40 +367,39 @@ object Sampling {
     // at real scale the reservoir only sees a subset, so two executions can
     // legitimately split rows differently around boundary values). Caching
     // pins the materialized partitions; both jobs then read the one layout.
-    val ranged = Tables.documents(spark, sfDir)
-      .select(col("source"), col("doc_id"), rolling_hash(col("text")).as("fp"))
-      .repartitionByRange(GlobalIdPartitions, col("fp"), col("doc_id"))
-      .sortWithinPartitions("fp", "doc_id")
-      .as[(String, Long, Long)]
-      .persist()
-    // one light job: per-partition row counts (metadata-sized: ≤ one row
-    // per partition, same license as the Bloom sketch bytes)
-    val counts = ranged.mapPartitions { it =>
-      Iterator.single(org.apache.spark.TaskContext.getPartitionId() -> it.size.toLong)
-    }.collect().toMap
-    val offsets = (0 until GlobalIdPartitions).scanLeft(0L) {
-      case (acc, pid) => acc + counts.getOrElse(pid, 0L)
-    }.toArray // offsets(pid) = rows before partition pid
-    val bc = spark.sparkContext.broadcast(offsets)
-    val withIds = ranged.mapPartitions { it =>
-      val base = bc.value(org.apache.spark.TaskContext.getPartitionId())
-      it.zipWithIndex.map { case ((source, docId, fp), i) =>
-        (source, docId, fp, base + i)
-      }
-    }.toDF("source", "doc_id", "fp", "id")
-    // materialize the per-source rollup eagerly (it is ≤ one row per
-    // source) so the corpus-sized cache can be released before returning
-    val out = withIds
-      .groupBy("source")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        min("id").as("min_id"),
-        max("id").as("max_id"),
-        sum("id").as("sum_id"),
-        sum(col("id") * col("doc_id")).as("id_checksum"))
-      .orderBy("source")
-      .localCheckpoint(true)
-    ranged.unpersist()
+    val out = Scope.run { sc =>
+      val ranged = sc.keep(Tables.documents(spark, sfDir)
+        .select(col("source"), col("doc_id"), rolling_hash(col("text")).as("fp"))
+        .repartitionByRange(GlobalIdPartitions, col("fp"), col("doc_id"))
+        .sortWithinPartitions("fp", "doc_id")
+        .as[(String, Long, Long)])
+      // one light job: per-partition row counts (metadata-sized: ≤ one row
+      // per partition, same license as the Bloom sketch bytes)
+      val counts = ranged.mapPartitions { it =>
+        Iterator.single(org.apache.spark.TaskContext.getPartitionId() -> it.size.toLong)
+      }.collect().toMap
+      val offsets = (0 until GlobalIdPartitions).scanLeft(0L) {
+        case (acc, pid) => acc + counts.getOrElse(pid, 0L)
+      }.toArray // offsets(pid) = rows before partition pid
+      val bc = spark.sparkContext.broadcast(offsets)
+      val withIds = ranged.mapPartitions { it =>
+        val base = bc.value(org.apache.spark.TaskContext.getPartitionId())
+        it.zipWithIndex.map { case ((source, docId, fp), i) =>
+          (source, docId, fp, base + i)
+        }
+      }.toDF("source", "doc_id", "fp", "id")
+      // seal the per-source rollup (it is ≤ one row per source) so the
+      // corpus-sized cache can be released before returning
+      sc.seal(withIds
+        .groupBy("source")
+        .agg(
+          count(lit(1)).as("n_docs"),
+          min("id").as("min_id"),
+          max("id").as("max_id"),
+          sum("id").as("sum_id"),
+          sum(col("id") * col("doc_id")).as("id_checksum"))
+        .orderBy("source"))
+    }
     // LOUD dense-permutation gate: the cache pins one partitioning for
     // both jobs, but a cache is best-effort — if an executor died and a
     // partition recomputed through a re-sampled range exchange, the
@@ -567,44 +566,43 @@ object Sampling {
   def shardManifestOf(perDoc: DataFrame): DataFrame = {
     val spark = perDoc.sparkSession
     import spark.implicits._
-    // cache pins one range partitioning for both jobs ([[globalIds]])
-    val ranged = perDoc
-      .select(col("doc_id"), col("fp"), col("n_tokens"))
-      .repartitionByRange(GlobalIdPartitions, col("fp"), col("doc_id"))
-      .sortWithinPartitions("fp", "doc_id")
-      .as[(Long, Long, Long)]
-      .persist()
-    val tokSums = ranged.mapPartitions { it =>
-      var s = 0L; it.foreach(s += _._3)
-      Iterator.single(org.apache.spark.TaskContext.getPartitionId() -> s)
-    }.collect().toMap
-    val offsets = (0 until GlobalIdPartitions).scanLeft(0L) {
-      case (acc, pid) => acc + tokSums.getOrElse(pid, 0L)
-    }.toArray // offsets(pid) = tokens before partition pid
-    val totalTokens = offsets.last
-    require(totalTokens > 0, "shardManifest: empty corpus")
-    val bc = spark.sparkContext.broadcast(offsets)
     val n = NShards.toLong
-    val sharded = ranged.mapPartitions { it =>
-      var before = bc.value(org.apache.spark.TaskContext.getPartitionId())
-      it.map { case (docId, _, nTok) =>
-        // clamp: a zero-token doc sitting at the exact end of the order
-        // has tokens-before == total and would index one past the last
-        // shard; it belongs in the last shard
-        val shard = math.min(before * n / totalTokens, n - 1)
-        before += nTok
-        (shard, docId, nTok)
-      }
-    }.toDF("shard_id", "doc_id", "n_tokens")
-    val out = sharded
-      .groupBy("shard_id")
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum("n_tokens").as("tokens"),
-        sum("doc_id").as("sum_doc_id"))
-      .orderBy("shard_id")
-      .localCheckpoint(true)
-    ranged.unpersist()
+    // cache pins one range partitioning for both jobs ([[globalIds]])
+    val (out, totalTokens) = Scope.run { sc =>
+      val ranged = sc.keep(perDoc
+        .select(col("doc_id"), col("fp"), col("n_tokens"))
+        .repartitionByRange(GlobalIdPartitions, col("fp"), col("doc_id"))
+        .sortWithinPartitions("fp", "doc_id")
+        .as[(Long, Long, Long)])
+      val tokSums = ranged.mapPartitions { it =>
+        var s = 0L; it.foreach(s += _._3)
+        Iterator.single(org.apache.spark.TaskContext.getPartitionId() -> s)
+      }.collect().toMap
+      val offsets = (0 until GlobalIdPartitions).scanLeft(0L) {
+        case (acc, pid) => acc + tokSums.getOrElse(pid, 0L)
+      }.toArray // offsets(pid) = tokens before partition pid
+      val totalTokens = offsets.last
+      require(totalTokens > 0, "shardManifest: empty corpus")
+      val bc = spark.sparkContext.broadcast(offsets)
+      val sharded = ranged.mapPartitions { it =>
+        var before = bc.value(org.apache.spark.TaskContext.getPartitionId())
+        it.map { case (docId, _, nTok) =>
+          // clamp: a zero-token doc sitting at the exact end of the order
+          // has tokens-before == total and would index one past the last
+          // shard; it belongs in the last shard
+          val shard = math.min(before * n / totalTokens, n - 1)
+          before += nTok
+          (shard, docId, nTok)
+        }
+      }.toDF("shard_id", "doc_id", "n_tokens")
+      (sc.seal(sharded
+        .groupBy("shard_id")
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum("n_tokens").as("tokens"),
+          sum("doc_id").as("sum_doc_id"))
+        .orderBy("shard_id")), totalTokens)
+    }
     // LOUD conservation gate (globalIds' discipline): every doc lands in
     // exactly one valid shard and the token mass is conserved — a cache
     // eviction between the offsets job and the assignment job would

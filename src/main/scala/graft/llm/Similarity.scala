@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** X-SIM (SURVEY.md §2.7): similarity search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
@@ -1262,14 +1262,13 @@ object Similarity {
     * persisted-artifact shape the scaladocs describe (at scale this IS
     * the stored (src, dst) table, rebuilt only on reindex).
     */
-  private val knnEdgesCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
+  private val knnEdgesCache = new graft.Memo("sim.knn_edges")
 
-  private[graft] def knnEdgeTables(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    knnEdgesCache.computeIfAbsent((spark, sfDir), { _ =>
-      val (_, outE0, edges0) = knnEdgesOf(corpus(spark, sfDir))
-      (outE0.localCheckpoint(), edges0.localCheckpoint())
-    })
+  private[graft] def knnEdgeTables(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    lazy val built = knnEdgesOf(corpus(spark, sfDir))
+    (knnEdgesCache.getOrBuild(spark, s"$sfDir#out", cache = true)(built._2.localCheckpoint()),
+      knnEdgesCache.getOrBuild(spark, s"$sfDir#edges", cache = true)(built._3.localCheckpoint()))
+  }
 
   private[graft] def knnEdgesOf(base: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val cb = cbOf(base)
@@ -1547,9 +1546,10 @@ object Similarity {
     * Scale shape: k passes over the cached quantized corpus, each pass a
     * map-side top-1 (TakeOrdered carries ONE row per partition) plus a
     * narrow min-fold against the newly chosen center's broadcast-sized
-    * vector literal; driver state is the k-row model, never data. The
-    * per-round frame is cached and the previous round released, exactly
-    * like the Lloyd loop's persist-per-iteration pattern.
+    * vector literal; driver state is the k-row model, never data. Each
+    * round's min-distance frame is a [[graft.Scope.probe]]: the round's
+    * farthest-point pick fills it, reading the previous round's blocks,
+    * which are then released.
     */
   def kcenter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -1558,22 +1558,22 @@ object Similarity {
       .select(col("vec_id"), col("qe")).as[(Long, Array[Float])].head()
     var chosen = Vector((1L, seedId, 0L))
     var chosenIds = Vector(seedId)
-    var mind = qc.select(col("vec_id"), col("qe"),
-      sqDist(col("qe"), typedlit(seedQe)).as("mind")).cache()
-    for (i <- 2 to KCenterK) {
-      val (nextId, nextDist, nextQe) = mind
-        .filter(!col("vec_id").isin(chosenIds: _*))
-        .orderBy(col("mind").desc, col("vec_id")).limit(1)
-        .select(col("vec_id"), col("mind"), col("qe"))
-        .as[(Long, Double, Array[Float])].head()
-      chosen = chosen :+ ((i.toLong, nextId, nextDist.toLong))
-      chosenIds = chosenIds :+ nextId
-      val next = mind.select(col("vec_id"), col("qe"),
-        least(col("mind"), sqDist(col("qe"), typedlit(nextQe))).as("mind")).cache()
-      mind.unpersist(blocking = false)
-      mind = next
+    val farthest = (mind: DataFrame) => mind
+      .filter(!col("vec_id").isin(chosenIds: _*))
+      .orderBy(col("mind").desc, col("vec_id")).limit(1)
+      .select(col("vec_id"), col("mind"), col("qe"))
+      .as[(Long, Double, Array[Float])].head()
+    Scope.run { sc =>
+      var round = sc.probe(qc.select(col("vec_id"), col("qe"),
+        sqDist(col("qe"), typedlit(seedQe)).as("mind")))(farthest)
+      for (i <- 2 to KCenterK) {
+        val (mind, (nextId, nextDist, nextQe)) = round
+        chosen = chosen :+ ((i.toLong, nextId, nextDist.toLong))
+        chosenIds = chosenIds :+ nextId
+        if (i < KCenterK) round = sc.probe(mind.select(col("vec_id"), col("qe"),
+          least(col("mind"), sqDist(col("qe"), typedlit(nextQe))).as("mind")))(farthest)
+      }
     }
-    mind.unpersist(blocking = false)
     chosen.toDF("sel_ord", "vec_id", "dist_q").orderBy("sel_ord")
   }
 

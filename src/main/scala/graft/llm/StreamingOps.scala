@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.{Session, Tables}
+import graft.{Scope, Session, Tables}
 
 /** Streaming ingestion operators beyond windowed aggregation (SURVEY.md
   * §2.7 streaming family): at-least-once dedup and stream-stream joins —
@@ -507,17 +507,17 @@ object StreamingOps {
     // re-analyzed and re-scanned both lake tables on every trigger for
     // frames that are immutable across the whole drain (guide §6 file
     // listing / §5 caching). Released when the drain finishes.
-    val idx = spark.read.parquet(root.resolve("bands").toString).cache()
-    val sigTbl = spark.read.parquet(root.resolve("sigs").toString).cache()
-    // per-batch shuffle sizing: the candidate-pair distinct shuffles
-    // inside every micro-batch — count derived from the staged chunk
-    // volume (fixture floor 4, scales up with batch bytes), pinned on the
-    // session the stream starts from
-    val ss = graft.streaming.Drain.batchSession(spark,
-      graft.streaming.Drain.adaptivePartitions(
-        root.resolve("chunks"), perTriggerFiles = Some(1)))
-    val (idxS, sigTblS) = (Session.in(ss, idx), Session.in(ss, sigTbl))
-    try {
+    Scope.run { drain =>
+      val idx = drain.keep(spark.read.parquet(root.resolve("bands").toString))
+      val sigTbl = drain.keep(spark.read.parquet(root.resolve("sigs").toString))
+      // per-batch shuffle sizing: the candidate-pair distinct shuffles
+      // inside every micro-batch — count derived from the staged chunk
+      // volume (fixture floor 4, scales up with batch bytes), pinned on
+      // the session the stream starts from
+      val ss = graft.streaming.Drain.batchSession(spark,
+        graft.streaming.Drain.adaptivePartitions(
+          root.resolve("chunks"), perTriggerFiles = Some(1)))
+      val (idxS, sigTblS) = (Session.in(ss, idx), Session.in(ss, sigTbl))
       val q = Session.in(ss, stream).writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           // sign + band ONLY the batch (no .cache(): micro-batch frames are
@@ -528,7 +528,7 @@ object StreamingOps {
         .option("checkpointLocation", work.resolve("ckpt").toString)
         .start()
       try q.processAllAvailable() finally graft.streaming.Drain.stop(q, Some(ss))
-    } finally { idx.unpersist(false); sigTbl.unpersist(false) }
+    }
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
     // a delta-delta pair surfaces from both endpoints' batches with the
     // SAME signature-agreement estimate; the pair log dedups on the key
@@ -623,18 +623,19 @@ object StreamingOps {
     // frozen centroid model: ONE analyzed + cached instance serves every
     // micro-batch (the per-batch read re-listed + re-analyzed + re-scanned
     // an immutable dim per trigger); released when the drain finishes
-    val cents = spark.read.parquet(root.resolve("cents").toString).cache()
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // assign ONLY the batch against the frozen model and append the
-        // (vec_id, embedding, nrm, cent_id) postings
-        Similarity.assignToModel(batch, cents)
-          .write.mode("append").parquet(outDir)
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable()
-    finally { graft.streaming.Drain.stop(q, None); cents.unpersist(false) }
+    Scope.run { drain =>
+      val cents = drain.keep(spark.read.parquet(root.resolve("cents").toString))
+      val q = stream.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // assign ONLY the batch against the frozen model and append the
+          // (vec_id, embedding, nrm, cent_id) postings
+          Similarity.assignToModel(batch, cents)
+            .write.mode("append").parquet(outDir)
+        }
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .start()
+      try q.processAllAvailable() finally graft.streaming.Drain.stop(q, None)
+    }
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
     val cells = spark.read.parquet(root.resolve("base").toString)
       .unionByName(spark.read.parquet(outDir).dropDuplicates("vec_id"))
@@ -829,27 +830,6 @@ object StreamingOps {
   def streamingPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val root = pipeStaging(spark, sfDir)
     val work = graft.etl.Scratch.workDir("stream_pipe_")
-    // lake state: ONE analyzed + cached instance per drain — the old
-    // per-batch `ss.read.parquet(...)` form re-listed, re-analyzed and
-    // re-scanned all three immutable lake tables on every trigger
-    // (guide §6 file listing, §5 caching). Released at drain end.
-    val baseTriples = spark.read.parquet(root.resolve("triples").toString).cache()
-    val baseBands = spark.read.parquet(root.resolve("bands").toString).cache()
-    val baseSigs = spark.read.parquet(root.resolve("sigs").toString).cache()
-    // run-local survivor history: the per-batch tri/bands/sigs frames are
-    // already materialized (persisted) for the batch's own joins — KEEP
-    // them across batches instead of the old parquet-append + re-read
-    // cycle, which paid three commit-protocol writes plus three uncached
-    // log re-scans per micro-batch (guide §6: don't round-trip through
-    // storage what the process already holds). Single-process drain
-    // assumption — exactly the ledger's (below). At-least-once replay
-    // stays harmless precisely as with the appended logs: a retried batch
-    // contributes duplicate history rows, and every history consumer is
-    // duplicate-insensitive (hitKeys and dropNear end in distinct(), the
-    // partner signatures feed a distinct'd pair set).
-    val histTriL = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val histBandsL = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    val histSigsL = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // per-batch funnel ledger, keyed by chunk: every value in a ledger row
     // is already a driver-side scalar (the stage counts come back through
     // collected aggregates), so the row never needs a per-batch parquet
@@ -859,128 +839,144 @@ object StreamingOps {
     // (the sink's dropDuplicates("chunk") equivalent).
     val ledger = new java.util.concurrent.ConcurrentHashMap[
       Long, (Long, Long, Long, Long, Long, Long)]()
+    Scope.run { drain =>
+      // lake state: ONE analyzed + cached instance per drain — the old
+      // per-batch `ss.read.parquet(...)` form re-listed, re-analyzed and
+      // re-scanned all three immutable lake tables on every trigger
+      // (guide §6 file listing, §5 caching). Released at drain end.
+      val baseTriples = drain.keep(spark.read.parquet(root.resolve("triples").toString))
+      val baseBands = drain.keep(spark.read.parquet(root.resolve("bands").toString))
+      val baseSigs = drain.keep(spark.read.parquet(root.resolve("sigs").toString))
+      // run-local survivor history: the per-batch tri/bands/sigs frames are
+      // already materialized (kept in the drain's scope) for the batch's
+      // own joins — KEEP them across batches instead of the old
+      // parquet-append + re-read cycle, which paid three commit-protocol
+      // writes plus three uncached log re-scans per micro-batch (guide §6: don't round-trip through
+      // storage what the process already holds). Single-process drain
+      // assumption — exactly the ledger's (below). At-least-once replay
+      // stays harmless precisely as with the appended logs: a retried batch
+      // contributes duplicate history rows, and every history consumer is
+      // duplicate-insensitive (hitKeys and dropNear end in distinct(), the
+      // partner signatures feed a distinct'd pair set).
+      val histTriL = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      val histBandsL = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      val histSigsL = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      val docSchema = Tables.documents(spark, sfDir).schema
+      val stream = spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(root.resolve("chunks").toString)
+      // per-batch shuffle sizing: every distinct/agg/band join below runs
+      // inside the micro-batch, where the session's core-count partitioning
+      // is pure per-task overhead at batch volume — count derived from the
+      // staged chunk volume (fixture floor 4; scales up with batch bytes,
+      // guide §2.1), pinned on the session the stream starts from.
+      val ss = graft.streaming.Drain.batchSession(spark,
+        graft.streaming.Drain.adaptivePartitions(
+          root.resolve("chunks"), perTriggerFiles = Some(1)))
+      val Seq(baseTriplesS, baseBandsS, baseSigsS) =
+        Seq(baseTriples, baseBands, baseSigs).map(Session.in(ss, _))
+      val q = Session.in(ss, stream).writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) => Scope.run[Unit] { mb =>
+          // each stage frame below is consumed by several actions (ledger
+          // counts, the stage-3 banding, the cross-batch history): keep
+          // the batch-sized frames once per batch, or every action
+          // re-executes the whole quality+hash chain — measured, the
+          // uncached form re-ran it ~12× per micro-batch. The single-consumer
+          // frames (s1, s2) live in the batch's scope; the history frames
+          // (tri, bands2, sigs2) in the drain's, until the drain finishes.
+          // stage 1: row-local quality gate (materialized by stage 2's
+          // first consumer — no dedicated count action needed anymore)
+          val s1 = mb.keep(Pipeline.qualityOf(Pipeline.enrichedOf(batch))
+            .select(col("doc_id"), col("text")))
+          val tri = drain.keep(pipeTriples(s1))
 
-    val docSchema = Tables.documents(spark, sfDir).schema
-    val stream = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(root.resolve("chunks").toString)
-    // per-batch shuffle sizing: every distinct/agg/band join below runs
-    // inside the micro-batch, where the session's core-count partitioning
-    // is pure per-task overhead at batch volume — count derived from the
-    // staged chunk volume (fixture floor 4; scales up with batch bytes,
-    // guide §2.1), pinned on the session the stream starts from.
-    val ss = graft.streaming.Drain.batchSession(spark,
-      graft.streaming.Drain.adaptivePartitions(
-        root.resolve("chunks"), perTriggerFiles = Some(1)))
-    val Seq(baseTriplesS, baseBandsS, baseSigsS) =
-      Seq(baseTriples, baseBands, baseSigs).map(Session.in(ss, _))
-    try {
-    val q = Session.in(ss, stream).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // each stage frame below is consumed by several actions (ledger
-        // counts, the stage-3 banding, the cross-batch history): persist
-        // the batch-sized frames once per batch, or every action
-        // re-executes the whole quality+hash chain — measured, the
-        // uncached form re-ran it ~12× per micro-batch
-        // stage 1: row-local quality gate (materialized by stage 2's
-        // first consumer — no dedicated count action needed anymore)
-        val s1 = Pipeline.qualityOf(Pipeline.enrichedOf(batch))
-          .select(col("doc_id"), col("text")).persist()
-        val tri = pipeTriples(s1).persist()
+          // stage 2: exact dedup vs lake + earlier batches + same batch.
+          // the history side stays un-shuffled: probe it with the
+          // broadcast batch key set, then flag batch rows off the (small)
+          // hit list
+          val histT = (baseTriplesS +: histTriL.toSeq).reduce(_ unionByName _)
+          val keys = Seq("eh64", "eh31", "n_chars")
+          // no inner distinct on the probe keys: in-batch exact dups are
+          // rare, hitKeys re-distincts after the probe, and the distinct
+          // was a whole extra shuffle inside the broadcast build
+          val hitKeys = histT
+            .join(broadcast(tri.select(keys.map(col): _*)), keys)
+            .select(keys.map(col): _*).distinct()
+          // keeper rule via a window over the batch rows (one batch-sized
+          // exchange in the main job) instead of a groupBy + broadcast
+          // join — one fewer serialized broadcast-build wave per batch
+          val s2 = mb.keep(s1
+            .join(tri.select(col("doc_id") +: keys.map(col): _*), Seq("doc_id"))
+            .join(broadcast(hitKeys).withColumn("in_hist", lit(1L)), keys, "left")
+            .withColumn("keeper_id", min("doc_id").over(
+              org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
+            .filter(col("in_hist").isNull && col("doc_id") === col("keeper_id"))
+            .select(col("doc_id"), col("text")))
 
-        // stage 2: exact dedup vs lake + earlier batches + same batch.
-        // the history side stays un-shuffled: probe it with the
-        // broadcast batch key set, then flag batch rows off the (small)
-        // hit list
-        val histT = (baseTriplesS +: histTriL.toSeq).reduce(_ unionByName _)
-        val keys = Seq("eh64", "eh31", "n_chars")
-        // no inner distinct on the probe keys: in-batch exact dups are
-        // rare, hitKeys re-distincts after the probe, and the distinct
-        // was a whole extra shuffle inside the broadcast build
-        val hitKeys = histT
-          .join(broadcast(tri.select(keys.map(col): _*)), keys)
-          .select(keys.map(col): _*).distinct()
-        // keeper rule via a window over the batch rows (one batch-sized
-        // exchange in the main job) instead of a groupBy + broadcast
-        // join — one fewer serialized broadcast-build wave per batch
-        val s2 = s1
-          .join(tri.select(col("doc_id") +: keys.map(col): _*), Seq("doc_id"))
-          .join(broadcast(hitKeys).withColumn("in_hist", lit(1L)), keys, "left")
-          .withColumn("keeper_id", min("doc_id").over(
-            org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
-          .filter(col("in_hist").isNull && col("doc_id") === col("keeper_id"))
-          .select(col("doc_id"), col("text"))
-          .persist()
+          // stage 3: near-dup vs base index + survivor history + same batch
+          val sigs2 = drain.keep(nearDupBatchSigs(s2))
+          val bands2 = drain.keep(Dedup.bandsOf(sigs2))
+          val histBands = (baseBandsS +: histBandsL.toSeq).reduce(_ unionByName _)
+          val histSigs = (baseSigsS +: histSigsL.toSeq).reduce(_ unionByName _)
+          // no per-side distinct: the union below re-distincts anyway, so
+          // the inner ones were two pure-overhead shuffles per micro-batch
+          // (multi-band collisions only duplicate batch-sized pair rows)
+          val candHist = broadcast(bands2.select(col("doc_id"), col("band"), col("bkey")))
+            .as("l")
+            .join(histBands.as("r"),
+              col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey"))
+            .select(col("l.doc_id").as("d"), col("r.doc_id").as("p"))
+          val candBatch = bands2.as("l")
+            .join(bands2.as("r"),
+              col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
+                col("r.doc_id") < col("l.doc_id"))
+            .select(col("l.doc_id").as("d"), col("r.doc_id").as("p"))
+          val partnerSigs = histSigs.unionByName(sigs2)
+            .select(col("doc_id").as("p"), col("sig").as("sig_p"))
+          val dropNear = broadcast(candHist.unionByName(candBatch).distinct())
+            .join(partnerSigs, Seq("p"))
+            .join(broadcast(sigs2.select(col("doc_id").as("d"), col("sig").as("sig_d"))),
+              Seq("d"))
+            .filter(
+              (size(filter(zip_with(col("sig_d"), col("sig_p"), (x, y) => x === y), b => b))
+                .cast("double") / Dedup.NumHashes) >= Dedup.NearDupThreshold)
+            .select(col("d").as("doc_id")).distinct()
+          // EVERY ledger aggregate in ONE action (guide §1.2 — fewer job
+          // waves, the per-batch cost here is scheduled jobs, not data):
+          // arrivals + stage-1 pass/fail over the batch scan, survivors
+          // over s2, and the near-dup drop set's own rollup, unioned into
+          // a single 3-row collect. dropNear ⊆ s2 (its ids come from
+          // bands2 ⊆ sigs2 ⊆ s2) and is distinct, so the stage-3 counts
+          // are exact differences — no dropNear broadcast build and no
+          // flag-join job the previous separate-actions form paid.
+          val aggIn = Pipeline.enrichedOf(batch)
+            .agg(count(lit(1)).as("a"),
+              count(when(Pipeline.qualityPred, 1)).as("b"))
+            .select(lit(0L).as("k"), col("a"), col("b"))
+          val aggS2 = s2
+            .agg(count(lit(1)).as("a"),
+              coalesce(sum("doc_id"), lit(0L)).as("b"))
+            .select(lit(1L).as("k"), col("a"), col("b"))
+          val aggDrop = dropNear
+            .agg(count(lit(1)).as("a"),
+              coalesce(sum("doc_id"), lit(0L)).as("b"))
+            .select(lit(2L).as("k"), col("a"), col("b"))
+          val rows = aggIn.unionAll(aggS2).unionAll(aggDrop).collect()
+            .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+          val (nIn, nS1) = rows(0L)
+          val (nS2, s2sum) = rows(1L)
+          val (dropN, dropSum) = rows(2L)
+          val (nS3, sumAcc) = (nS2 - dropN, s2sum - dropSum)
 
-        // stage 3: near-dup vs base index + survivor history + same batch
-        val sigs2 = nearDupBatchSigs(s2).persist()
-        val bands2 = Dedup.bandsOf(sigs2).persist()
-        val histBands = (baseBandsS +: histBandsL.toSeq).reduce(_ unionByName _)
-        val histSigs = (baseSigsS +: histSigsL.toSeq).reduce(_ unionByName _)
-        // no per-side distinct: the union below re-distincts anyway, so
-        // the inner ones were two pure-overhead shuffles per micro-batch
-        // (multi-band collisions only duplicate batch-sized pair rows)
-        val candHist = broadcast(bands2.select(col("doc_id"), col("band"), col("bkey")))
-          .as("l")
-          .join(histBands.as("r"),
-            col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey"))
-          .select(col("l.doc_id").as("d"), col("r.doc_id").as("p"))
-        val candBatch = bands2.as("l")
-          .join(bands2.as("r"),
-            col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-              col("r.doc_id") < col("l.doc_id"))
-          .select(col("l.doc_id").as("d"), col("r.doc_id").as("p"))
-        val partnerSigs = histSigs.unionByName(sigs2)
-          .select(col("doc_id").as("p"), col("sig").as("sig_p"))
-        val dropNear = broadcast(candHist.unionByName(candBatch).distinct())
-          .join(partnerSigs, Seq("p"))
-          .join(broadcast(sigs2.select(col("doc_id").as("d"), col("sig").as("sig_d"))),
-            Seq("d"))
-          .filter(
-            (size(filter(zip_with(col("sig_d"), col("sig_p"), (x, y) => x === y), b => b))
-              .cast("double") / Dedup.NumHashes) >= Dedup.NearDupThreshold)
-          .select(col("d").as("doc_id")).distinct()
-        // EVERY ledger aggregate in ONE action (guide §1.2 — fewer job
-        // waves, the per-batch cost here is scheduled jobs, not data):
-        // arrivals + stage-1 pass/fail over the batch scan, survivors
-        // over s2, and the near-dup drop set's own rollup, unioned into
-        // a single 3-row collect. dropNear ⊆ s2 (its ids come from
-        // bands2 ⊆ sigs2 ⊆ s2) and is distinct, so the stage-3 counts
-        // are exact differences — no dropNear broadcast build and no
-        // flag-join job the previous separate-actions form paid.
-        val aggIn = Pipeline.enrichedOf(batch)
-          .agg(count(lit(1)).as("a"),
-            count(when(Pipeline.qualityPred, 1)).as("b"))
-          .select(lit(0L).as("k"), col("a"), col("b"))
-        val aggS2 = s2
-          .agg(count(lit(1)).as("a"),
-            coalesce(sum("doc_id"), lit(0L)).as("b"))
-          .select(lit(1L).as("k"), col("a"), col("b"))
-        val aggDrop = dropNear
-          .agg(count(lit(1)).as("a"),
-            coalesce(sum("doc_id"), lit(0L)).as("b"))
-          .select(lit(2L).as("k"), col("a"), col("b"))
-        val rows = aggIn.unionAll(aggS2).unionAll(aggDrop).collect()
-          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-        val (nIn, nS1) = rows(0L)
-        val (nS2, s2sum) = rows(1L)
-        val (dropN, dropSum) = rows(2L)
-        val (nS3, sumAcc) = (nS2 - dropN, s2sum - dropSum)
-
-        // ledger row + history ingest (all deterministic per doc:
-        // at-least-once retries contribute duplicate-insensitive rows)
-        ledger.put(batchId, (nIn, nIn - nS1, nS1 - nS2, nS2 - nS3, nS3, sumAcc))
-        histTriL += tri; histBandsL += bands2; histSigsL += sigs2
-        // only the single-consumer frames release at batch end; the
-        // history frames stay persisted until the drain finishes
-        Seq(s1, s2).foreach(_.unpersist(false))
-      }
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally graft.streaming.Drain.stop(q, Some(ss))
-    } finally
-      (Seq(baseTriples, baseBands, baseSigs) ++
-        histTriL ++ histBandsL ++ histSigsL).foreach(_.unpersist(false))
+          // ledger row + history ingest (all deterministic per doc:
+          // at-least-once retries contribute duplicate-insensitive rows)
+          ledger.put(batchId, (nIn, nIn - nS1, nS1 - nS2, nS2 - nS3, nS3, sumAcc))
+          histTriL += tri; histBandsL += bands2; histSigsL += sigs2
+        }}
+        .option("checkpointLocation", work.resolve("ckpt").toString)
+        .start()
+      try q.processAllAvailable() finally graft.streaming.Drain.stop(q, Some(ss))
+    }
     graft.streaming.Drain.deleteRecursively(work.resolve("ckpt"))
     // the ledger is per-batch metadata (7 longs × #chunks) assembled from
     // driver-side aggregates — build the result frame directly instead of

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.RollingHash.rolling_hash
 
 /** X-TEXT (SURVEY.md §2.7): text analysis operators for training-data
@@ -690,8 +690,7 @@ object TextAnalysis {
     * word-type frame is cached once; rounds stack narrow replace
     * expressions on it.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Long, String, String, Long)], DataFrame)]()
+  private val bpeCache = new graft.Memo("text.bpe")
 
   /** The trained state: the merge table plus the word-type → fused
     * symbol-sequence map (vocab-sized; eagerly checkpointed so the
@@ -700,17 +699,23 @@ object TextAnalysis {
     * training run, the way a tokenizer is trained once and applied many
     * times.
     */
-  private def bpeTrain(spark: SparkSession, sfDir: String): (Seq[(Long, String, String, Long)], DataFrame) =
-    bpeCache.computeIfAbsent((spark, sfDir), { _ =>
-      val words = Tables.documents(spark, sfDir)
+  private def bpeTrain(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    lazy val trained = bpeTrainOnce(spark, sfDir)
+    (bpeCache.getOrBuild(spark, s"$sfDir#merges")(trained._1),
+      bpeCache.getOrBuild(spark, s"$sfDir#words", cache = true)(trained._2))
+  }
+
+  private def bpeTrainOnce(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+    val fin = Scope.run { sc =>
+      val words = sc.keep(Tables.documents(spark, sfDir)
         .select(explode(tokens(col("text"))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c"))
         .select(col("w"),
-          concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("seq"), col("c"))
-        .persist()
+          concat(lit(" "), regexp_replace(col("w"), "(.)", "$1 ")).as("seq"), col("c")))
       words.count()
       var cur: DataFrame = words
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
       var k = 1
       var exhausted = false
       while (k <= BpeMergeCount && !exhausted) {
@@ -738,16 +743,13 @@ object TextAnalysis {
           k += 1
         }
       }
-      val fin = cur.localCheckpoint(true)
-      words.unpersist()
-      (merges.toSeq, fin)
-    })
-
-  def bpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    bpeTrain(spark, sfDir)._1
-      .toDF("merge_rank", "lhs", "rhs", "pair_count").orderBy("merge_rank")
+      sc.seal(cur)
+    }
+    (merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count"), fin)
   }
+
+  def bpeMerges(spark: SparkSession, sfDir: String): DataFrame =
+    bpeTrain(spark, sfDir)._1.orderBy("merge_rank")
 
   /** X-BPE-APPLY: apply the trained merges back to the corpus — the
     * tokenizer-fertility profile (symbols per word, chars per symbol)

@@ -5,11 +5,11 @@
  * org.apache.spark.sql.classic.ExpressionUtils, which is private[sql] —
  * hence this one-file package bridge (the same pattern public Spark
  * extension libraries use). The session clone behind `graft.Session` is
- * private[sql] for the same reason. `ReuseBridge` reaches what a memo or
- * a finished stream releases: a cache entry's column buffers, the state
- * store's loaded providers and a session's streaming listener bus (the
- * last two private fields, read by reflection). No other internals are
- * touched.
+ * private[sql] for the same reason. `ReuseBridge` reaches what a memo, a
+ * call scope or a finished stream holds or releases: a cache entry's
+ * column buffers, a lazy checkpoint's fill job, the state store's loaded
+ * providers and a session's streaming listener bus (the last two private
+ * fields, read by reflection). No other internals are touched.
  */
 package org.apache.spark.sql.graftx
 
@@ -52,10 +52,11 @@ object ColumnBridge {
       }
 }
 
-/** What a memoized artifact holds and what a finished stream leaves
-  * behind, reached where the public API stops: the lineage-cut artifact
-  * with its measured size, the data behind a cache entry, the state-store
-  * providers of one query run and a session's streaming listener bus.
+/** What a memoized artifact or a call scope holds and what a finished
+  * stream leaves behind, reached where the public API stops: the
+  * lineage-cut artifact with its measured size, the fill of a lazy cut,
+  * the data behind a cache entry, the state-store providers of one query
+  * run and a session's streaming listener bus.
   */
 object ReuseBridge {
   import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -87,15 +88,33 @@ object ReuseBridge {
     }
   }
 
+  /** Fill the lazily checkpointed `cut` now: the job an eager
+    * `localCheckpoint` runs (every partition of the checkpoint RDD
+    * computed and stored), run as an SQL execution of `cut`'s session so
+    * its tasks see that session's conf. The RDD is registered before the
+    * job starts, so a caller still holds it if the job throws.
+    */
+  def fill(cut: DataFrame): Unit = {
+    val ds = cut.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ColumnBridge.checkpointRdd(cut).foreach { rdd =>
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        ds.queryExecution, Some("localCheckpoint"))(rdd.doCheckpoint())
+    }
+  }
+
+  private def cacheEntry(ds: org.apache.spark.sql.Dataset[_]) =
+    ds.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+
+  /** Whether the cache manager holds an entry for `ds`'s plan. */
+  def isCached(ds: org.apache.spark.sql.Dataset[_]): Boolean = cacheEntry(ds).isDefined
 
   /** The cache manager's column-buffer RDD behind `df`, once an action
     * has started to fill it, and the bytes its batches hold so far.
     */
   def cached(df: DataFrame): Option[(Int, Long)] =
-    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-      .map(_.cachedRepresentation.cacheBuilder)
+    cacheEntry(df).map(_.cachedRepresentation.cacheBuilder)
       .filter(b => b.sizeInBytesStats.value > 0 || b.isCachedColumnBuffersLoaded)
       .map(b => (b.cachedColumnBuffers.id, b.sizeInBytesStats.value.longValue))
 

@@ -725,7 +725,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("Q-IDEM-KEYED: rerun lands zero rows, new keys still land, q_idem still doubles") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_idem_keyed_spec")
+    val dir = graft.etl.Scratch.workDir("graft_idem_keyed_spec")
     val path = dir.resolve("t").toString
     val batch = Seq((1L, "a", 10.0), (2L, "b", 20.0), (1L, "a", 10.0))
       .toDF("k1", "k2", "v")
@@ -949,7 +949,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("x_ann_compact: one data file per cell after compaction; served probe identical") {
     // standalone compaction flow on a fresh fragmented staging
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_compact")
+    val dir = graft.etl.Scratch.workDir("graft_ann_compact")
       .toString + "/idx"
     llm.Similarity.pqIndexFrame(Tables.embeddings(spark, sf))
       .repartition(graft.queries.AnnServe.FragmentSlices)
@@ -1089,7 +1089,7 @@ class GraftSpec extends AnyFunSuite {
   test("x_stream_kmv: state refines across batches and equals the batch order statistic") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val work = java.nio.file.Files.createTempDirectory("graft_kmv_spec_")
+    val work = graft.etl.Scratch.workDir("graft_kmv_spec_")
     val src = work.resolve("src"); java.nio.file.Files.createDirectories(src)
     def stageChunk(name: String, mtimeSec: Long, hashes: Seq[Long]): Unit = {
       val tmp = work.resolve(s"tmp_$name")
@@ -1773,7 +1773,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("streaming watermark: late event beyond threshold is dropped, window finalizes once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_wm").toString
+    val dir = graft.etl.Scratch.workDir("graft_wm").toString
     val src = dir + "/in"
     def write(rows: Seq[(Long, String, Double)]): Unit =
       rows.map { case (u, ts, v) => (u, java.sql.Timestamp.valueOf(ts), v) }
@@ -1807,7 +1807,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("streaming file sink + checkpoint: restart resumes exactly-once, no reprocessing") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = graft.etl.Scratch.workDir("graft_ckpt").toString
     val (src, out, ckpt) = (dir + "/in", dir + "/out", dir + "/ckpt")
     def write(rows: Seq[(Long, Double)]): Unit =
       rows.map { case (id, v) => (id, v) }.toDF("id", "v")
@@ -2305,7 +2305,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("q_stream_dsv2: capped micro-batches through the connector; union equals the batch scan") {
     val src = etl.FbInsightsSource.jsonlPath(spark, sf)
-    val work = java.nio.file.Files.createTempDirectory("graft_mb_test_")
+    val work = graft.etl.Scratch.workDir("graft_mb_test_")
     val stream = spark.readStream
       .format(classOf[sources.FbInsightsDataSource].getName)
       .option("path", src)
@@ -2669,7 +2669,7 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("connector write abort: a failing job leaves the table unchanged and no temp spool") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_abort_test_").toString
+    val dir = graft.etl.Scratch.workDir("graft_abort_test_").toString
     val fmt = classOf[sources.FbInsightsDataSource].getName
     val ok = etl.FbInsightsSource.raw(spark, sf).limit(30)
     ok.write.format(fmt).option("path", dir).mode("append").save()
@@ -2691,7 +2691,7 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("connector write distribution: sink-requested day clustering yields one file per date") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_distrib_test_").toString
+    val dir = graft.etl.Scratch.workDir("graft_distrib_test_").toString
     val fmt = classOf[sources.FbInsightsDataSource].getName
     // force 3 dates scattered over 8 input partitions: without the
     // sink's RequiresDistributionAndOrdering each of the 8 partitions
@@ -2814,7 +2814,7 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("dsv2 write: connector append round-trips and a double append doubles") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/tbl"
+    val dir = graft.etl.Scratch.workDir("graft_sink").toString + "/tbl"
     val fmt = classOf[sources.FbInsightsDataSource].getName
     val raw = etl.FbInsightsSource.raw(spark, sf)
     val expected = raw.count()
@@ -2829,7 +2829,7 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("dsv2 write: round trip preserves nested arrays and absent keys") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink_rt").toString + "/tbl"
+    val dir = graft.etl.Scratch.workDir("graft_sink_rt").toString + "/tbl"
     val fmt = classOf[sources.FbInsightsDataSource].getName
     val raw = etl.FbInsightsSource.raw(spark, sf)
     raw.write.format(fmt).option("path", dir).mode("append").save()
@@ -2919,7 +2919,7 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("dsv2 modes: permissive skips malformed lines, failfast raises") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjsonl")
+    val dir = graft.etl.Scratch.workDir("graft_badjsonl")
     val day = dir.resolve("date=2020-01-01")
     java.nio.file.Files.createDirectories(day)
     java.nio.file.Files.writeString(day.resolve("part-0.txt"),
@@ -3144,7 +3144,7 @@ class GraftSpec extends AnyFunSuite {
     // far may appear among the served cids — deletion takes effect at
     // the batch commit, not at compaction
     val root = llm.StreamingOps.annDeleteStaging(spark, sf)
-    val work = java.nio.file.Files.createTempDirectory("graft_spec_sdel_")
+    val work = graft.etl.Scratch.workDir("graft_spec_sdel_")
     val tombDir = work.resolve("tombstones").toString
     val allVictims = Tables.embeddings(spark, sf)
       .filter(pmod(col("vec_id"), lit(AnnServe.DeleteMod)) === AnnServe.DeleteRem)
@@ -3321,7 +3321,7 @@ class GraftSpec extends AnyFunSuite {
   }
 
   test("x_ann_delete: victims purged cell-locally, idempotent, and never served") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_delete")
+    val dir = graft.etl.Scratch.workDir("graft_ann_delete")
       .toString + "/idx"
     llm.Similarity.pqIndexFrame(Tables.embeddings(spark, sf))
       .write.mode("overwrite").partitionBy("cent_id").json(dir)
@@ -3662,7 +3662,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("q_delete rewrite: Spark job count independent of affected-file count (≤2)") {
     import java.nio.file.Files
-    val work = Files.createTempDirectory("graft_delete_jobs_")
+    val work = graft.etl.Scratch.workDir("graft_delete_jobs_")
     val srcDir = work.resolve("src").toString
     val dstDir = work.resolve("dst").toString
     Files.createDirectories(java.nio.file.Paths.get(dstDir))
@@ -3696,7 +3696,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("catalog: external LOCATION tables survive into a fresh catalog instance") {
     import java.nio.file.Files
-    val work = Files.createTempDirectory("graft_catalog_durable_")
+    val work = graft.etl.Scratch.workDir("graft_catalog_durable_")
     val wh = work.resolve("wh").toString
     val external = work.resolve("ext_data").toString
     // first catalog instance: CREATE ... LOCATION through SQL DDL
@@ -3898,7 +3898,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("x_vacuum crash-safety: tombstone-first stays loud and self-heals") {
     import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_vacuum_crash_")
+    val root = graft.etl.Scratch.workDir("graft_vacuum_crash_")
     (0 to 2).foreach { v =>
       spark.range(v + 1).write.parquet(root.resolve(s"v$v").toString)
       etl.Cdc.writePointer(root, v.toLong)
@@ -3923,7 +3923,7 @@ class GraftSpec extends AnyFunSuite {
     val days = new java.io.File(fullSrc).list().filter(_.startsWith("date=")).sorted
     assert(days.length >= 4)
     val (firstHalf, secondHalf) = days.splitAt(days.length / 2)
-    val work = Files.createTempDirectory("graft_sink_restart_")
+    val work = graft.etl.Scratch.workDir("graft_sink_restart_")
     val src = work.resolve("landing"); Files.createDirectories(src)
     val dstTable = work.resolve("table").toString
     val ckpt = work.resolve("ckpt").toString
@@ -3988,7 +3988,7 @@ class GraftSpec extends AnyFunSuite {
   test("x_stream_upsert recovery: stop/restart resumes versions without re-applying batches") {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val work = Files.createTempDirectory("graft_upsert_restart_")
+    val work = graft.etl.Scratch.workDir("graft_upsert_restart_")
     val snapRoot = work.resolve("snap"); Files.createDirectories(snapRoot)
     val base = etl.RatesSource.rates(spark, sf)
     base.write.parquet(snapRoot.resolve("v0").toString)
@@ -4048,7 +4048,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("fbins catalog: SQL DDL drives the connector (create/insert/select/list/drop)") {
     import java.nio.file.Files
-    val wh = Files.createTempDirectory("graft_fbins_wh_").toString
+    val wh = graft.etl.Scratch.workDir("graft_fbins_wh_").toString
     spark.conf.set("spark.sql.catalog.fbins_t",
       classOf[graft.sources.FbInsightsCatalog].getName)
     spark.conf.set("spark.sql.catalog.fbins_t.warehouse", wh)
@@ -4058,7 +4058,7 @@ class GraftSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE fbins_t.db.managed ($ddl) USING fbinsights")
     assert(new java.io.File(s"$wh/db/managed").isDirectory)
     // external table at an explicit LOCATION
-    val loc = Files.createTempDirectory("graft_fbins_loc_").toString
+    val loc = graft.etl.Scratch.workDir("graft_fbins_loc_").toString
     spark.sql(s"CREATE TABLE fbins_t.db.ext ($ddl) USING fbinsights LOCATION '$loc'")
 
     // INSERT through SQL lands day-partitions at the external location;
@@ -5225,7 +5225,7 @@ class GraftSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     // a private sfDir (symlinks to the fixture) so no other spec has
     // staged its spool in this JVM yet
-    val sfCopy = Files.createTempDirectory("graft_stale_sf_")
+    val sfCopy = graft.etl.Scratch.workDir("graft_stale_sf_")
     new java.io.File(sf).listFiles().map(_.toPath)
       .foreach(f => Files.createSymbolicLink(sfCopy.resolve(f.getFileName), f))
     // the shared pre-per-process layout, $tmpdir/graft_warehouse/<sf key>/
@@ -5468,7 +5468,7 @@ class GraftSpec extends AnyFunSuite {
     // all three physical types (the nanos copy carries nonzero sub-µs
     // digits to exercise truncation) and assert representative
     // event-time operators are bit-identical across them.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_vintage_")
+    val tmp = graft.etl.Scratch.workDir("graft_vintage_")
     val base = graft.Tables.events(spark, sf)
     base.write.parquet(s"$tmp/ts/events.parquet")
     base.withColumn("ts", col("ts").cast("timestamp_ntz"))
@@ -5490,7 +5490,7 @@ class GraftSpec extends AnyFunSuite {
 
   test("x_stream_attrib recovery: the last-touch state survives a query restart") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_attrib_restart_").toString
+    val dir = graft.etl.Scratch.workDir("graft_attrib_restart_").toString
     val (src, out, ckpt) = (dir + "/in", dir + "/out", dir + "/ckpt")
     val t0 = 1700000000000000L // any epoch micros
     def write(rows: Seq[(Long, Long, Long, String, Long)]): Unit =
@@ -5671,7 +5671,7 @@ class GraftSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val s = spark.newSession()
     val want = sortedRows(SparkEntry.queries("x_stream_dedup")(s, sf))
-    val work = java.nio.file.Files.createTempDirectory("graft_reuse_spec_")
+    val work = graft.etl.Scratch.workDir("graft_reuse_spec_")
     try {
       // a stateful stream that is still running while the drain finishes
       val src = work.resolve("src").toString
@@ -5725,7 +5725,7 @@ class GraftSpec extends AnyFunSuite {
     // a path alias of the fixture: its own scratch table and catalog name
     val alias = sf + "/"
     val tbl = queries.EtlQueries.fbStatTableName(alias)
-    val empty = java.nio.file.Files.createTempDirectory("graft_stale_fb_stat_")
+    val empty = graft.etl.Scratch.workDir("graft_stale_fb_stat_")
     try {
       val cols = etl.Schemas.fbStat.fields
         .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")

@@ -71,7 +71,7 @@ class PropertySpec extends AnyFunSuite {
     import spark.implicits._
     forAll(Gen.nonEmptyListOf(Gen.zip(
       Gen.chooseNum(1, 5), Gen.chooseNum(0L, 1000L)))) { rows =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_prop").toString
+      val dir = graft.etl.Scratch.workDir("graft_prop").toString
       val df = rows.zipWithIndex
         .map { case ((p, v), i) => (i.toLong, s"1995-0$p-01", v) }
         .toDF("id", "d", "v")

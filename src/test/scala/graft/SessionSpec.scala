@@ -57,7 +57,7 @@ class SessionSpec extends AnyFunSuite {
         |  optional double value;
         |  optional binary props (STRING);
         |}""".stripMargin)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nanos_")
+    val tmp = graft.etl.Scratch.workDir("graft_nanos_")
     val rows = Tables.events(spark, sf)
       .select(col("event_id"),
         unix_micros(col("ts")) * 1000L + pmod(col("event_id"), lit(997L)),

@@ -9,13 +9,14 @@ the parquet fixture tables in <sfDir>, loads the Spark result parquet from
 (columns sorted by name, rows sorted). Exact equality required.
 
 The DuckDB connection may spill to a temporary directory (removed at
-exit). x_kcenter's oracle SQL at sf0.001 still stops at DuckDB's memory
-limit on a 16 GB box: nothing of it spills.
+exit). The JSON report records each oracle's wall seconds as `oracle_s`,
+so a slow oracle shows up without a rerun.
 """
 import json
 import shutil
 import sys
 import tempfile
+import time
 
 import duckdb
 
@@ -53,13 +54,16 @@ def compare(sf_dir, out_dir, spill, json_out, only):
     n_pass = n_fail = 0
     report = {}
     for name, sql in sorted(oracle.items()):
+        t0 = time.monotonic()
         try:
             exp = canon(con, sql)
+            oracle_s = round(time.monotonic() - t0, 3)
             got = canon(con, f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
             rec = {"rows_match": len(exp) == len(got),
                    "schema_match": list(exp.columns) == list(got.columns),
                    "hash_match": False,
-                   "spark_rows": len(got), "oracle_rows": len(exp), "err": None}
+                   "spark_rows": len(got), "oracle_rows": len(exp), "err": None,
+                   "oracle_s": oracle_s}
             report[name] = rec
             if list(exp.columns) != list(got.columns):
                 print(f"FAIL {name}: columns exp={list(exp.columns)} got={list(got.columns)}")
@@ -85,7 +89,8 @@ def compare(sf_dir, out_dir, spill, json_out, only):
             print(f"ERROR {name}: {e}")
             report[name] = {"rows_match": False, "schema_match": False,
                             "hash_match": False, "spark_rows": -1,
-                            "oracle_rows": -1, "err": str(e)[:200]}
+                            "oracle_rows": -1, "err": str(e)[:200],
+                            "oracle_s": round(time.monotonic() - t0, 3)}
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
     if json_out:
