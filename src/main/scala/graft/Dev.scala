@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *  - `sql <statement> ...`: SQL with the graft functions registered.
   *  - `hot <sfDir> [query ...]`: each query's first and second run timed
   *    after the fb_stat load (the second is the bench's warm number), with
-  *    the used heap after three collections; then every memoized frame
+  *    the used heap after three collections and the SparkContext's
+  *    persistent RDDs after them (a query that leaves an RDD behind shows
+  *    as a step up); then every memoized frame
   *    with its build seconds, stored bytes and hits, and the count of
   *    stored artifacts against the SparkContext's persistent RDDs. Each
   *    query line also counts the generated classes its first and second
@@ -71,7 +73,8 @@ object Dev {
           val c1 = compiled()
           val second = timed()
           println(f"[hot] $n%-18s first=$first%7.2fs  second=$second%7.2fs  " +
-            f"heap=${heapUsedMb()}%6.1fMB  compiled=${c1 - c0}%4d+${compiled() - c1}%d")
+            f"heap=${heapUsedMb()}%6.1fMB  rdds=${spark.sparkContext.getPersistentRDDs.size}%3d  " +
+            f"compiled=${c1 - c0}%4d+${compiled() - c1}%d")
         }
         println(s"[hot] classes compiled=${compiled()} " +
           s"(codegen cache ${spark.conf.get("spark.sql.codegen.cache.maxEntries")} entries)")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** Profiling / maintenance analytics over the `events` table
   * (SURVEY.md §2.7: X-HISTOGRAM, X-INCR-AGG, X-OVERLAP) — the data-health
@@ -589,13 +589,6 @@ object Analytics {
     * calendar-bounded frames — the documented globalWindowOk class.
     */
   def theilSen(spark: SparkSession, sfDir: String): DataFrame =
-    // session-keyed memo (the conformal pattern): the daily-series
-    // `.cache()` entry is created once per (session, sfDir), not per pass
-    theilsenCache.getOrBuild(spark, sfDir)(theilSenBuild(spark, sfDir))
-
-  private val theilsenCache = new graft.Memo("analytics.theilsen")
-
-  private def theilSenBuild(spark: SparkSession, sfDir: String): DataFrame =
     theilSenOf(Tables.events(spark, sfDir)
       .filter(col("event_type") === "purchase" && col("value").isNotNull)
       .select(
@@ -608,10 +601,10 @@ object Analytics {
     * so the property law can drive it with generated series against a
     * brute median-of-pair-slopes reference.
     */
-  def theilSenOf(series: DataFrame): DataFrame = {
+  def theilSenOf(series: DataFrame): DataFrame = Scope.run { sc =>
     import org.apache.spark.sql.expressions.Window
-    val daily = series
-      .cache() // calendar-sized; feeds the pair join twice + the residual pass
+    // calendar-sized; feeds the pair join twice + the residual pass
+    val daily = sc.cut(series)
     val a = daily.select(col("x").as("xi"), col("y").as("yi"))
     val b = daily.select(col("x").as("xj"), col("y").as("yj"))
     val pairs = a.join(b, col("xj") > col("xi"))
@@ -724,16 +717,7 @@ object Analytics {
     * of an exact order statistic (the approximate sibling is
     * x_quantiles' KLL sketch), and it runs on a quarter of the facts.
     */
-  def conformal(spark: SparkSession, sfDir: String): DataFrame =
-    // session-keyed memo (the bruteCache idiom): the model/cal/qh `.cache()`
-    // entries are created ONCE per (session, sfDir) — fresh DataFrame
-    // instances per bench pass used to pile up new cache entries instead of
-    // reusing or releasing them
-    conformalCache.getOrBuild(spark, sfDir)(conformalBuild(spark, sfDir))
-
-  private val conformalCache = new graft.Memo("analytics.conformal")
-
-  private def conformalBuild(spark: SparkSession, sfDir: String): DataFrame = {
+  def conformal(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     import org.apache.spark.sql.expressions.Window
     val cust = Tables.load(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
@@ -745,7 +729,10 @@ object Analytics {
         pmod(col("o_orderkey"), lit(4L)).as("fold"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .select(col("c_mktsegment"), col("o_orderkey"), col("x"), col("y"), col("fold"))
-    val model = base.filter(col("fold") <= 1L)
+    // ≤|segments| rows, consumed by cal, test, and the output join —
+    // uncut, every consumer re-runs the train-fold fact agg; sealed, so
+    // the output join plans against its true size
+    val model = sc.seal(base.filter(col("fold") <= 1L)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_train"), sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
@@ -757,18 +744,14 @@ object Analytics {
       .withColumn("intercept",
         (col("sy").cast("double") - col("slope") * col("sx").cast("double")) /
           col("n_train").cast("double"))
-      .select("c_mktsegment", "n_train", "slope", "intercept")
-      // ≤|segments| rows, consumed by cal, test, and the output join —
-      // uncached, every consumer re-runs the train-fold fact agg
-      .cache()
+      .select("c_mktsegment", "n_train", "slope", "intercept"))
     def resid = abs(col("y").cast("double") -
       (col("slope") * col("x").cast("double") + col("intercept")))
     // the calibration quarter feeds both the ranking and the rank-count;
-    // cached so the residual join runs once (at 100 TB: persist-to-disk)
-    val cal = base.filter(col("fold") === 2L)
+    // cut so the residual join runs once (at 100 TB: persist-to-disk)
+    val cal = sc.cut(base.filter(col("fold") === 2L)
       .join(broadcast(model), Seq("c_mktsegment"))
-      .select(col("c_mktsegment"), col("o_orderkey"), resid.as("r"))
-      .cache()
+      .select(col("c_mktsegment"), col("o_orderkey"), resid.as("r")))
     val calRanked = cal.withColumn("rk",
       row_number().over(Window.partitionBy("c_mktsegment")
         .orderBy(col("r"), col("o_orderkey"))).cast("long"))
@@ -776,10 +759,11 @@ object Analytics {
     val nCal = cal.groupBy("c_mktsegment").agg(count(lit(1)).as("n_cal"))
       .withColumn("k",
         least(expr(s"($ConformalPct * (n_cal + 1) + 99) div 100"), col("n_cal")))
-    val qh = calRanked.join(broadcast(nCal), Seq("c_mktsegment"))
+    // ≤|segments| rows, consumed by test and the output join (sealed,
+    // as `model` is)
+    val qh = sc.seal(calRanked.join(broadcast(nCal), Seq("c_mktsegment"))
       .filter(col("rk") === col("k"))
-      .select(col("c_mktsegment"), col("n_cal"), col("r").as("q_hat"))
-      .cache() // ≤|segments| rows, consumed by test and the output join
+      .select(col("c_mktsegment"), col("n_cal"), col("r").as("q_hat")))
     val test = base.filter(col("fold") === 3L)
       .join(broadcast(model), Seq("c_mktsegment"))
       .join(broadcast(qh), Seq("c_mktsegment"))
@@ -916,19 +900,18 @@ object Analytics {
     * counts (< 2^53, so the one double expression is bit-deterministic);
     * ties broken by the pair key for a unique top-N.
     */
-  def basket(spark: SparkSession, sfDir: String): DataFrame = {
+  def basket(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     val brands = Tables.load(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_brand"))
-    // cached: the deduped basket frame feeds the order total, the brand
+    // sealed: the deduped basket frame feeds the order total, the brand
     // marginals AND both sides of the pair join — one lineitem scan +
     // dedup instead of four (at scale the equivalent is a materialized
     // basket table all three aggregates read)
-    val ob = Tables.lineitem(spark, sfDir)
+    val ob = sc.seal(Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_partkey"))
       .join(broadcast(brands), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("okey"), col("p_brand").as("brand"))
-      .distinct()
-      .cache()
+      .distinct())
     val nOrders = ob.select(countDistinct("okey").as("n_orders"))
     val marginals = ob.groupBy("brand").agg(count(lit(1)).as("n_b"))
     val pairs = ob.as("a")
@@ -1413,17 +1396,16 @@ object Analytics {
     * the property law can drive it with generated populations against a
     * sequential reference.
     */
-  def survivalOf(perUser: DataFrame): DataFrame = {
+  def survivalOf(perUser: DataFrame): DataFrame = Scope.run { sc =>
     import org.apache.spark.sql.expressions.Window
     val byT = perUser.groupBy("t")
       .agg(sum(lit(1L) - col("cens")).as("d"), sum("cens").as("c"))
     val wSuffix = Window.orderBy(col("t").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // day-domain window: ≤ horizon rows, never data-sized. Cached: both
-    // the step-list agg and the output traverse it, and an uncached frame
+    // day-domain window: ≤ horizon rows, never data-sized. Cut: both
+    // the step-list agg and the output traverse it, and an uncut frame
     // would re-run the fact-sized per-user agg underneath twice.
-    val risk = byT.withColumn("n_at_risk", sum(col("d") + col("c")).over(wSuffix))
-      .cache()
+    val risk = sc.cut(byT.withColumn("n_at_risk", sum(col("d") + col("c")).over(wSuffix)))
     val steps = risk.agg(collect_list(struct(col("t"), col("n_at_risk").as("n"),
       col("d"))).as("steps"))
     risk.crossJoin(broadcast(steps))

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.{PolyHash, PolyHashing, PolyShingles}
 import graft.functions.RollingHash.rolling_hash
 
@@ -637,16 +637,16 @@ object Dedup {
     * fixture's planted near-dups sit well above threshold, which the
     * spec floor asserts.
     */
-  def lshRecall(spark: SparkSession, sfDir: String): DataFrame = {
+  def lshRecall(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     // reuse the memoized+cached shingle sets (the containment join's
     // source) instead of re-scanning documents and re-hashing — and the
     // plan fingerprint stays identical whether or not another consumer
     // already materialized it
     val sh = shingleTable(spark, sfDir).select(col("doc_id"), col("hs").as("shs"))
     val counts = sh.select(col("doc_id"), size(col("shs")).cast("long").as("nsh"))
-    // cached: the exploded shingle index feeds the df gate AND the
-    // pair join back onto itself (memoized-intermediate pattern)
-    val inv = sh.select(col("doc_id"), explode(col("shs")).as("h")).cache()
+    // cut: the exploded shingle index feeds the df gate AND the pair
+    // join back onto itself
+    val inv = sc.cut(sh.select(col("doc_id"), explode(col("shs")).as("h")))
     val okShingles = inv.groupBy("h").agg(count(lit(1)).as("dfh"))
       .filter(col("dfh") >= 2 && col("dfh") <= ShingleDfCap)
       .select("h")
@@ -710,21 +710,20 @@ object Dedup {
     * the property law can plant known shared passages and check the
     * reported spans exactly.
     */
-  def dupSpansOf(docs: DataFrame): DataFrame = {
+  def dupSpansOf(docs: DataFrame): DataFrame = Scope.run { sc =>
     import org.apache.spark.sql.expressions.Window
     val n = SpanGramN
-    val grams = docs
+    // cut: the exploded gram frame feeds the dup-hash aggregate AND the
+    // inverted-index join back onto it — one tokenize+explode pass
+    // instead of two (BM25's memoized-tokenization pattern)
+    val grams = sc.cut(docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"), explode(expr(
         s"transform(sequence(1, size(toks) - ${n - 1}), " +
           s"i -> struct(i AS pos, concat_ws(' ', slice(toks, i, $n)) AS g))")).as("u"))
       .select(col("doc_id"), col("u.pos").cast("long").as("pos"),
-        rolling_hash(col("u.g")).as("gh"))
-      // cached: the exploded gram frame feeds the dup-hash aggregate AND
-      // the inverted-index join back onto it — one tokenize+explode pass
-      // instead of two (BM25's memoized-tokenization pattern)
-      .cache()
+        rolling_hash(col("u.g")).as("gh")))
     val dupHashes = grams
       .groupBy("gh").agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") >= 2)

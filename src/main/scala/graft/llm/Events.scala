@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** X-EVENTS (SURVEY.md §2.7): event-time windowing + sessionization over
   * the `events` table — the Spark-native form of the reference's
@@ -716,8 +716,8 @@ object Events {
     * separated so the property law can drive it with generated sparse
     * activity against a brute-force rolling-distinct reference.
     */
-  def dauWauMauOf(activity: DataFrame): DataFrame = {
-    val ud = activity.distinct().cache()
+  def dauWauMauOf(activity: DataFrame): DataFrame = Scope.run { sc =>
+    val ud = sc.cut(activity.distinct())
     def rolling(span: Int, name: String): DataFrame = ud
       .select(col("user_id"),
         explode(sequence(col("day"), date_add(col("day"), span - 1))).as("rday"))
@@ -997,14 +997,7 @@ object Events {
     * map-side against the BROADCAST word table + one per-user
     * all-bits-set agg; nothing fact-sized ever sorts or re-shuffles.
     */
-  def bloomFpr(spark: SparkSession, sfDir: String): DataFrame =
-    // session-keyed memo (the conformal pattern): the word-table `.cache()`
-    // entry is created once per (session, sfDir), not once per bench pass
-    bloomCache.getOrBuild(spark, sfDir)(bloomFprBuild(spark, sfDir))
-
-  private val bloomCache = new graft.Memo("events.bloom_fpr")
-
-  private def bloomFprBuild(spark: SparkSession, sfDir: String): DataFrame = {
+  def bloomFpr(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     import graft.functions.PolyHash
     val users = Tables.events(spark, sfDir).select("user_id").distinct()
     val buyers = users.filter(pmod(col("user_id"), lit(2L)) === 0L)
@@ -1016,9 +1009,9 @@ object Events {
       .select(col("user_id"),
         expr(s"h div $BloomWordBits").as("w"),
         expr(s"shiftleft(1L, CAST(h % $BloomWordBits AS INT))").as("mask"))
-    val words = bitsOf(buyers).groupBy("w")
-      .agg(expr("bit_or(mask)").as("word"))
-      .cache() // ≤ m/32 rows; consumed by the stats agg AND the probe join
+    // ≤ m/32 rows; consumed by the stats agg AND the probe join
+    val words = sc.cut(bitsOf(buyers).groupBy("w")
+      .agg(expr("bit_or(mask)").as("word")))
     val stats = words.agg(
       sum(expr("bit_count(word)")).as("n_set_bits"))
     val probed = bitsOf(others)
@@ -1063,7 +1056,7 @@ object Events {
     * the deduped (type, hash) frame, then everything pairwise happens
     * on ≤ types·k sketch rows — never an all-pairs join over users.
     */
-  def kmvSketch(spark: SparkSession, sfDir: String): DataFrame = {
+  def kmvSketch(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     import org.apache.spark.sql.expressions.Window
     import graft.functions.{PolyHash, PolyHashing}
     val uh = Tables.events(spark, sfDir)
@@ -1074,11 +1067,11 @@ object Events {
     val ranked = uh
       .withColumn("rn", row_number().over(w).cast("long"))
       .withColumn("cnt", count(lit(1)).over(Window.partitionBy("event_type")))
-    // cached: the ≤ types·k sketch frame feeds the per-type stats AND
+    // sealed: the ≤ types·k sketch frame feeds the per-type stats AND
     // both sides of every pair vote — without it each consumer re-ranks
-    // the distinct-hash frame from the fact scan (memoized-intermediate
-    // pattern; at scale this is the persisted sketch table)
-    val sketch = ranked.filter(col("rn") <= KmvK).cache()
+    // the distinct-hash frame from the fact scan (at scale this is the
+    // persisted sketch table)
+    val sketch = sc.seal(ranked.filter(col("rn") <= KmvK))
     val stats = sketch.groupBy("event_type").agg(
       max("cnt").as("n_hashes"),
       count(lit(1)).as("k_used"),

@@ -161,7 +161,7 @@ object Graph {
     * graphs — and every triangle has exactly one wedge source, so the
     * count needs no /3 correction. Shuffles carry (id, id) pairs only.
     */
-  def trianglesOf(edges: DataFrame): DataFrame = {
+  def trianglesOf(edges: DataFrame): DataFrame = Scope.run { sc =>
     val deg = edges.select(col("id_a").as("u"))
       .union(edges.select(col("id_b").as("u")))
       .groupBy("u").agg(count(lit(1)).as("d"))
@@ -170,14 +170,13 @@ object Graph {
       .join(deg.select(col("u").as("id_b"), col("d").as("db")), "id_b")
     val fwd = col("da") < col("db") ||
       (col("da") === col("db") && col("id_a") < col("id_b"))
-    // cached: the oriented list is BOTH sides of the wedge self-join —
-    // uncached, the degree-join subtree under it executed twice (at scale
+    // cut: the oriented list is BOTH sides of the wedge self-join —
+    // uncut, the degree-join subtree under it executed twice (at scale
     // the oriented list is the materialized intermediate every triangle
     // pipeline persists before the wedge pass)
-    val oriented = ea.select(
+    val oriented = sc.cut(ea.select(
       when(fwd, col("id_a")).otherwise(col("id_b")).as("s"),
-      when(fwd, col("id_b")).otherwise(col("id_a")).as("t"))
-      .cache()
+      when(fwd, col("id_b")).otherwise(col("id_a")).as("t")))
     // x.t < y.t keeps the wedge endpoints in id order — the canonical
     // form the edge frame itself uses, so closure is a direct equi-join
     val wedges = oriented.as("x").join(oriented.as("y"),
@@ -293,12 +292,12 @@ object Graph {
     * plus EXACT integer in/out edge weights as integrity columns, keyed
     * by nation name.
     */
-  def pageRank(spark: SparkSession, sfDir: String): DataFrame = {
-    // cached: the AGGREGATED ≤|nations|² graph (a few KB however big the
+  def pageRank(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
+    // sealed: the AGGREGATED ≤|nations|² graph (a few KB however big the
     // fact table), consumed by the rank loop AND the in/out integrity
     // aggregates — the bounded loop invariant a rank computation is built
     // around, not a fixture-scale relation
-    val e = tradeEdges(spark, sfDir).cache()
+    val e = sc.seal(tradeEdges(spark, sfDir))
     val ranks = pageRankOf(e)
     val inw = e.groupBy(col("dst").as("id")).agg(sum("w").as("in_w"))
     val outTot = e.groupBy(col("src").as("id")).agg(sum("w").as("out_w"))

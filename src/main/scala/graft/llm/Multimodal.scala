@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Scope, Tables}
 
 /** X-MM (builder mandate): multimodal columns — image/audio/video as
   * opaque `binary` payloads with typed metadata, processed partition-wise.
@@ -375,15 +375,14 @@ object Multimodal {
         .select("doc_id")
     }
 
-  def mmPipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    val enr = digestsOf(Tables.documents(spark, sfDir)).cache()
-    val s1 = enr.join(mmExactKeepOf(enr), Seq("doc_id"), "left_semi").cache()
+  def mmPipeline(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
+    val enr = sc.cut(digestsOf(Tables.documents(spark, sfDir)))
+    val s1 = sc.cut(enr.join(mmExactKeepOf(enr), Seq("doc_id"), "left_semi"))
     // stage-2 membership IS the memoized survivor set ([[mmDedupSurvivors]]
     // = s1 minus the near-dup drops, so s1 semi-joined to it ≡ the old
     // s1 anti dropNear): the pointer-jump components run now happens once
     // per session, shared with x_mm_text_join, instead of once per query
-    val s2 = s1.join(mmDedupSurvivors(spark, sfDir), Seq("doc_id"), "left_semi")
-      .cache()
+    val s2 = sc.cut(s1.join(mmDedupSurvivors(spark, sfDir), Seq("doc_id"), "left_semi"))
     val s3 = s2.select(col("doc_id"),
       expr(s"(n_bytes + ${ResizeStride - 1}) div $ResizeStride").as("n_bytes"))
     def stat(df: DataFrame, label: String): DataFrame =

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.functions.RollingHash.rolling_hash
 
 /** X-PIPELINE: the end-to-end corpus-curation pipeline as ONE query —
@@ -19,11 +19,11 @@ import graft.functions.RollingHash.rolling_hash
   * (fp, doc_id)-ordered running token budget (x_token_budget) — so the
   * oracle composes the same mirrored fragments.
   *
-  * Scale shape: the corpus is scanned once into the cached feature
+  * Scale shape: the corpus is scanned once into the cut feature
   * frame; each subsequent stage is a key-only join/window over the
   * shrinking survivor set (text-hash group, banded-pair semi/anti
   * joins, per-source ranking window); the five stage rollups are
-  * metrics-sized aggregates off the cached frames.
+  * metrics-sized aggregates off the cut frames.
   */
 object Pipeline {
 
@@ -98,13 +98,13 @@ object Pipeline {
         .select("doc_id", "source")
     }
 
-  def stageCounts(spark: SparkSession, sfDir: String): DataFrame = {
+  def stageCounts(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     import org.apache.spark.sql.expressions.Window
-    val enr = enrichedOf(Tables.documents(spark, sfDir)).cache()
-    val s1 = qualityOf(enr).cache()
-    val s2 = s1.join(exactKeepOf(s1), Seq("doc_id"), "left_semi").cache()
+    val enr = sc.cut(enrichedOf(Tables.documents(spark, sfDir)))
+    val s1 = sc.cut(qualityOf(enr))
+    val s2 = sc.cut(s1.join(exactKeepOf(s1), Seq("doc_id"), "left_semi"))
     val dropNear = nearDropOf(spark, sfDir, s2.select("doc_id"))
-    val s3 = s2.join(dropNear, Seq("doc_id"), "left_anti").cache()
+    val s3 = sc.cut(s2.join(dropNear, Seq("doc_id"), "left_anti"))
     val w = Window.partitionBy("source").orderBy("fp", "doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val s4 = s3.withColumn("fp", rolling_hash(col("text")))

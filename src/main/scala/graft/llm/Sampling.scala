@@ -729,7 +729,7 @@ object Sampling {
     * to X-SAMPLE's uniform split — the op that picks "10k docs, long
     * ones proportionally more often" without a shuffle or a second pass.
     */
-  def prioritySample(spark: SparkSession, sfDir: String): DataFrame = {
+  def prioritySample(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     val prio = Tables.documents(spark, sfDir).select(
         col("doc_id"), col("source"), col("n_chars").cast("long").as("w"),
         (pmod(col("doc_id") * 2654435761L, lit(PriorityM)) + 1L).as("h"))
@@ -737,8 +737,8 @@ object Sampling {
         (col("w").cast("double") * PriorityM / col("h").cast("double")).as("p"))
     // top n+1: the (n+1)-th priority IS the HT threshold τ — when the
     // corpus has ≤ n docs everything is sampled and τ = 0 (ŵ = w exactly)
-    val top = prio.orderBy(col("p").desc, col("doc_id"))
-      .limit(PrioritySampleN + 1).cache()
+    val top = sc.cut(prio.orderBy(col("p").desc, col("doc_id"))
+      .limit(PrioritySampleN + 1))
     val tau =
       if (top.count() > PrioritySampleN)
         top.orderBy(col("p").asc, col("doc_id").desc).limit(1)

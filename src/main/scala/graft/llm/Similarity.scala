@@ -1265,9 +1265,12 @@ object Similarity {
   private val knnEdgesCache = new graft.Memo("sim.knn_edges")
 
   private[graft] def knnEdgeTables(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    // lazy cuts, filled by their first reader: the memo's own eager
+    // checkpoint would re-plan x_knngraph_stats, whose shape
+    // PLAN_MANIFEST.json pins
     lazy val built = knnEdgesOf(corpus(spark, sfDir))
-    (knnEdgesCache.getOrBuild(spark, s"$sfDir#out", cache = true)(built._2.localCheckpoint()),
-      knnEdgesCache.getOrBuild(spark, s"$sfDir#edges", cache = true)(built._3.localCheckpoint()))
+    (knnEdgesCache.getOrBuild(spark, s"$sfDir#out", cache = true)(Scope.run(_.cut(built._2))),
+      knnEdgesCache.getOrBuild(spark, s"$sfDir#edges", cache = true)(Scope.run(_.cut(built._3))))
   }
 
   private[graft] def knnEdgesOf(base: DataFrame): (DataFrame, DataFrame, DataFrame) = {
@@ -1298,16 +1301,16 @@ object Similarity {
     (cb, outE.select(col("src"), col("dst")), edges)
   }
 
-  def knngraphTopKOf(embeddings: DataFrame, stride: Int): DataFrame = {
+  def knngraphTopKOf(embeddings: DataFrame, stride: Int): DataFrame = Scope.run { sc =>
     val base = corpusOf(embeddings)
     // bounded-degree kNN graph from the LSH bucket index (see scaladoc).
-    // The edge list is MATERIALIZED once (eager localCheckpoint — the
-    // x_global_ids discipline): every beam round joins it, and without
-    // the cut each round's plan branch would re-run the whole
-    // bucket-collision build. The persisted artifact at scale IS this
-    // materialized (src, dst) table; ≤2D rows per node.
+    // The edge list is MATERIALIZED once (a sealed cut, freed with the
+    // returned frame): every beam round joins it, and without the cut
+    // each round's plan branch would re-run the whole bucket-collision
+    // build. The persisted artifact at scale IS this materialized
+    // (src, dst) table; ≤2D rows per node.
     val (_, _, edges0) = knnEdgesOf(base)
-    knngraphSearch(base, edges0.localCheckpoint(), stride)
+    knngraphSearch(base, sc.seal(edges0), stride)
   }
 
   /** The seeded greedy beam search over a materialized edge list — split
@@ -1384,7 +1387,7 @@ object Similarity {
     * the x_closeness discipline. The report itself is degree-histogram
     * sized; constants attach via one-row broadcast stat joins.
     */
-  def knngraphStats(spark: SparkSession, sfDir: String): DataFrame = {
+  def knngraphStats(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     val base = corpus(spark, sfDir)
     // the memoized persisted edge tables (shared with the search rung —
     // the collision build runs once per session, not once per report):
@@ -1409,11 +1412,10 @@ object Similarity {
       // lazy lineage cut per round: `reach` is referenced twice (union +
       // expansion join), and without the cut the plan tree doubles per
       // round and re-executes the shared subtree on both branches
-      reach = reach
+      reach = sc.cut(reach
         .unionAll(reach.join(edges, reach("cid") === edges("src"))
           .select(col("dst").as("cid")))
-        .distinct()
-        .localCheckpoint(false)
+        .distinct())
     }
     val reachN = reach.agg(count(lit(1)).as("entry_reach"))
     hist.crossJoin(broadcast(st)).crossJoin(broadcast(reachN))

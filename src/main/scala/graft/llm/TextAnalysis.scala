@@ -244,11 +244,11 @@ object TextAnalysis {
     * guards are exact INTEGER comparisons (n_predicted = 0, tp = 0), so
     * the one-division metrics are bit-deterministic in both engines.
     */
-  def evalMetrics(spark: SparkSession, sfDir: String): DataFrame = {
-    // cached: the confusion matrix (classes²-sized) feeds THREE subtrees
-    // below (actual, predicted, tp) — uncached, each re-ran the whole
+  def evalMetrics(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
+    // cut: the confusion matrix (classes²-sized) feeds THREE subtrees
+    // below (actual, predicted, tp) — uncut, each re-ran the whole
     // corpus prediction pass, three scans for a ≤36-row frame
-    val conf = langId(spark, sfDir).cache()
+    val conf = sc.cut(langId(spark, sfDir))
     val actual = conf.groupBy("lang").agg(sum("n").as("n_actual"))
     val predicted = conf.groupBy("predicted")
       .agg(sum("n").as("n_predicted"))
@@ -430,16 +430,15 @@ object TextAnalysis {
     * candidate shortlist (the X-BM25/X-HYBRID-RRF rankers) exactly like
     * production ColBERT re-ranks a first-stage retrieval.
     */
-  def maxsim(spark: SparkSession, sfDir: String): DataFrame = {
-    // cached: the hashed distinct (doc, token) table feeds THREE subtrees
-    // (query frame, scoring join, per-doc sizes) — uncached, each re-ran
+  def maxsim(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
+    // cut: the hashed distinct (doc, token) table feeds THREE subtrees
+    // (query frame, scoring join, per-doc sizes) — uncut, each re-ran
     // the corpus tokenize + distinct (at scale this is the persisted
     // token-embedding side table, built once)
-    val dh = Tables.documents(spark, sfDir)
+    val dh = sc.cut(Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .distinct()
-      .withColumn("h", graft.functions.PolyHash.poly_hash(col("tok"), 131))
-      .cache()
+      .withColumn("h", graft.functions.PolyHash.poly_hash(col("tok"), 131)))
     val qt = dh.filter(col("doc_id") === 0L)
       .select(col("tok").as("qtok"), col("h").as("hq"))
       .orderBy("qtok").limit(MaxSimQTokens)
@@ -843,7 +842,7 @@ object TextAnalysis {
     * sample stride keeps the checked output small while the model stays
     * corpus-wide.
     */
-  def ngramLm(spark: SparkSession, sfDir: String): DataFrame = {
+  def ngramLm(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     val toks = Tables.documents(spark, sfDir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -852,11 +851,11 @@ object TextAnalysis {
           "transform(sequence(0, size(toks)-2), i -> struct(toks[i] AS w1, toks[i+1] AS w2))"))
           .as(Seq("i", "bg")))
       .select(col("doc_id"), col("i"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    // cached: the bigram model is read by BOTH the marginal fold (c1)
-    // and the scoring join — uncached, the full-corpus tokenize+explode
+    // cut: the bigram model is read by BOTH the marginal fold (c1)
+    // and the scoring join — uncut, the full-corpus tokenize+explode
     // under it ran once per consumer (three times in one plan, since c1
     // nests c2)
-    val c2 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12")).cache()
+    val c2 = sc.cut(bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val c1 = c2.groupBy("w1").agg(sum("c12").as("c1"))
     bi.filter(col("doc_id") % LmSampleStride === 0)
       .join(c2, Seq("w1", "w2"))
@@ -1051,14 +1050,13 @@ object TextAnalysis {
     * flags. Checked per exact top-10 token: exact count, sketch
     * estimate, and the est ≥ true invariant.
     */
-  def cmsEstimates(spark: SparkSession, sfDir: String): DataFrame = {
+  def cmsEstimates(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     import graft.functions.CountMin
-    // cached: the sketch aggregate and the exact top-10 both consume the
+    // cut: the sketch aggregate and the exact top-10 both consume the
     // token stream — one tokenize+explode pass instead of two (at scale
     // the equivalent is a materialized token table both aggregates read)
-    val toks = Tables.documents(spark, sfDir)
-      .select(explode(tokens(col("text"))).as("token"))
-      .cache()
+    val toks = sc.cut(Tables.documents(spark, sfDir)
+      .select(explode(tokens(col("text"))).as("token")))
     def cell(r: Int): Column =
       pmod(graft.functions.PolyHash.poly_hash(col("token"), CountMin.Bases(r)),
         lit(CountMin.Width.toLong)).cast("int")
@@ -1107,7 +1105,7 @@ object TextAnalysis {
     * TakeOrdered 30. Shuffles carry (doc, token) and (pair) keys only —
     * never document text.
     */
-  def cooccur(spark: SparkSession, sfDir: String): DataFrame = {
+  def cooccur(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     val docs = Tables.documents(spark, sfDir)
     val tok = docs.select(col("doc_id"),
       explode(array_distinct(tokens(col("text")))).as("t"))
@@ -1116,14 +1114,11 @@ object TextAnalysis {
     val gate = dfreq.crossJoin(broadcast(n))
       .filter(col("df") * CooccurMinDfTimes4 >= col("n_docs"))
       .select(col("t"), col("df"))
-    // LAZILY cached: the self-join below consumes `kept` on BOTH sides,
-    // and without a shared relation each side re-tokenizes and re-gates
-    // the whole corpus (the double-scan Dedup's signature cache exists to
-    // avoid). persist — not an eager localCheckpoint — so constructing
-    // the DataFrame stays job-free and repeated calls share ONE cache
-    // entry (CacheManager dedups by canonicalized plan, the same license
-    // as Dedup's memoized pair table).
-    val kept = tok.join(broadcast(gate), "t").persist()
+    // cut: the self-join below consumes `kept` on BOTH sides, and
+    // without a shared relation each side re-tokenizes and re-gates the
+    // whole corpus (the double-scan Dedup's signature cache exists to
+    // avoid)
+    val kept = sc.cut(tok.join(broadcast(gate), "t"))
     val pairs = kept.select(col("doc_id"), col("t").as("ta"), col("df").as("c_x"))
       .join(kept.select(col("doc_id"), col("t").as("tb"), col("df").as("c_y")), "doc_id")
       .filter(col("ta") < col("tb"))

@@ -770,7 +770,7 @@ object EtlQueries {
     // *insert* semantics (main.py:81-91); partitioned layout fidelity is
     // covered by Q-PRUNE. Day-partitioning a one-row-per-day table would
     // mean one file per row — wrong at any scale.
-    val rates = RatesSource.rates(spark, sfDir).coalesce(1).cache()
+    val rates = RatesSource.rates(spark, sfDir).coalesce(1)
     Sink.append(rates, path)
     val n1 = spark.read.parquet(path).count()
     Sink.append(rates, path)
@@ -792,7 +792,7 @@ object EtlQueries {
   def qIdemKeyed(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = Scratch.workDir("idem_keyed_")
     val path = dir.resolve("exchange_rate").toString
-    val rates = RatesSource.rates(spark, sfDir).coalesce(1).cache()
+    val rates = RatesSource.rates(spark, sfDir).coalesce(1)
     Sink.appendKeyed(rates, path, Seq("date", "currencies"))
     val n1 = spark.read.parquet(path).count()
     Sink.appendKeyed(rates, path, Seq("date", "currencies"))

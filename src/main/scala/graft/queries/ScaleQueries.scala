@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Scope, Tables}
 import graft.etl.{Scratch, Sink}
 import graft.llm.Similarity
 
@@ -339,20 +339,18 @@ object ScaleQueries {
     * the sketch travels as a scalar-subquery broadcast; collecting the
     * ~10 KB sketch to the driver here is the same data movement.
     */
-  def bloomJoin(spark: SparkSession, sfDir: String): DataFrame = {
+  def bloomJoin(spark: SparkSession, sfDir: String): DataFrame = Scope.run { sc =>
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graftx.ColumnBridge
 
     val ev = Tables.events(spark, sfDir)
-    // cached: the sketch build (an action) and the exact join both read
-    // the dim — without the cache the scan+distinct would run twice
-    // (plan-keyed, so repeated invocations share one entry)
-    val dim = ev
+    // cut: the sketch build (an action) and the exact join both read
+    // the dim — without the cut the scan+distinct would run twice
+    val dim = sc.cut(ev
       .filter(col("event_type") === "purchase" &&
         (col("value").cast(DecimalType(18, 2)) * 100).cast("long") % 17 === 0)
-      .select("user_id").distinct()
-      .cache()
+      .select("user_id").distinct())
 
     val bloomAgg = ColumnBridge.column(
       new BloomFilterAggregate(

@@ -7,9 +7,10 @@
  * extension libraries use). The session clone behind `graft.Session` is
  * private[sql] for the same reason. `ReuseBridge` reaches what a memo, a
  * call scope or a finished stream holds or releases: a cache entry's
- * column buffers, a lazy checkpoint's fill job, the state store's loaded
- * providers and a session's streaming listener bus (the last two private
- * fields, read by reflection). No other internals are touched.
+ * column buffers, a lazy checkpoint's fill job and release, the state
+ * store's loaded providers and a session's streaming listener bus (the
+ * last two private fields, read by reflection). No other internals are
+ * touched.
  */
 package org.apache.spark.sql.graftx
 
@@ -50,13 +51,20 @@ object ColumnBridge {
         case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
         case _ => None
       }
+
+  /** The RDDs `df`'s analyzed plan reads as `LogicalRDD` leaves (its
+    * lineage cuts among them), in subqueries too.
+    */
+  def leafRdds(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
+      .collectWithSubqueries { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
 }
 
 /** What a memoized artifact or a call scope holds and what a finished
   * stream leaves behind, reached where the public API stops: the
-  * lineage-cut artifact with its measured size, the fill of a lazy cut,
-  * the data behind a cache entry, the state-store providers of one query
-  * run and a session's streaming listener bus.
+  * lineage-cut artifact with its measured size, the fill and the release
+  * of a lazy cut, the data behind a cache entry, the state-store providers
+  * of one query run and a session's streaming listener bus.
   */
 object ReuseBridge {
   import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -79,14 +87,52 @@ object ReuseBridge {
     val spark = df.sparkSession
     df.localCheckpoint(eager = true).queryExecution.analyzed match {
       case l: LogicalRDD =>
-        val bytes = storedBytes(spark, l.rdd.id)
-        val sized = LogicalRDD(l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
-          l.isStreaming, l.stream)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          Some(Statistics(sizeInBytes = BigInt(bytes max 1L))), None)
-        (ColumnBridge.ofRows(spark, sized), l.rdd.id)
+        (ColumnBridge.ofRows(spark, relation(spark, l, l.outputPartitioning)), l.rdd.id)
       case other => throw new IllegalStateException(s"localCheckpoint gave ${other.nodeName}")
     }
   }
+
+  /** The filled lazy cut `cut` of `df` as a frame that plans like a filled
+    * cache entry: its statistics are the stored size, and it keeps the
+    * partitioning of `df`'s final plan. Spark's own frame for a checkpoint
+    * taken under adaptive execution reports the size the optimizer
+    * estimated and no partitioning (the adaptive root's is unknown before
+    * it runs), so a reader would shuffle again by the keys the cut is
+    * already split by, and join it as if it were still large.
+    */
+  def settled(df: DataFrame, cut: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def first(p: Partitioning): Partitioning = p match {
+      case PartitioningCollection(ps) => first(ps.head)
+      case _ => p
+    }
+    val l = cut.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val partitioning = Some(df.queryExecution.executedPlan)
+      .collect { case a: AdaptiveSparkPlanExec => first(a.executedPlan.outputPartitioning) }
+      .collect { case p: Expression with Partitioning
+          if p.numPartitions == l.rdd.getNumPartitions &&
+            p.references.subsetOf(AttributeSet(l.output)) => p }
+      .getOrElse(l.outputPartitioning)
+    ColumnBridge.ofRows(df.sparkSession, relation(df.sparkSession, l, partitioning))
+  }
+
+  /** `l`'s RDD as a relation of `spark` with `partitioning`, sized as
+    * the bytes the block manager holds for it.
+    */
+  private def relation(spark: SparkSession, l: LogicalRDD,
+      partitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning): LogicalRDD =
+    LogicalRDD(l.output, l.rdd, partitioning, l.outputOrdering, l.isStreaming, l.stream)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Some(Statistics(sizeInBytes = BigInt(storedBytes(spark, l.rdd.id) max 1L))), None)
+
+  /** Drop `rdd`'s blocks and forget it as persistent, as Spark's context
+    * cleaner does for an RDD nothing references any more. `RDD.unpersist`
+    * would do the same, but warns for every lineage cut it releases.
+    */
+  def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** Fill the lazily checkpointed `cut` now: the job an eager
     * `localCheckpoint` runs (every partition of the checkpoint RDD

@@ -5667,6 +5667,25 @@ class GraftSpec extends AnyFunSuite {
     assert(Memo.entries(s).exists(_.hits.get > 0))
   }
 
+  /** The registry queries whose bodies cut what their frame reads
+    * instead of caching it by plan for the session.
+    */
+  val ScopedQueries = Seq("q_idem", "q_idem_keyed", "x_priority_sample", "x_conformal",
+    "x_theilsen", "x_survival", "x_bloom_join", "x_cms", "x_ngram_lm", "x_sim_knngraph",
+    "x_knngraph_stats", "x_pagerank", "x_cooccur", "x_triangles", "x_maxsim", "x_kmv",
+    "x_dup_spans", "x_basket", "x_mm_pipeline", "x_bloom_fpr", "x_eval_metrics",
+    "x_lsh_recall", "x_pipeline", "x_dau", "x_rank_metrics")
+
+  test("reuse: the scoped queries leave no cache entry but stored memo artifacts") {
+    val s = spark.newSession()
+    val before = SpecBridge.cacheEntries(s)
+    ScopedQueries.foreach(q => assert(SparkEntry.queries(q)(s, sf).count() > 0, q))
+    val stored = Memo.stored(s).flatMap(a => SpecBridge.cacheEntry(a.df))
+    val added = SpecBridge.cacheEntries(s).filterNot(e => before.exists(_ eq e))
+    assert(added.forall(e => stored.exists(_ eq e)),
+      s"${added.count(e => !stored.exists(_ eq e))} cache entries are no memo artifact")
+  }
+
   test("drain: a finished drain unloads its state stores; a stream running beside it keeps its own") {
     import scala.jdk.CollectionConverters._
     val s = spark.newSession()

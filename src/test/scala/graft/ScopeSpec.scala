@@ -6,8 +6,8 @@ import org.apache.spark.sql.graftx.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Call-scoped reuse: every cache and lineage cut a call takes is released
-  * when the call returns or throws, and only the RDD behind the frame a
-  * call returns outlives it.
+  * when the call returns or throws, except the cuts the frame it returns
+  * reads, which outlive the call and go with the frame.
   */
 class ScopeSpec extends AnyFunSuite {
 
@@ -118,5 +118,43 @@ class ScopeSpec extends AnyFunSuite {
       throw new IllegalStateException("mid-run")
     })
     assert(persisted().keySet === start.keySet)
+  }
+
+  test("a returned lazy frame keeps the cuts it reads and no other") {
+    val start = persisted().keySet
+    val out = Scope.run { sc =>
+      val mid = sc.seal(spark.range(0, 100).toDF("id"))
+      val evens = sc.seal(mid.filter(col("id") % 2 === 0))
+      val fives = sc.cut(spark.range(0, 100).toDF("id").filter(col("id") % 5 === 0))
+      evens.join(fives, "id")
+    }
+    val read = ColumnBridge.leafRdds(out).map(_.id).toSet
+    assert(read.size === 2)
+    assert(persisted().keySet -- start === read)
+    assert(start.subsetOf(persisted().keySet))
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq === (0L until 100L by 10L))
+    read.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist(blocking = true))
+  }
+
+  test("no code outside Memo and Scope caches, persists, checkpoints or unpersists a frame") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val raw = """\.cache\(\)|\.persist\(|localCheckpoint\(|unpersist\(""".r
+    def comment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }
+    val sources: Seq[Path] = Files.walk(Paths.get("src/main/scala/graft")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(p => Set("Memo.scala", "Scope.scala")(p.getFileName.toString))
+      .toSeq
+    assert(sources.size > 40)
+    val hits = sources.flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if !comment(line) && raw.findFirstIn(line).isDefined =>
+          s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("raw reuse outside Memo and Scope:\n", "\n", ""))
   }
 }

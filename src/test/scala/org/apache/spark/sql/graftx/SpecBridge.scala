@@ -7,9 +7,9 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBu
 import org.apache.spark.storage.BroadcastBlockId
 
 /** What the reuse and sink specs inspect in this JVM: the broadcast
-  * join relations its block manager holds, the streaming listener buses
-  * of a SparkContext, a sink table's commit log and the file index a
-  * scan reads.
+  * join relations its block manager holds, the cache manager's entries,
+  * the streaming listener buses of a SparkContext, a sink table's commit
+  * log and the file index a scan reads.
   */
 object SpecBridge {
 
@@ -31,6 +31,24 @@ object SpecBridge {
       n.startsWith("org.apache.spark.sql.execution.joins.") && n.endsWith("HashedRelation")
     case _ => false
   }
+
+  private lazy val cachedDataMethod = {
+    val m = classOf[org.apache.spark.sql.execution.CacheManager].getDeclaredMethod("cachedData")
+    m.setAccessible(true)
+    m
+  }
+
+  /** Every entry of the cache manager `spark` shares with its context's
+    * other sessions, in order.
+    */
+  def cacheEntries(spark: SparkSession): Seq[AnyRef] =
+    cachedDataMethod.invoke(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager).asInstanceOf[Seq[AnyRef]]
+
+  /** The cache manager's entry for `df`'s plan, if any. */
+  def cacheEntry(df: org.apache.spark.sql.DataFrame): Option[AnyRef] =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState
+      .cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
 
   /** Streaming listener buses registered on `spark`'s SparkContext. */
   def streamBuses(spark: SparkSession): Int =
